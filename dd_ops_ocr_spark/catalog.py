@@ -41,6 +41,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from dd_ops_ocr_spark.session import local_frame
+
 
 def _norm_table_dir(table_dir: str) -> str:
     """Normalize a table location to a local POSIX path, or refuse loudly.
@@ -636,7 +638,8 @@ def _mask_deletes(spark: SparkSession, table_dir: str, m: dict,
         )
     if eqs:
         seq_map = m.get("file_seq", {})
-        files_df = spark.createDataFrame(
+        files_df = local_frame(
+            spark,
             [(k, int(v)) for k, v in seq_map.items()],
             "__cat_file string, __cat_seq long",
         )
@@ -665,7 +668,7 @@ def _empty_df(spark: SparkSession, manifest: dict) -> DataFrame:
         raise FileNotFoundError(
             "snapshot has no data files and no recorded schema"
         )
-    return spark.createDataFrame([], StructType.fromJson(json.loads(schema_json)))
+    return local_frame(spark, [], StructType.fromJson(json.loads(schema_json)))
 
 
 def read_aux(spark: SparkSession, table_dir: str, name: str,

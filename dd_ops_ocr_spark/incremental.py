@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dd_ops_ocr_spark import catalog
+from dd_ops_ocr_spark.session import local_frame
 
 
 def extract_incremental(
@@ -147,9 +148,7 @@ def probe_result_dirs(spark: SparkSession, candidate_dirs) -> DataFrame:
             )
             break
     if not frames:
-        return spark.createDataFrame(
-            [], "doc_id string, source_dir string"
-        )
+        return local_frame(spark, [], "doc_id string, source_dir string")
     allp = frames[0]
     for f in frames[1:]:
         allp = allp.unionByName(f)

@@ -4,7 +4,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def build_spark(
@@ -50,3 +51,29 @@ def build_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | StructType
+) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` for small in-process data,
+    planned as a ``LocalTableScan``: the rows cross to the JVM once as an
+    Arrow table and no Python worker starts.
+
+    A list handed to ``createDataFrame`` plans as a ``Scan ExistingRDD``
+    over a pickled ``PythonRDD`` instead, so every partition starts a
+    Python worker just to unpickle the rows; an empty pandas frame skips
+    the Arrow path and lands there too. An Arrow table takes the Arrow
+    path whatever ``spark.sql.execution.arrow.pyspark.enabled`` says."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [[] for _ in schema.fields]
+    table = pa.table(
+        [pa.array(c, f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

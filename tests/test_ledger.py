@@ -157,7 +157,7 @@ def test_observed_lineage_single_pass_and_docs_invariant(spark, spans):
     write pass itself. Two claims pinned here: (1) the extraction runs
     ONCE per bucket (the old snapshot path ran it twice — once for
     .agg().collect(), once for the write); (2) the observe-compatible
-    docs metric (rows with order == 0) equals countDistinct(doc_id)."""
+    docs metric (rows with order == 1) equals countDistinct(doc_id)."""
     from dd_ops_ocr_spark import pipeline
     from pyspark.sql import functions as F
 
@@ -215,3 +215,77 @@ def test_committed_buckets_survives_torn_first_marker(spark, tmp_path):
     from dd_ops_ocr_spark.ledger import committed_buckets
 
     assert committed_buckets(spark, str(out)) == set()
+
+
+@pytest.mark.parametrize("salted", [False, True],
+                         ids=["extract", "extract_salted"])
+def test_one_pass_markers_match_recompute_across_resume(spark, spans, salted):
+    """run_one_pass's narrow commit aggregate (docs = rows with
+    order == 1, no doc_id read) must equal a countDistinct(doc_id)
+    recompute per bucket, on both extractors. A fail_after crash then a
+    resume makes the commit aggregate run over a data dir that already
+    holds committed buckets: its isin(todo) filter must keep them out of
+    the resumed run's markers."""
+    from pyspark.sql import functions as F
+
+    from dd_ops_ocr_spark import pipeline
+    from dd_ops_ocr_spark.plans.salting import extract_salted
+
+    extractor = extract_salted if salted else pipeline.extract
+    metrics = ["docs", "spans_emitted", "text_blocks", "media_blocks"]
+    d = tempfile.mkdtemp(prefix="ledger_recompute_")
+    try:
+        with pytest.raises(RuntimeError, match="injected failure"):
+            ledger.run_one_pass(spark, spans, d, "run_a", n_buckets=N_BUCKETS,
+                                fail_after=3, extractor=extractor)
+        s = ledger.run_one_pass(spark, spans, d, "run_b",
+                                n_buckets=N_BUCKETS, extractor=extractor)
+        assert s["buckets_resumed_from"] == 3
+
+        led = ledger.read_ledger(spark, d).toPandas()
+        assert sorted(led.bucket) == list(range(N_BUCKETS))
+        assert set(led[led.committed_at_run == "run_a"].bucket) == {0, 1, 2}
+        got = led.set_index("bucket")[metrics].sort_index()
+        # independent of the ledger's expressions: docs via a distinct
+        want = (
+            ledger.read_output(spark, d).groupBy("bucket")
+            .agg(F.countDistinct("doc_id").alias("docs"),
+                 F.count("*").alias("spans_emitted"),
+                 F.count(F.when(F.col("kind") == "text", 1)).alias("text_blocks"),
+                 F.count(F.when(F.col("kind") != "text", 1)).alias("media_blocks"))
+            .toPandas().set_index("bucket")
+            .reindex(range(N_BUCKETS), fill_value=0)[metrics]
+        )
+        assert (got.values == want.values).all(), (got, want)
+        assert got["docs"].sum() > 0 and got["media_blocks"].sum() > 0
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.parametrize("runner", ["run_one_pass", "run_with_ledger"])
+def test_marker_frames_plan_without_python_rdd(spark, spans, runner):
+    """The commit path builds its marker frame in-process as an Arrow
+    table (LocalTableScan). A list-built frame would plan as
+    ``Scan ExistingRDD`` over a pickled PythonRDD and start Python
+    workers just to unpickle the bucket ids; no SQL execution that
+    touches the ledger may plan one."""
+    sql = spark._jsparkSession.sharedState().statusStore()
+
+    def plans():
+        execs = sql.executionsList()
+        return {execs.apply(i).executionId():
+                execs.apply(i).physicalPlanDescription()
+                for i in range(execs.size())}
+
+    before = plans()
+    d = tempfile.mkdtemp(prefix="ledger_plan_")
+    try:
+        getattr(ledger, runner)(spark, spans, d, "run_p", n_buckets=4)
+        ledger_plans = [p for k, p in plans().items()
+                        if k not in before and f"{d}/ledger" in p]
+        assert ledger_plans
+        assert any("LocalTableScan" in p for p in ledger_plans)
+        for p in ledger_plans:
+            assert "ExistingRDD" not in p and "PythonRDD" not in p, p
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
