@@ -4,9 +4,9 @@ The whole per-document reference dataflow (render -> judge -> rotate ->
 split -> OCR -> integrate; reference src/main_pipeline.py:330-441) becomes
 ONE shuffle-free DataFrame program: the input table carries one row per
 document, so every per-doc computation is row-local and runs inside a
-single ``mapInArrow`` (default) or ``mapInPandas`` pass. No groupBy, no
-join, no shuffle — partition parallelism is the executor's job (reference
-X2 asyncio fan-out, step2/04:94-118).
+single ``mapInArrow`` pass. No groupBy, no join, no shuffle — partition
+parallelism is the executor's job (reference X2 asyncio fan-out,
+step2/04:94-118).
 
 Scale notes (100 TB design):
   * one row = one doc => doc never straddles partitions; ``maxPartitionBytes``
@@ -14,13 +14,12 @@ Scale notes (100 TB design):
   * skewed multi-page docs (north_rule) are handled by the hybrid salted
     path in ``dd_ops_ocr_spark.plans.salting`` (small docs stay here,
     shuffle-free; tail docs get bounded-size salt buckets).
-  * all kernels are Arrow-compute/numpy (default) or pandas over flat
-    arrays — zero per-row Python in the hot path (input_hint mandate).
+  * the kernel is Arrow compute + numpy over flat arrays — zero per-row
+    Python in the hot path (input_hint mandate).
 
-Two independent kernel implementations of the same spec exist —
-``_run_arrow`` (Arrow compute + numpy, the fast default) and
-``extract_flat_pandas`` (pandas, also used by the exploded path) — and
-both are oracle- and property-tested.
+One kernel implements the spec: ``_run_arrow``. Its authority is the
+pure-Python ``oracle.extract_doc`` plus the DuckDB flagship oracle
+(``fixtures.flagship_oracle_sql``); it is oracle- and property-tested.
 
 The whole-batch vectorized-UDF design follows "Accelerating Python UDFs
 in Vectorized Query Execution" (CIDR 2022, PAPERS.md): keep the
@@ -30,11 +29,9 @@ columnar kernels, never per row.
 
 from __future__ import annotations
 
-from itertools import chain
-from typing import Iterator
+from functools import partial
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
@@ -52,198 +49,26 @@ from dd_ops_ocr_spark.schema import (
     TWOUP_MIN_SIDE,
 )
 
-_EMPTY_OUT = pd.DataFrame(
-    {
-        "doc_id": pd.Series(dtype=object),
-        "kind": pd.Series(dtype=object),
-        "text": pd.Series(dtype=object),
-        "media_ref": pd.Series(dtype=object),
-        "order": pd.Series(dtype="int32"),
-    }
-)
-
-
-def extract_flat_pandas(flat: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized extraction over a flat span batch.
-
-    ``flat`` columns: doc_id(str), kind(str), text(str|None),
-    media_ref(str|None), offset(int). Every doc present must be complete
-    (all its spans in this batch). Returns OUT_SPANS_DDL columns.
-
-    Implements the same spec as ``oracle.extract_doc`` (see that module's
-    docstring for the step-by-step semantics and reference citations), but
-    as whole-batch numpy/pandas operations. (The salted/bounded plans do
-    NOT call this — they carry their own kernels in plans/; this is the
-    independent pandas triangulation of the Arrow kernel, full spec only.)
-    """
-    if len(flat) == 0:
-        return _EMPTY_OUT.copy()
-
-    off = flat["offset"].to_numpy(dtype=np.int64)
-    page = off // STRIDE
-    rem = off % STRIDE
-    y = rem // PAGE_W
-    x = rem % PAGE_W
-
-    kind = flat["kind"].to_numpy(dtype=object)
-    is_text = kind == "text"
-
-    # C14 whitespace normalization (vectorized pandas str ops).
-    norm = (
-        flat["text"]
-        .fillna("")
-        .str.replace(r"\n{2,}", "\n", regex=True)
-        .str.strip()
-        .to_numpy(dtype=object)
-    )
-
-    keep = ~is_text | (norm != "")
-    df = pd.DataFrame(
-        {
-            "doc_id": flat["doc_id"].to_numpy(dtype=object)[keep],
-            "kind": kind[keep],
-            "text": np.where(is_text[keep], norm[keep], None),
-            "media_ref": flat["media_ref"].to_numpy(dtype=object)[keep],
-            "page": page[keep],
-            "y": y[keep],
-            "x": x[keep],
-        }
-    )
-    if len(df) == 0:
-        return _EMPTY_OUT.copy()
-
-    # Boilerplate strip: normalized text repeating in the header/footer zone
-    # on >= ceil(BOILERPLATE_FRAC * n_pages) pages of a >=3-page doc.
-    # Runs BEFORE two-up detection (spec order) so every plan sees
-    # identical layout inputs.
-    yv = df["y"].to_numpy()
-    zone = np.where(
-        yv < HEADER_ZONE, 1, np.where(yv >= PAGE_H - FOOTER_ZONE, 2, 0)
-    )
-    zone = np.where(df["kind"].to_numpy() == "text", zone, 0)
-    df["_zone"] = zone
-
-    n_pages = (
-        df[["doc_id", "page"]]
-        .drop_duplicates()
-        .groupby("doc_id", sort=False)
-        .size()
-    )
-    doc_n_pages = df["doc_id"].map(n_pages).to_numpy()
-    cand = df[df["_zone"] > 0]
-    if len(cand):
-        zc = (
-            cand.groupby(["doc_id", "_zone", "text"], sort=False)["page"]
-            .nunique()
-            .rename("zpages")
-        )
-        zpages = (
-            df[["doc_id", "_zone", "text"]]
-            .join(zc, on=["doc_id", "_zone", "text"])["zpages"]
-            .fillna(0)
-            .to_numpy()
-        )
-        thresh = np.ceil(BOILERPLATE_FRAC * doc_n_pages)
-        boiler = (
-            (df["_zone"].to_numpy() > 0)
-            & (doc_n_pages >= MIN_PAGES_BOILERPLATE)
-            & (zpages >= thresh)
-        )
-        df = df[~boiler]
-    df = df.drop(columns=["_zone"])
-    if len(df) == 0:
-        return _EMPTY_OUT.copy()
-
-    # Two-up detection per (doc, page): empty gutter + >=N spans per side,
-    # computed on the spans that survive the strip.
-    xv = df["x"].to_numpy()
-    df["_left"] = (xv < CX - GUTTER_HALF).astype(np.int32)
-    df["_right"] = (xv >= CX + GUTTER_HALF).astype(np.int32)
-    df["_gutter"] = ((xv >= CX - GUTTER_HALF) & (xv < CX + GUTTER_HALF)).astype(
-        np.int32
-    )
-    gp = df.groupby(["doc_id", "page"], sort=False)
-    two_up = (
-        (gp["_gutter"].transform("sum") == 0)
-        & (gp["_left"].transform("sum") >= TWOUP_MIN_SIDE)
-        & (gp["_right"].transform("sum") >= TWOUP_MIN_SIDE)
-    ).to_numpy()
-    xv = df["x"].to_numpy()
-    df["side"] = np.where(two_up & (xv >= CX), 1, 0).astype(np.int32)
-    df = df.drop(columns=["_left", "_right", "_gutter"])
-
-    # Reading-order sort within doc; order = 1-based rank.
-    df = df.sort_values(
-        ["doc_id", "page", "side", "y", "x"], kind="mergesort", ignore_index=True
-    )
-    order = df.groupby("doc_id", sort=False).cumcount().to_numpy() + 1
-    return pd.DataFrame(
-        {
-            "doc_id": df["doc_id"],
-            "kind": df["kind"],
-            "text": df["text"],
-            "media_ref": df["media_ref"],
-            "order": order.astype("int32"),
-        }
-    )
-
-
-def flatten_nested_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """(doc_id, spans:list[dict]) batch -> flat span DataFrame."""
-    spans_lists = pdf["spans"].tolist()
-    counts = np.fromiter((len(s) for s in spans_lists), dtype=np.int64,
-                         count=len(spans_lists))
-    doc_rep = np.repeat(pdf["doc_id"].to_numpy(dtype=object), counts)
-    all_spans = list(chain.from_iterable(spans_lists))
-    if not all_spans:
-        return pd.DataFrame(
-            {"doc_id": [], "kind": [], "text": [], "media_ref": [], "offset": []}
-        )
-    sdf = pd.DataFrame(all_spans)
-    sdf.insert(0, "doc_id", doc_rep)
-    return sdf
-
-
 OUT_SPANS_PAGE_DDL = OUT_SPANS_DDL + ", page int"
 
 
-def extract(
-    df: DataFrame, use_arrow: bool = True, include_page: bool = False
-) -> DataFrame:
+def extract(df: DataFrame, include_page: bool = False) -> DataFrame:
     """Nested (doc_id, spans) -> exploded reading-order span sequence.
 
     Shuffle-free: each input row is a whole doc, so batches are always
-    doc-complete and the kernel runs per Arrow batch.
+    doc-complete and the kernel runs per Arrow batch. The array<struct>
+    column is flattened with zero-copy Arrow ops, never one Python dict
+    per span.
 
-    ``use_arrow=True`` (default) flattens the array<struct> column with
-    zero-copy Arrow ops (mapInArrow) instead of materializing one Python
-    dict per span — same kernel, ~an order of magnitude less flattening
-    overhead at scale. ``use_arrow=False`` keeps the mapInPandas path
-    (both are oracle-tested).
+    ``include_page=True`` appends the span's page index: downstream
+    integration (operators/integrate.py) groups the fold by page; the
+    graded schema stays the 5-column default.
     """
     if include_page:
-        if not use_arrow:
-            # the pandas kernel has no page-carrying variant; silently
-            # substituting the Arrow kernel would defeat a caller's
-            # explicit request for the independent implementation
-            raise ValueError(
-                "include_page=True is only implemented by the Arrow "
-                "kernel; call with use_arrow=True"
-            )
-        # downstream integration (operators/integrate.py) groups the fold
-        # by page; the graded schema stays the 5-column default.
-        def run_pg(batches):
-            yield from _run_arrow(batches, include_page=True)
-
-        return df.mapInArrow(run_pg, schema=OUT_SPANS_PAGE_DDL)
-    if use_arrow:
-        return df.mapInArrow(_run_arrow, schema=OUT_SPANS_DDL)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield extract_flat_pandas(flatten_nested_batch(pdf))
-
-    return df.mapInPandas(run, schema=OUT_SPANS_DDL)
+        return df.mapInArrow(
+            partial(_run_arrow, include_page=True), schema=OUT_SPANS_PAGE_DDL
+        )
+    return df.mapInArrow(_run_arrow, schema=OUT_SPANS_DDL)
 
 
 def _run_arrow(batches, include_page: bool = False):
@@ -430,21 +255,6 @@ def _run_arrow(batches, include_page: bool = False):
         yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
 
-def extract_exploded(flat_df: DataFrame) -> DataFrame:
-    """Same extraction over a pre-exploded span table
-    (doc_id, kind, text, media_ref, offset) — one shuffle to co-locate docs.
-
-    Use when the source is already flat (e.g. a landing table of spans);
-    the nested path (``extract``) is preferred at scale because it needs
-    no shuffle at all.
-    """
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return extract_flat_pandas(pdf)
-
-    return flat_df.groupBy("doc_id").applyInPandas(run, schema=OUT_SPANS_DDL)
-
-
 def metrics(out_df: DataFrame) -> DataFrame:
     """Per-doc extraction metrics (north_rule lineage columns):
     spans_emitted + blocks_classified from the output, cheap JVM-side agg."""
@@ -454,19 +264,4 @@ def metrics(out_df: DataFrame) -> DataFrame:
         F.count("*").alias("spans_emitted"),
         F.sum((F.col("kind") == "text").cast("long")).alias("text_blocks"),
         F.sum((F.col("kind") != "text").cast("long")).alias("media_blocks"),
-    )
-
-
-def expected_output_pandas(documents: pd.DataFrame) -> pd.DataFrame:
-    """Oracle expected output for a documents batch, flat rows
-    (doc_id, kind, text, media_ref, order). Test-side helper."""
-    from dd_ops_ocr_spark import corpus, oracle
-
-    rows: list[tuple] = []
-    for doc_key, text in zip(documents["doc_id"], documents["text"]):
-        did = corpus.doc_id_str(int(doc_key))
-        for s in oracle.extract_doc(corpus.doc_spans(int(doc_key), text or "")):
-            rows.append((did, s["kind"], s["text"], s["media_ref"], s["order"]))
-    return pd.DataFrame(
-        rows, columns=["doc_id", "kind", "text", "media_ref", "order"]
     )

@@ -49,25 +49,18 @@ def _flagship_extract_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_salted(corpus.build_spans_df_cached(spark, sf_dir))
 
 
-def _flagship_extract_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dd_ops_ocr_spark import corpus, pipeline
-
-    return pipeline.extract(
-        corpus.build_spans_df_cached(spark, sf_dir), use_arrow=False
-    )
-
-
-def _flagship_extract_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _flagship_extract_exploded_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from dd_ops_ocr_spark import corpus, pipeline
+    from dd_ops_ocr_spark import corpus
+    from dd_ops_ocr_spark.plans.bounded import extract_exploded_bounded
 
     flat = (
         corpus.build_spans_df_cached(spark, sf_dir)
         .select("doc_id", F.explode("spans").alias("s"))
         .select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset")
     )
-    return pipeline.extract_exploded(flat)
+    return extract_exploded_bounded(flat)
 
 
 def _landed_cache(
@@ -117,30 +110,14 @@ def _flagship_extract_split_landed(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
+# every execution path of the same spec is checked against the same
+# DuckDB oracle: Arrow kernel, pure-JVM SQL, salted, salted-pruned,
+# split-landed, bounded-exploded
 QUERIES["flagship_extract"] = _flagship_extract
 QUERIES["flagship_extract_sql"] = _flagship_extract_sql
 QUERIES["flagship_extract_salted"] = _flagship_extract_salted
 QUERIES["flagship_extract_salted_pruned"] = _flagship_extract_salted_pruned
 QUERIES["flagship_extract_split_landed"] = _flagship_extract_split_landed
-# every execution path of the same spec is driver-checked against the
-# same DuckDB oracle: Arrow kernel, pure-JVM SQL, salted, pandas kernel,
-# pre-exploded grouped-map
-def _flagship_extract_exploded_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from dd_ops_ocr_spark import corpus
-    from dd_ops_ocr_spark.plans.bounded import extract_exploded_bounded
-
-    flat = (
-        corpus.build_spans_df_cached(spark, sf_dir)
-        .select("doc_id", F.explode("spans").alias("s"))
-        .select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset")
-    )
-    return extract_exploded_bounded(flat)
-
-
-QUERIES["flagship_extract_pandas"] = _flagship_extract_pandas
-QUERIES["flagship_extract_exploded"] = _flagship_extract_exploded
 QUERIES["flagship_extract_exploded_bounded"] = _flagship_extract_exploded_bounded
 QUERIES["flagship_metrics"] = _flagship_metrics
 
@@ -164,8 +141,6 @@ def register_flagship_oracles(sf_dir: str = _SF_CORRECT) -> None:
     ORACLE_SQL["flagship_extract_salted_pruned"] = sql
     ORACLE_SQL["flagship_extract_exploded_bounded"] = sql
     ORACLE_SQL["flagship_extract_split_landed"] = sql
-    ORACLE_SQL["flagship_extract_pandas"] = sql
-    ORACLE_SQL["flagship_extract_exploded"] = sql
     ORACLE_SQL["flagship_metrics"] = fixtures.metrics_oracle_sql(path)
     ORACLE_SQL["integrated_text"] = fixtures.integrated_oracle_sql(path)
     ORACLE_SQL["contract_articles"] = fixtures.contract_articles_oracle_sql(path)
@@ -518,12 +493,11 @@ _ROSTER_HEAD = [
     "media_metadata_jpeg",
     # (the warc pair + link_graph_pagerank at the head displace three
     # more names past the 50-prefix — same policy, see below)
-    # flagship_extract_pandas, flagship_extract_exploded and (since the
-    # session-6+ additions) media_frame_sample, engine_zip,
-    # dim_enrich_join, media_resize, media_metadata_png — and with the
-    # pdf_* pair + html_* trio at the head also ann_ivf_topk,
-    # dedup_embedding_cosine, ann_lsh_topk, embedding_stats,
-    # media_metadata/_jpeg (now past the driver's 50-prefix) — displaced
+    # media_frame_sample, engine_zip, dim_enrich_join, media_resize,
+    # media_metadata_png — and with the pdf_* pair + html_* trio at the
+    # head also ann_ivf_topk, dedup_embedding_cosine, ann_lsh_topk,
+    # embedding_stats, media_metadata/_jpeg (now past the driver's
+    # 50-prefix) — displaced
     # to keep the sample at the driver's 50-query cap: never-stamped new
     # queries outrank two-round-stale stamps, and the local oracle gate
     # still checks every query on every pytest run; displaced names

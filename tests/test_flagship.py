@@ -9,8 +9,9 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from dd_ops_ocr_spark import corpus, oracle, pipeline
+from dd_ops_ocr_spark import corpus, pipeline
 from tests.conftest import SF_SMOKE
+from tests.spans import expected_output_pandas, span_tuples
 
 
 def _read_documents(sf_dir: str) -> pd.DataFrame:
@@ -19,19 +20,6 @@ def _read_documents(sf_dir: str) -> pd.DataFrame:
     return duckdb.sql(
         f"select doc_id, text from read_parquet('{sf_dir}/documents.parquet')"
     ).df()
-
-
-def _tuples(df: pd.DataFrame) -> dict[str, list[tuple]]:
-    out: dict[str, list[tuple]] = {}
-    srt = df.sort_values(["doc_id", "order"])
-    for did, kind, text, ref, order in zip(
-        srt["doc_id"], srt["kind"], srt["text"], srt["media_ref"], srt["order"]
-    ):
-        out.setdefault(did, []).append(
-            (kind, None if pd.isna(text) else text,
-             None if pd.isna(ref) else ref, int(order))
-        )
-    return out
 
 
 def test_entry_fingerprint(spark):
@@ -70,53 +58,32 @@ def test_corpus_has_required_shapes():
     assert tail_seen, "sf0.001 should contain at least one 100-page tail doc"
 
 
-def test_kernel_matches_oracle_pandas():
-    """Kernel vs oracle without Spark (fast unit-level check)."""
-    docs = _read_documents(SF_SMOKE).head(60)
-    spans_pdf = corpus.spans_pandas(docs)
-    got = pipeline.extract_flat_pandas(pipeline.flatten_nested_batch(spans_pdf))
-    want = pipeline.expected_output_pandas(docs)
-    g, w = _tuples(got), _tuples(want)
-    assert set(g) == set(w)
-    for did in w:
-        assert g[did] == w[did], f"mismatch for {did}"
-
-
 def test_spark_pipeline_matches_oracle_sf001(spark):
     """Span-sequence equality on the t2 tier (sf0.01: different doc texts
     than the smoke tier), Arrow path."""
     sf = "/root/testdata/sf0.01"
     docs = _read_documents(sf)
     out = pipeline.extract(corpus.build_spans_df(spark, sf))
-    got = _tuples(out.toPandas())
-    want = _tuples(pipeline.expected_output_pandas(docs))
+    got = span_tuples(out.toPandas())
+    want = span_tuples(expected_output_pandas(docs))
     assert set(got) == set(want)
     mismatches = [d for d in want if got[d] != want[d]]
     assert not mismatches, f"{len(mismatches)} docs mismatch"
 
 
-@pytest.mark.parametrize("path", ["arrow", "nested", "exploded", "sql"])
+@pytest.mark.parametrize("path", ["arrow", "sql"])
 def test_spark_pipeline_matches_oracle(spark, path):
     """End-to-end span-sequence equality at sf0.001 (500 docs)."""
     docs = _read_documents(SF_SMOKE)
     spans_df = corpus.build_spans_df(spark, SF_SMOKE)
     if path == "arrow":
-        out = pipeline.extract(spans_df, use_arrow=True)
-    elif path == "nested":
-        out = pipeline.extract(spans_df, use_arrow=False)
-    elif path == "sql":
+        out = pipeline.extract(spans_df)
+    else:
         from dd_ops_ocr_spark.plans.sql_extract import extract_sql
 
         out = extract_sql(spans_df)
-    else:
-        from pyspark.sql import functions as F
-
-        flat = spans_df.select(
-            "doc_id", F.explode("spans").alias("s")
-        ).select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset")
-        out = pipeline.extract_exploded(flat)
-    got = _tuples(out.toPandas())
-    want = _tuples(pipeline.expected_output_pandas(docs))
+    got = span_tuples(out.toPandas())
+    want = span_tuples(expected_output_pandas(docs))
     assert set(got) == set(want)
     mismatches = [d for d in want if got[d] != want[d]]
     assert not mismatches, f"{len(mismatches)} docs mismatch, e.g. {mismatches[:3]}"

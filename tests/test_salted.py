@@ -5,24 +5,11 @@ the 100-page tail docs."""
 from __future__ import annotations
 
 import duckdb
-import pandas as pd
 
 from dd_ops_ocr_spark import corpus, pipeline
 from dd_ops_ocr_spark.plans.salting import extract_salted
 from tests.conftest import SF_SMOKE
-
-
-def _tuples(df: pd.DataFrame) -> dict[str, list[tuple]]:
-    out: dict[str, list[tuple]] = {}
-    srt = df.sort_values(["doc_id", "order"])
-    for did, kind, text, ref, order in zip(
-        srt["doc_id"], srt["kind"], srt["text"], srt["media_ref"], srt["order"]
-    ):
-        out.setdefault(did, []).append(
-            (kind, None if pd.isna(text) else text,
-             None if pd.isna(ref) else ref, int(order))
-        )
-    return out
+from tests.spans import expected_output_pandas, span_tuples
 
 
 def test_salted_matches_oracle(spark):
@@ -30,8 +17,8 @@ def test_salted_matches_oracle(spark):
         f"select doc_id, text from read_parquet('{SF_SMOKE}/documents.parquet')"
     ).df()
     spans_df = corpus.build_spans_df(spark, SF_SMOKE)
-    got = _tuples(extract_salted(spans_df, pages_per_bucket=7).toPandas())
-    want = _tuples(pipeline.expected_output_pandas(docs))
+    got = span_tuples(extract_salted(spans_df, pages_per_bucket=7).toPandas())
+    want = span_tuples(expected_output_pandas(docs))
     assert set(got) == set(want)
     mismatches = [d for d in want if got[d] != want[d]]
     assert not mismatches, f"{len(mismatches)} docs mismatch, e.g. {mismatches[:3]}"
@@ -89,8 +76,8 @@ def test_salted_pruned_matches_plain(spark, tmp_path):
         n.split("=")[1] for n in os.listdir(path) if n.startswith("size_class=")
     }
     assert classes == {"small", "big"}, classes
-    got = _tuples(extract_salted_pruned(spark, path).toPandas())
-    want = _tuples(pipeline.extract(corpus.build_spans_df(spark, SF_SMOKE)).toPandas())
+    got = span_tuples(extract_salted_pruned(spark, path).toPandas())
+    want = span_tuples(pipeline.extract(corpus.build_spans_df(spark, SF_SMOKE)).toPandas())
     assert got == want
 
 
@@ -104,7 +91,7 @@ def test_salted_with_no_tail_docs(spark):
     )
     got = extract_salted(small_only, pages_per_bucket=95).toPandas()
     want = pipeline.extract(small_only).toPandas()
-    g, w = _tuples(got), _tuples(want)
+    g, w = span_tuples(got), span_tuples(want)
     assert g == w
 
 
@@ -143,8 +130,8 @@ def test_split_landed_matches_plain(spark, tmp_path):
     assert n_parts.count() > 0, "smoke corpus has no tail docs"
     assert n_parts.agg(F.max("count")).collect()[0][0] >= 10  # 100p / 10
 
-    got = _tuples(extract_split_landed(spark, out).toPandas())
-    want = _tuples(pipeline.extract(corpus.build_spans_df(spark, SF_SMOKE)).toPandas())
+    got = span_tuples(extract_split_landed(spark, out).toPandas())
+    want = span_tuples(pipeline.extract(corpus.build_spans_df(spark, SF_SMOKE)).toPandas())
     assert set(got) == set(want)
     mismatches = [d for d in want if got[d] != want[d]]
     assert not mismatches, f"{len(mismatches)} docs mismatch, e.g. {mismatches[:3]}"
