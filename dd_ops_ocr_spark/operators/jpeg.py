@@ -23,7 +23,12 @@ baseline-JPEG implementation:
 The decoder is throughput-shaped: one 16-bit-LUT lookup per Huffman
 symbol over a numpy-unstuffed bitstream, coefficients batched into a
 single einsum IDCT per component (~4 Mpx/s/core on q95 4:2:0 document
-pages — bench.py records the current number). Codec injection
+pages — bench.py records the current number). ``decode_jpeg_batch``
+decodes many baseline payloads side by side through a fused table per
+Huffman table: one lookup on a 16-bit peek yields the bits consumed
+(code plus magnitude), the zigzag advance, the write offset and the
+sign-extended coefficient, so one numpy step decodes one symbol for
+every payload of the chunk. Codec injection
 (multimodal.py seam) remains available for native decoders. Everything
 here is from the public JPEG spec (ITU T.81) + JFIF.
 """
@@ -669,36 +674,25 @@ def _build_decode_lut(bits: list[int], vals: list[int]) -> list[int]:
     key = (tuple(bits), tuple(vals))
     lut = _LUT_CACHE.get(key)
     if lut is None:
-        lut = _build_decode_lut_np(bits, vals).tolist()
+        lut = _packed_lut(bits, vals).tolist()
         if len(_LUT_CACHE) > 64:  # bound worker-lifetime memory
             _LUT_CACHE.clear()
         _LUT_CACHE[key] = lut
     return lut
 
 
-_LUT_NP_CACHE: dict[tuple, np.ndarray] = {}
-
-
-def _build_decode_lut_np(bits: list[int], vals: list[int]) -> np.ndarray:
-    """The same 65536-entry packed LUT as an int64 numpy array — the
-    batch decoder stacks these and gathers with fancy indexing."""
-    key = (tuple(bits), tuple(vals))
-    arr = _LUT_NP_CACHE.get(key)
-    if arr is None:
-        codes = _canonical_codes(bits, vals)
-        arr = np.zeros(1 << 16, dtype=np.int64)
-        for sym, (code, ln) in codes.items():
-            lo = code << (16 - ln)
-            arr[lo: lo + (1 << (16 - ln))] = (ln << 8) | sym
-        if len(_LUT_NP_CACHE) > 64:
-            _LUT_NP_CACHE.clear()
-        _LUT_NP_CACHE[key] = arr
+def _packed_lut(bits: list[int], vals: list[int]) -> np.ndarray:
+    """``_build_decode_lut``'s packed LUT as an int64 numpy array,
+    unmemoized: the serial decoder's list and the batch decoder's fused
+    tables are built from it, each memoized by its own cache."""
+    arr = np.zeros(1 << 16, dtype=np.int64)
+    for sym, (code, ln) in _canonical_codes(bits, vals).items():
+        lo = code << (16 - ln)
+        arr[lo: lo + (1 << (16 - ln))] = (ln << 8) | sym
     return arr
 
 
-def _entropy_segments_np(
-    payload: bytes, pos: int
-) -> tuple[list[np.ndarray], int]:
+def _entropy_segments(payload: bytes, pos: int) -> tuple[list[list[int]], int]:
     """RST-delimited entropy segments starting at ``pos``, plus the
     absolute index of the terminating marker's 0xFF (so multi-scan
     progressive parsing can resume at the next marker).
@@ -707,10 +701,10 @@ def _entropy_segments_np(
     per-byte Python — and packed as a 32-bit sliding-window array:
     ``seg[i]`` holds the 32 bits beginning at byte offset ``i`` (tail
     zero-padded), so the decode loop reads any <=16-bit code or <=16-bit
-    magnitude with one index + shift + mask. Arrays come back as int64
-    numpy (the batch decoder gathers them directly); the serial decoders
-    ``tolist()`` them (scalar list indexing beats numpy scalar indexing
-    ~5x in the per-symbol loop)."""
+    magnitude with one index + shift + mask. Segments come back as plain
+    lists: scalar list indexing beats numpy scalar indexing ~5x in the
+    per-symbol loop. (``_chunk_windows`` is the batch decoder's
+    whole-chunk twin.)"""
     arr = np.frombuffer(payload, dtype=np.uint8)
     ff = np.flatnonzero(arr[pos:-1] == 0xFF) + pos
     nxt = arr[ff + 1]
@@ -743,14 +737,8 @@ def _entropy_segments_np(
             seg = seg[keep]
         b = np.concatenate([seg, np.zeros(4, dtype=np.uint8)]).astype(np.int64)
         word = (b[:-3] << 24) | (b[1:-2] << 16) | (b[2:-1] << 8) | b[3:]
-        segs.append(word)
+        segs.append(word.tolist())
     return segs, end
-
-
-def _entropy_segments(payload: bytes, pos: int) -> tuple[list[list[int]], int]:
-    """Serial-decoder view of ``_entropy_segments_np``: plain lists."""
-    segs, end = _entropy_segments_np(payload, pos)
-    return [s.tolist() for s in segs], end
 
 
 def _decode_scan(payload, pos, w, h, comps, qts, huff_dc, huff_ac,
@@ -1271,23 +1259,73 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
 
 # ------------------------------------------------------- batch decoder
 #
-# Cross-payload vectorized baseline decode: the per-symbol Huffman loop
-# is inherently serial WITHIN one payload, but a corpus batch decodes
-# many payloads at once — so the interpreter keeps one lane of state
-# per payload and each numpy step decodes ONE symbol for EVERY active
-# lane (peek -> stacked-LUT gather -> masked DC/AC apply). Lanes that
-# hit anything the fast path does not model (or any malformed stream)
-# are marked failed and re-decoded by the serial decoder, which remains
-# the authority on both pixels and exception classes — the batch path
-# can only ever be a fast path, never a semantic fork (tests pin
-# pixel-exact equality against decode_jpeg on every success).
+# Cross-payload vectorized baseline decode. Huffman decoding is serial
+# within one payload, so the batch path runs many payloads ("lanes") side
+# by side: each numpy step decodes one symbol for every active lane of a
+# chunk. At Arrow-batch width (a few hundred lanes) the cost is set by
+# the number of numpy calls, not by arithmetic, so everything is shaped
+# to run once per step or once per chunk:
+#
+#   * the entropy step is a fixed, branch-free sequence of whole-chunk
+#     calls: one fused-table gather (``_fused_table``) turns a 16-bit
+#     peek into the bits consumed (code + magnitude), the zigzag advance,
+#     the write offset and the already-extended coefficient, so DC, AC,
+#     EOB and ZRL symbols share one update; the few symbols the table
+#     cannot hold take a masked slow branch with the serial formula;
+#   * DC diffs are written as decoded and become predictions after the
+#     loop, by one cumulative sum per (lane, component);
+#   * dequant + IDCT run once over the chunk, upsampling + colour
+#     conversion once per sampling pattern at MCU granularity, and each
+#     lane only reshapes and crops its MCUs.
+#
+# Lanes that hit anything the fast path does not model (or any malformed
+# stream) are re-decoded by the serial decoder, which stays the authority
+# on both pixels and exceptions: the batch path is a fast path, never a
+# semantic fork (tests pin pixel- and exception-exact parity).
+
+
+def _sniff_baseline(payload: bytes) -> int:
+    """Cheap marker walk up to SOS: the scan's start offset when the
+    frame is SOF0/SOF1 and no nonzero restart interval precedes the
+    scan, else -1 (the payload goes straight to the serial decoder).
+    Reads marker codes and segment lengths only, never table contents;
+    ``_parse_baseline_for_batch`` still vets every header it admits."""
+    if payload[:2] != b"\xff\xd8":
+        return -1
+    baseline = False
+    pos = 2
+    n = len(payload)
+    while pos + 4 <= n:
+        if payload[pos] != 0xFF:
+            pos += 1
+            continue
+        marker = payload[pos + 1]
+        if marker == 0xFF:
+            pos += 1
+            continue
+        pos += 2
+        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
+            continue
+        seg_len = (payload[pos] << 8) | payload[pos + 1]
+        if marker == 0xDA:
+            return pos + seg_len if baseline else -1
+        if marker in (0xC0, 0xC1):
+            baseline = True
+        elif marker == 0xDD:
+            if pos + 4 > n or payload[pos + 2] or payload[pos + 3]:
+                return -1
+        elif not (marker in (0xDB, 0xC4, 0xFE) or 0xE0 <= marker <= 0xEF):
+            return -1  # SOF2+, EOI before SOS, unknown marker
+        pos += seg_len
+    return -1
 
 
 def _parse_baseline_for_batch(payload: bytes):
     """Header walk for the batch fast path. Returns the parsed scan
     context, or None when the payload needs the serial decoder
-    (progressive, restart intervals, grayscale, any structural
-    anomaly — the serial path raises the contract exceptions)."""
+    (progressive, restart intervals, grayscale, empty or non-integral
+    sampling geometry, any structural anomaly — the serial path raises
+    the contract exceptions)."""
     try:
         if payload[:2] != b"\xff\xd8":
             return None
@@ -1358,7 +1396,7 @@ def _parse_baseline_for_batch(payload: bytes):
                     return None  # restart intervals -> serial path
             elif marker == 0xDA:
                 ns = seg[0]
-                if not comps or ns != len(comps):
+                if not comps or ns != len(comps) or not (w and h):
                     return None
                 for i in range(ns):
                     cid, tt = seg[1 + 2 * i: 3 + 2 * i]
@@ -1369,6 +1407,8 @@ def _parse_baseline_for_batch(payload: bytes):
                             hit = True
                     if not hit:
                         return None
+                hmax = max(c["h"] for c in comps)
+                vmax = max(c["v"] for c in comps)
                 for c in comps:
                     if (0, c.get("td")) not in huff:
                         return None
@@ -1377,6 +1417,8 @@ def _parse_baseline_for_batch(payload: bytes):
                     if c["tq"] not in qts:
                         return None
                     if c["h"] < 1 or c["v"] < 1:
+                        return None
+                    if hmax % c["h"] or vmax % c["v"]:
                         return None
                 return {
                     "h": h, "w": w, "comps": comps, "qts": qts,
@@ -1392,29 +1434,65 @@ def _parse_baseline_for_batch(payload: bytes):
         return None
 
 
-_SCHED_CACHE: dict[tuple, tuple] = {}
+_FUSED_CACHE: dict[tuple, np.ndarray] = {}
+
+# rows of a fused table (see _fused_table)
+_NB, _KA, _OFF, _VAL, _LUT = range(5)
 
 
-def _lane_schedule(nblk: tuple[int, ...], n_mcus: int):
-    """Per-block component ids for one lane (MCU visit order), plus the
-    per-MCU slot positions of each component (for splitting decoded
-    blocks back out per component). Memoized per (nblk, n_mcus)."""
-    key = (nblk, n_mcus)
-    hit = _SCHED_CACHE.get(key)
-    if hit is not None:
-        return hit
-    pattern = np.repeat(
-        np.arange(len(nblk), dtype=np.int64), np.asarray(nblk)
-    )
-    sched = np.tile(pattern, n_mcus)
-    slots = [np.flatnonzero(pattern == ci) for ci in range(len(nblk))]
-    if len(_SCHED_CACHE) > 4096:
-        _SCHED_CACHE.clear()
-    _SCHED_CACHE[key] = (sched, slots)
-    return sched, slots
+def _fused_table(tc: int, bits: list[int], vals: list[int]) -> np.ndarray:
+    """(5, 65536) int64 fused Huffman table for the batch entropy step,
+    indexed by the next 16 bits of the stream. Per peek:
+
+    * ``_NB``  bits consumed, code plus magnitude; 0 where the code is
+      invalid or code + magnitude exceeds 16 bits (slow branch);
+    * ``_KA``  zigzag advance: 1 for DC, run + 1 for AC, 16 for ZRL,
+      64 for EOB (which always ends the block);
+    * ``_OFF`` write offset from k, which is also the range-check offset
+      (the serial "AC index out of range" fires when k + run > 63); EOB,
+      ZRL and DC write their 0 / diff at k itself;
+    * ``_VAL`` the sign-extended coefficient (the DC diff for DC
+      tables, the AC value otherwise);
+    * ``_LUT`` the packed (length << 8) | symbol entry the slow branch
+      decodes with.
+
+    Memoized on (table class, table bytes) and bounded like the serial
+    decoder's LUT cache."""
+    key = (tc, tuple(bits), tuple(vals))
+    tbl = _FUSED_CACHE.get(key)
+    if tbl is None:
+        lut = _packed_lut(bits, vals)
+        ln = lut >> 8
+        sym = lut & 0xFF
+        # per-symbol fields, then one gather each
+        s = np.arange(256, dtype=np.int64)
+        if tc == 0:
+            size_s, ka_s, off_s = s, np.ones_like(s), np.zeros_like(s)
+        else:
+            size_s, off_s = s & 0xF, s >> 4
+            ka_s = off_s + 1
+            ka_s[0x00], ka_s[0xF0] = 64, 16  # EOB, ZRL
+            off_s[0x00] = off_s[0xF0] = 0
+        size = size_s[sym]
+        nb = ln + size
+        fast = (ln > 0) & (nb <= 16)
+        nb *= fast
+        size *= fast
+        # the magnitude bits follow the code inside the 16-bit peek
+        mag = (np.arange(1 << 16, dtype=np.int64) >> (16 - nb)) & (
+            (1 << size) - 1
+        )
+        half = (1 << size) >> 1
+        val = mag - (mag < half) * ((1 << size) - 1)
+        tbl = np.stack([nb, ka_s[sym] * fast, off_s[sym] * fast, val, lut])
+        if len(_FUSED_CACHE) > 64:
+            _FUSED_CACHE.clear()
+        _FUSED_CACHE[key] = tbl
+    return tbl
 
 
 _BATCH_CHUNK = 2048  # lanes per inner batch (bounds W/C/IDCT memory)
+_STRIDE = 80  # C row width: 64 coefficients + room for a k + 15 write
 
 
 def decode_jpeg_batch(payloads) -> list:
@@ -1422,150 +1500,267 @@ def decode_jpeg_batch(payloads) -> list:
     array for payloads[i], or the exact Exception instance
     ``decode_jpeg(payloads[i])`` raises. Baseline single-scan 3-component
     payloads without restart intervals ride the vectorized multi-lane
-    entropy interpreter; everything else (progressive, grayscale, DRI,
-    malformed) falls back to the serial decoder per payload."""
+    decoder; everything else (progressive, grayscale, DRI, malformed)
+    falls back to the serial decoder per payload."""
     out: list = [None] * len(payloads)
-    lanes: list[tuple[int, dict, np.ndarray]] = []
+    lanes: list[tuple[int, tuple, int]] = []
     for i, p in enumerate(payloads):
-        ctx = _parse_baseline_for_batch(p)
-        if ctx is None:
+        start = _sniff_baseline(p)
+        tpl = _lane_template(p, start) if start > 0 else None
+        if tpl is None:
             out[i] = _decode_scalar(p)
-            continue
-        try:
-            segs, _ = _entropy_segments_np(p, ctx["scan_start"])
-        except Exception:
-            out[i] = _decode_scalar(p)
-            continue
-        if len(segs) != 1:
-            out[i] = _decode_scalar(p)
-            continue
-        lanes.append((i, p, ctx, segs[0]))
+        else:
+            lanes.append((i, tpl, start))
     for lo in range(0, len(lanes), _BATCH_CHUNK):
         _decode_lane_chunk(payloads, lanes[lo: lo + _BATCH_CHUNK], out)
     return out
 
 
-_HDR_CACHE: dict[bytes, tuple] = {}
+_HDR_CACHE: dict[bytes, tuple | None] = {}
+_SIG_CACHE: dict[tuple, tuple] = {}
 
 
-def _lane_template(p: bytes, ctx: dict):
-    """Everything the batch pipeline derives from a payload's HEADER
-    (tables, geometry, per-block LUT/QT schedules), memoized on the raw
-    header bytes — a corpus re-uses a handful of encoder settings, so
-    per-lane prep collapses to one dict hit."""
-    hdr = p[: ctx["scan_start"]]
-    tpl = _HDR_CACHE.get(hdr)
-    if tpl is None:
+def _lane_template(p: bytes, scan_start: int):
+    """(w, h, mcus_x, mcus_y, signature) for a payload's HEADER, or None
+    when the header needs the serial decoder. The signature holds what
+    lanes share a chunk-wide pass on — sampling pattern, per-MCU
+    component ids, fused DC / AC tables and zigzag quant tables per
+    component — and is interned, so lanes group by identity. Both are
+    memoized on raw bytes: a corpus re-uses a handful of encoder
+    settings, so a header is parsed once and per-lane prep is one dict
+    hit."""
+    hdr = p[:scan_start]
+    if hdr in _HDR_CACHE:
+        return _HDR_CACHE[hdr]
+    ctx = _parse_baseline_for_batch(p)
+    tpl = None
+    if ctx is not None and ctx["scan_start"] == scan_start:
         comps = ctx["comps"]
-        hmax = max(c["h"] for c in comps)
-        vmax = max(c["v"] for c in comps)
-        mcus_x = -(-ctx["w"] // (8 * hmax))
-        mcus_y = -(-ctx["h"] // (8 * vmax))
-        n_mcus = mcus_x * mcus_y
-        nblk = tuple(c["v"] * c["h"] for c in comps)
-        sched, slots = _lane_schedule(nblk, n_mcus)
-        dc_luts = [
-            _build_decode_lut_np(*ctx["huff"][(0, c["td"])])
-            for c in comps
-        ]
-        ac_luts = [
-            _build_decode_lut_np(*ctx["huff"][(1, c["ta"])])
-            for c in comps
-        ]
-        tpl = (
-            ctx, mcus_x, mcus_y, vmax, hmax, nblk, slots, sched,
-            dc_luts, ac_luts,
+        pattern = tuple((c["h"], c["v"]) for c in comps)
+        dc = [ctx["huff"][(0, c["td"])] for c in comps]
+        ac = [ctx["huff"][(1, c["ta"])] for c in comps]
+        qts = [ctx["qts"][c["tq"]] for c in comps]
+        key = (
+            pattern, tuple((tuple(b), tuple(v)) for b, v in dc + ac),
+            b"".join(q.tobytes() for q in qts),
         )
-        if len(_HDR_CACHE) > 4096:
-            _HDR_CACHE.clear()
-        _HDR_CACHE[hdr] = tpl
+        sig = _SIG_CACHE.get(key)
+        if sig is None:
+            sig = (
+                pattern,
+                np.repeat(np.arange(len(comps)), [h * v for h, v in pattern]),
+                [_fused_table(0, *t) for t in dc],
+                [_fused_table(1, *t) for t in ac],
+                [q[ZZ] for q in qts],
+            )
+            if len(_SIG_CACHE) > 256:
+                _SIG_CACHE.clear()
+            _SIG_CACHE[key] = sig
+        hmax = max(h for h, _ in pattern)
+        vmax = max(v for _, v in pattern)
+        tpl = (
+            ctx["w"], ctx["h"], -(-ctx["w"] // (8 * hmax)),
+            -(-ctx["h"] // (8 * vmax)), sig,
+        )
+    if len(_HDR_CACHE) > 4096:
+        _HDR_CACHE.clear()
+    _HDR_CACHE[hdr] = tpl
     return tpl
 
 
+def _row(arr: np.ndarray, seen: dict[int, int], items: list) -> int:
+    """Row id of ``arr`` in a chunk-wide stack, appending it on first
+    sight (keyed by identity: signatures share cached tables)."""
+    r = seen.get(id(arr))
+    if r is None:
+        r = seen[id(arr)] = len(items)
+        items.append(arr)
+    return r
+
+
+def _chunk_windows(payloads, lanes):
+    """``_entropy_segments`` for a whole chunk at once: find each
+    lane's scan end, unstuff, and pack the 32-bit windows of all lanes
+    back to back. Returns (W, bit0, bitend, single) over the lanes whose
+    scan is one segment (``single``; a restart marker inside the scan
+    sends a lane to the serial decoder): a lane's windows start at bit
+    ``bit0`` of ``W`` and it may consume bits up to ``bitend`` (its
+    window count, in bits). Zero padding follows each lane's windows, so
+    a read past them stays in bounds."""
+    parts = [payloads[i][s:] for i, _, s in lanes]
+    n = len(parts)
+    size = np.array([len(q) for q in parts], dtype=np.int64)
+    o = np.cumsum(size) - size
+    # one pad byte so the byte after every FF is addressable
+    A = np.frombuffer(b"".join(parts) + b"\0", dtype=np.uint8)
+    ff = np.flatnonzero(A[:-1] == 0xFF)
+    ff_lane = np.searchsorted(o, ff, side="right") - 1
+    last = ff + 1 < o[ff_lane] + size[ff_lane]  # never a payload's last byte
+    ff, ff_lane = ff[last], ff_lane[last]
+    nxt = A[ff + 1]
+    rst = (nxt >= 0xD0) & (nxt <= 0xD7)
+    term = ~(rst | (nxt == 0x00) | (nxt == 0xFF))
+    end = o + size
+    t_lane, t_first = np.unique(ff_lane[term], return_index=True)
+    end[t_lane] = ff[term][t_first]
+    single = np.ones(n, dtype=bool)
+    single[ff_lane[rst][ff[rst] < end[ff_lane[rst]]]] = False
+    # fill FFs padding up to the marker are not entropy data (rare)
+    for j in np.flatnonzero((end > o) & (A[end - 1] == 0xFF)):
+        while end[j] > o[j] and A[end[j] - 1] == 0xFF:
+            end[j] -= 1
+    seg = np.where(single, end - o, 0)
+    K = np.frombuffer(
+        b"".join(q[:m] for q, m in zip(parts, seg.tolist())), dtype=np.uint8
+    )
+    # unstuff: every FF inside a segment drops the byte after it
+    inside = ff + 1 < o[ff_lane] + seg[ff_lane]
+    d_lane = ff_lane[inside]
+    K = np.delete(K, ff[inside] + 1 - o[d_lane] + (np.cumsum(seg) - seg)[d_lane])
+    count = seg - np.bincount(d_lane, minlength=n)
+    pad = np.full(n, 4)
+    pad[-1] = 8
+    B = np.insert(K, np.repeat(np.cumsum(count), pad), 0)
+    W = (
+        np.ascontiguousarray(np.lib.stride_tricks.sliding_window_view(B, 4))
+        .view(">u4")[:, 0]
+        .astype(np.int64)
+    )
+    start = (np.cumsum(count + 4) - (count + 4))[single]
+    return W, 8 * start, 8 * (start + count[single] + 1), single
+
+
 def _decode_lane_chunk(payloads, lanes, out) -> None:
-    """Run one chunk of eligible lanes through the stacked entropy
-    interpreter, then per-lane dequant + IDCT + color conversion.
-    Results land in ``out`` positionally; failed lanes are re-decoded
-    serially (the serial decoder is the authority on exceptions)."""
+    """Decode one chunk of eligible lanes: fused entropy step, DC
+    predictions, chunk-wide dequant + IDCT, per-pattern colour
+    conversion. Results land in ``out`` positionally; failed lanes are
+    re-decoded serially (the serial decoder is the authority on
+    exceptions)."""
+    # lanes sharing a signature are contiguous, so every per-block
+    # schedule is one tile per signature run
+    lanes = sorted(lanes, key=lambda ln: id(ln[1][4]))
+    W, bit0, bitend, single = _chunk_windows(payloads, lanes)
+    for (i, _, _), ok in zip(lanes, single):
+        if not ok:
+            out[i] = _decode_scalar(payloads[i])
+    lanes = [ln for ln, ok in zip(lanes, single) if ok]
     nl = len(lanes)
-    lut_rows: dict[int, int] = {}
-    lut_list: list[np.ndarray] = []
+    if not nl:
+        return
+    n_mcus = np.array([t[2] * t[3] for _, t, _ in lanes], dtype=np.int64)
+    runs = []
+    lo = 0
+    for li in range(1, nl + 1):
+        if li == nl or lanes[li][1][4] is not lanes[lo][1][4]:
+            runs.append((lanes[lo][1][4], lo, li))
+            lo = li
+    tables: dict[int, int] = {}
+    table_list: list[np.ndarray] = []
+    quants: dict[int, int] = {}
+    quant_list: list[np.ndarray] = []
+    tsel, qrow, comp = [], [], []
+    nblocks = np.empty(nl, dtype=np.int64)
+    for (_, mcu, dc_t, ac_t, qzz), lo, hi in runs:
+        dc_r = np.array([_row(t, tables, table_list) for t in dc_t])
+        ac_r = np.array([_row(t, tables, table_list) for t in ac_t])
+        q_r = np.array([_row(q, quants, quant_list) for q in qzz])
+        m = int(n_mcus[lo:hi].sum())
+        pair = np.stack([dc_r[mcu], ac_r[mcu]], axis=1).ravel() << 16
+        tsel.append(np.tile(pair, m))
+        qrow.append(np.tile(q_r[mcu], m))
+        comp.append(np.tile(mcu, m))
+        nblocks[lo:hi] = n_mcus[lo:hi] * mcu.size
 
-    def lut_row(arr: np.ndarray) -> int:
-        r = lut_rows.get(id(arr))
-        if r is None:
-            r = len(lut_list)
-            lut_rows[id(arr)] = r
-            lut_list.append(arr)
-        return r
-
-    sched_cache: dict[tuple, tuple] = {}
-    seg_base = np.empty(nl, dtype=np.int64)
-    seg_nmax = np.empty(nl, dtype=np.int64)  # max valid window index
-    lane_geom = []
-    words = []
-    sched_parts = []
-    dcl_parts = []
-    acl_parts = []
-    blk_base = np.empty(nl, dtype=np.int64)
-    blk_end = np.empty(nl, dtype=np.int64)
-    woff = 0
-    boff = 0
-    for li, (i, p, ctx, word) in enumerate(lanes):
-        (ctx, mcus_x, mcus_y, vmax, hmax, nblk, slots, sched,
-         dc_luts, ac_luts) = _lane_template(p, ctx)
-        # per-block LUT row ids, cached per (tables, schedule) pair
-        skey = (id(sched),) + tuple(id(t) for t in dc_luts + ac_luts)
-        hit = sched_cache.get(skey)
-        if hit is None:
-            dc_ids = np.array([lut_row(t) for t in dc_luts], np.int64)
-            ac_ids = np.array([lut_row(t) for t in ac_luts], np.int64)
-            hit = (dc_ids[sched], ac_ids[sched])
-            sched_cache[skey] = hit
-        dcl, acl = hit
-        seg_base[li] = woff
-        seg_nmax[li] = word.size - 1
-        words.append(word)
-        sched_parts.append(sched)
-        dcl_parts.append(dcl)
-        acl_parts.append(acl)
-        blk_base[li] = boff
-        blk_end[li] = boff + sched.size
-        lane_geom.append(
-            (i, ctx, mcus_x, mcus_y, vmax, hmax, nblk, slots)
-        )
-        woff += word.size
-        boff += sched.size
-
-    W = np.concatenate(words)
-    sched_all = np.concatenate(sched_parts)
-    dcl_all = np.concatenate(dcl_parts)
-    acl_all = np.concatenate(acl_parts)
-    LUT = np.stack(lut_list)
-    C = np.zeros((boff, 64), dtype=np.int64)
-
+    blk0 = np.cumsum(nblocks) - nblocks
+    C = np.zeros((int(nblocks.sum()), _STRIDE), dtype=np.int64)
     failed = _decode_entropy_lanes(
-        W, seg_base, seg_nmax, sched_all, dcl_all, acl_all, LUT, C,
-        blk_base, blk_end,
+        W, np.concatenate(table_list, axis=1), np.concatenate(tsel),
+        C.reshape(-1), bit0, bitend, blk0, blk0 + nblocks,
     )
 
-    # ---- assemble successes, serial-redo failures
-    for li, (i, ctx, mcus_x, mcus_y, vmax, hmax, nblk, slots) in enumerate(
-        lane_geom
-    ):
-        if failed[li]:
-            out[i] = _decode_scalar(payloads[i])
-            continue
-        lane_c = C[blk_base[li]: blk_end[li]]
-        npb = sum(nblk)
-        lane_r = lane_c.reshape(-1, npb, 64)
-        comp_blocks = [
-            lane_r[:, sl, :].reshape(-1, 64) for sl in slots
-        ]
-        out[i] = _assemble_scan(
-            ctx["comps"], comp_blocks, ctx["qts"], mcus_x, mcus_y,
-            vmax, hmax, ctx["w"], ctx["h"],
+    # DC predictions: C[:, 0] holds diffs; a stable per-(lane,
+    # component) cumulative sum turns them into the serial decoder's
+    # running predictor values
+    key = np.repeat(np.arange(nl) * 4, nblocks) + np.concatenate(comp)
+    order = np.argsort(key, kind="stable")
+    diffs = C[order, 0]
+    run = np.cumsum(diffs)
+    ks = key[order]
+    new = np.r_[True, ks[1:] != ks[:-1]]
+    base = run[new] - diffs[new]
+    C[order, 0] = run - base[np.cumsum(new) - 1]
+
+    # chunk-wide dequant + IDCT (the same arithmetic, hence the same
+    # bits, as _assemble_scan's per-component form)
+    deq = np.stack(quant_list)[np.concatenate(qrow)]
+    deq *= C[:, :64]
+    del C
+    px = DCT.T @ deq[:, UNZZ].reshape(-1, 8, 8).astype(np.float64) @ DCT
+    px += 128.0
+
+    for (pattern, *_), lo, hi in runs:
+        b = int(blk0[lo])
+        rgb = _mcu_rgb(px[b: b + int(nblocks[lo:hi].sum())], pattern)
+        mh, mw = rgb.shape[1:3]
+        m = 0
+        for li in range(lo, hi):
+            i, (w, h, mcus_x, mcus_y, _), _ = lanes[li]
+            if failed[li]:
+                out[i] = _decode_scalar(payloads[i])
+            else:
+                img = (
+                    rgb[m: m + n_mcus[li]]
+                    .reshape(mcus_y, mcus_x, mh, mw, 3)
+                    .transpose(0, 2, 1, 3, 4)
+                    .reshape(mcus_y * mh, mcus_x * mw, 3)
+                )
+                out[i] = img[:h, :w].copy()
+            m += n_mcus[li]
+
+
+def _mcu_rgb(px: np.ndarray, pattern: tuple) -> np.ndarray:
+    """IDCT'd blocks of whole MCUs (MCU visit order) -> (n_mcus, 8 vmax,
+    8 hmax, 3) uint8 RGB: each component's blocks tile its MCU, chroma
+    is upsampled by nearest repetition, and the colour conversion is
+    _finish_scan's, element for element. Chroma products are taken
+    before upsampling (which only repeats values), one output channel
+    at a time, to keep the float temporaries small."""
+    hmax = max(hh for hh, _ in pattern)
+    vmax = max(vv for _, vv in pattern)
+    mcus = px.reshape(-1, sum(hh * vv for hh, vv in pattern), 8, 8)
+    planes = []
+    s = 0
+    for hh, vv in pattern:
+        planes.append(
+            mcus[:, s: s + hh * vv]
+            .reshape(-1, vv, hh, 8, 8)
+            .transpose(0, 1, 3, 2, 4)
+            .reshape(-1, vv * 8, hh * 8)
         )
+        s += hh * vv
+
+    def full(x, ci):
+        hh, vv = pattern[ci]
+        if vmax > vv:
+            x = np.repeat(x, vmax // vv, axis=1)
+        if hmax > hh:
+            x = np.repeat(x, hmax // hh, axis=2)
+        return x
+
+    def channels():
+        yield y + full(1.402 * cr, 2)
+        g = y - full(0.344136 * cb, 1)
+        g -= full(0.714136 * cr, 2)
+        yield g
+        yield y + full(1.772 * cb, 1)
+
+    y = full(planes[0], 0)
+    cb, cr = planes[1] - 128.0, planes[2] - 128.0
+    rgb = np.empty(y.shape + (3,), dtype=np.uint8)
+    for c, v in enumerate(channels()):
+        np.round(v, out=v)
+        rgb[..., c] = np.clip(v, 0, 255, out=v)
+    return rgb
 
 
 def _decode_scalar(payload: bytes):
@@ -1577,114 +1772,83 @@ def _decode_scalar(payload: bytes):
         return exc
 
 
-def _decode_entropy_lanes(W, seg_base, seg_nmax, sched, dcl, acl, LUT, C,
-                          blk_base, blk_end) -> np.ndarray:
-    """The multi-lane entropy interpreter: one Huffman symbol per active
-    lane per step, all numpy. Writes coefficients into C (zigzag order,
-    one row per block in MCU visit order) and returns the per-lane
-    failed mask. A lane fails on exactly the conditions the serial loop
-    raises for (invalid code, AC index out of range, running off the
-    window array, oversized magnitude category); failed lanes are
-    re-decoded serially by the caller, so failure here only needs to be
-    detected, never classified."""
-    nl = seg_base.size
+def _decode_entropy_lanes(W, F, tsel, C, bit0, bitend, blk0, blkend
+                          ) -> np.ndarray:
+    """The multi-lane entropy step: one Huffman symbol per active lane
+    per iteration, through the fused tables ``F`` (``_fused_table`` rows,
+    tables side by side; ``tsel[2 * block + (k > 0)]`` is the column
+    offset of a block's DC / AC table). Writes zigzag coefficients into
+    the flat ``C`` (``_STRIDE`` per block, DC diffs at slot 0) and
+    returns the per-lane failed mask.
+
+    A lane fails on every condition the serial loop raises for (invalid
+    code, AC index out of range, reading past the window array) and,
+    conservatively, on DC magnitudes over 16 bits; the caller redoes
+    failed lanes serially, so failure is only detected here, never
+    classified. Bit positions are chunk-absolute, and a lane fails once
+    its position passes ``bitend``: the serial decoder reads a symbol's
+    code and magnitude from windows at or below the one holding the
+    symbol's last bit, so a lane that stays within ``bitend`` never made
+    a read the serial decoder fails on."""
+    nl = bit0.size
     failed = np.zeros(nl, dtype=bool)
-    # fully compacted per-lane state: every array below holds ONLY the
-    # still-active lanes, so no step pays gather/scatter through a lane
-    # index — `lane` maps back to the original lane id for the failed
-    # mask, `pred` rides along as compacted rows
-    lane = np.flatnonzero(blk_end > blk_base)
-    bp = np.zeros(lane.size, dtype=np.int64)
-    gblk = blk_base[lane].copy()
-    kst = np.zeros(lane.size, dtype=np.int64)  # 0 = DC next, else AC k
-    pred = np.zeros((lane.size, 4), dtype=np.int64)
-    base = seg_base[lane].copy()
-    nmax = seg_nmax[lane].copy()
-    bend = blk_end[lane].copy()
-    one = np.int64(1)
-    # hard step bound: every step consumes >=1 bit on every live lane,
-    # so 8 * max window bytes + slack can never be reached by a valid
-    # stream; treat leftovers as failed (serial redo decides)
-    max_steps = int(8 * (seg_nmax.max() + 8) + 1024) if nl else 0
-    for _ in range(max_steps):
-        if lane.size == 0:
+    NB, KA, OFF, VAL = F[_NB], F[_KA], F[_OFF], F[_VAL]
+    # per-lane state, one row each, always compacted to the live lanes
+    S = np.stack([
+        bit0, np.zeros(nl, dtype=np.int64), 2 * blk0, _STRIDE * blk0,
+        bitend, 2 * blkend, np.arange(nl, dtype=np.int64),
+    ])
+    # every live step consumes >= 1 bit, so no lane outlives its bits
+    for _ in range(int((bitend - bit0).max(initial=0)) + 2):
+        if S.shape[1] == 0:
             break
-        byt = bp >> 3
-        bad = byt > nmax
-        wv = W[base + np.minimum(byt, nmax)]
-        pk = (wv >> (16 - (bp & 7))) & 0xFFFF
-        isdc = kst == 0
-        lid = np.where(isdc, dcl[gblk], acl[gblk])
-        e = LUT[lid, pk]
-        ln = e >> 8
-        sym = e & 0xFF
-        bad |= ln == 0  # invalid Huffman code
-        bp = bp + ln
-        size = np.where(isdc, sym, sym & 0xF)
-        bad |= size > 16  # scalar raises on the negative shift
-        need = (size > 0) & ~bad
-        byt2 = bp >> 3
-        bad |= need & (byt2 > nmax)
-        wv2 = W[base + np.minimum(byt2, nmax)]
-        sz = np.maximum(size, 1)
-        mv = (wv2 >> (32 - (bp & 7) - sz)) & ((one << sz) - 1)
-        bp = bp + np.where(need, size, 0)
-        ext = np.where(mv >= (one << (sz - 1)), mv, mv - (one << sz) + 1)
-        ok = ~bad
-
-        # DC apply
-        dm = isdc & ok
-        if dm.any():
-            gm = gblk[dm]
-            cm = sched[gm]
-            pv = pred[dm, cm] + np.where(need[dm], ext[dm], 0)
-            pred[dm, cm] = pv
-            C[gm, 0] = pv
-            kst[dm] = 1
-
-        # AC apply
-        am = ~isdc & ok
-        blockdone = np.zeros(lane.size, dtype=bool)
-        if am.any():
-            eobm = am & (sym == 0x00)
-            zrlm = am & (sym == 0xF0)
-            nrm = am & ~eobm & ~zrlm
-            kn = kst.copy()
-            kn[zrlm] += 16
-            kn[nrm] += sym[nrm] >> 4
-            oor = nrm & (kn > 63)  # "AC index out of range"
-            if oor.any():
-                bad |= oor
-                ok &= ~oor
-                nrm &= ~oor
-            wrm = nrm & need
-            if wrm.any():
-                C[gblk[wrm], kn[wrm]] = ext[wrm]
-            kn[nrm] += 1
-            sel = am & ok
-            kst[sel] = kn[sel]
-            blockdone = (eobm | ((zrlm | nrm) & (kn >= 64))) & ok
-
-        if bad.any():
-            failed[lane[bad]] = True
-        if blockdone.any():
-            gblk[blockdone] += 1
-            kst[blockdone] = 0
-            finished = blockdone & (gblk == bend)
-            keep = ok & ~finished
-        else:
-            keep = ok
-        if not keep.all():
-            lane = lane[keep]
-            bp = bp[keep]
-            gblk = gblk[keep]
-            kst = kst[keep]
-            pred = pred[keep]
-            base = base[keep]
-            nmax = nmax[keep]
-            bend = bend[keep]
+        bp, k, g2, pos0, bend, gend, lane = S
+        pk = (W[bp >> 3] >> (16 - (bp & 7))) & 0xFFFF
+        idx = tsel[g2 + (k > 0)] + pk
+        nb = NB[idx]
+        ko = k + OFF[idx]
+        C[pos0 + ko] = VAL[idx]
+        bp += nb
+        k += KA[idx]
+        if not nb.all():
+            _slow_symbols(W, F, C, S, idx, nb == 0, ko)
+        done = k >> 6  # 1 once the block's last coefficient is decoded
+        g2 += done << 1
+        pos0 += done * _STRIDE
+        k &= done - 1
+        live = (ko <= 63) & (bp <= bend)
+        if not live.all():
+            failed[lane[~live]] = True
+            live &= g2 < gend
+            S = S[:, live]
+        elif (g2 >= gend).any():
+            S = S[:, g2 < gend]
     else:
-        # step bound hit: whatever is still active did not terminate
-        if lane.size:
-            failed[lane] = True
+        failed[S[6]] = True  # step bound hit: never terminated
     return failed
+
+
+def _slow_symbols(W, F, C, S, idx, slow, ko) -> None:
+    """Masked slow branch for the lanes whose fused entry is 0: an
+    invalid code, or code + magnitude longer than the 16-bit peek. Decode
+    the symbol the serial way (packed LUT, second window read for the
+    magnitude) and apply it in place; ``ko`` takes the range-check /
+    write offset, set past 63 on invalid codes so the lane fails."""
+    s = np.flatnonzero(slow)
+    bp, k, pos0 = S[0, s], S[1, s], S[3, s]
+    e = F[_LUT, idx[s]]
+    ln = e >> 8
+    sym = e & 0xFF
+    isdc = k == 0
+    size = np.where(isdc, sym, sym & 0xF)
+    run = np.where(isdc, 0, sym >> 4)
+    bad = (ln == 0) | (size > 16)  # serial: invalid code / wide shift
+    p2 = bp + ln
+    sz = np.clip(size, 1, 16)
+    mv = (W[p2 >> 3] >> (32 - (p2 & 7) - sz)) & ((1 << sz) - 1)
+    ext = np.where(mv >= (1 << (sz - 1)), mv, mv - (1 << sz) + 1)
+    kk = k + run
+    C[pos0 + kk] = np.where(size > 0, ext, 0)
+    S[0, s] = p2 + size
+    S[1, s] = kk + 1
+    ko[s] = np.where(bad, 64, kk)

@@ -225,6 +225,41 @@ def ahash64(img: np.ndarray) -> int:
     return val & ((1 << 63) - 1)
 
 
+def ahash64_batch(imgs) -> np.ndarray:
+    """``[ahash64(im) for im in imgs]`` as an int64 array, computed in one
+    pass: every image's 8x8x3 nearest-neighbour samples come out of one
+    fancy index over the concatenated pixels, and the channel means of
+    all of them out of one call. The threshold is summed in ahash64's
+    order: its ``small`` comes out of the fancy index x-major in memory,
+    and a mean over other orders rounds differently on some images and
+    flips bits. Anything but non-empty (h, w, 3) uint8 images goes
+    through ahash64 itself, the single-image authority."""
+    n = len(imgs)
+    if any(
+        im.ndim != 3 or im.shape[2] != 3 or im.dtype != np.uint8
+        or not (im.shape[0] and im.shape[1])
+        for im in imgs
+    ):
+        return np.array([ahash64(im) for im in imgs], dtype=np.int64)
+    if not n:
+        return np.zeros(0, dtype=np.int64)
+    h = np.array([im.shape[0] for im in imgs], dtype=np.int64)
+    w = np.array([im.shape[1] for im in imgs], dtype=np.int64)
+    off = np.cumsum(3 * h * w) - 3 * h * w
+    g = np.arange(8)
+    ys = g * h[:, None] // 8
+    xs = g * w[:, None] // 8
+    # (image, x, y) cell offsets: x-major, like ahash64's small
+    cell = off[:, None, None] + 3 * (ys[:, None, :] * w[:, None, None]
+                                     + xs[:, :, None])
+    flat = np.concatenate([im.reshape(-1) for im in imgs])
+    small = flat[cell[..., None] + np.arange(3)].mean(axis=3)
+    bits = small > small.reshape(n, 64).mean(axis=1)[:, None, None]
+    bits = bits.transpose(0, 2, 1).reshape(n, 64).astype(np.uint64)
+    val = bits @ (np.uint64(1) << np.arange(64, dtype=np.uint64))
+    return (val & np.uint64((1 << 63) - 1)).astype(np.int64)
+
+
 # ------------------------------------------------------ payload synthesis
 
 def synth_payload(media_ref: str, n_bytes: int = 64) -> bytes:
@@ -509,21 +544,16 @@ def real_decode_batch(payloads: pd.Series) -> pd.DataFrame:
     (BMP / JPEG / PNG / lossless WebP, all pure numpy — see
     ``decode_image``), and derive true dimensions plus a real
     average-hash from the pixels."""
-    n_bytes, fmts, widths, heights, phashes = [], [], [], [], []
     imgs = decode_images_batch(payloads)
-    for p, img in zip(payloads, imgs):
-        n_bytes.append(len(p))
-        fmts.append(detect_format(p))
-        heights.append(img.shape[0])
-        widths.append(img.shape[1])
-        phashes.append(ahash64(img))
     return pd.DataFrame(
         {
-            "n_bytes": np.asarray(n_bytes, dtype=np.int64),
-            "format": np.asarray(fmts, dtype=object),
-            "width": np.asarray(widths, dtype=np.int32),
-            "height": np.asarray(heights, dtype=np.int32),
-            "phash": np.asarray(phashes, dtype=np.int64),
+            "n_bytes": np.asarray([len(p) for p in payloads], dtype=np.int64),
+            "format": np.asarray(
+                [detect_format(p) for p in payloads], dtype=object
+            ),
+            "width": np.asarray([im.shape[1] for im in imgs], dtype=np.int32),
+            "height": np.asarray([im.shape[0] for im in imgs], dtype=np.int32),
+            "phash": ahash64_batch(imgs),
         }
     )
 
@@ -748,14 +778,19 @@ def media_video_frames(
             # container walk first (cheap struct parsing), then ONE
             # batch decode over every sampled frame of the whole Arrow
             # batch — frames are where the pixel work is, so they get
-            # the multi-lane decoder's full width. (On a batch with
-            # multiple corrupt payloads the surviving exception may be
-            # a later container's walk error instead of an earlier
-            # frame's decode error — either way the task fails; the
-            # quarantined variant keeps strict per-payload order.)
+            # the multi-lane decoder's full width. Errors surface in the
+            # order of the loop "walk payload, decode its frames": the
+            # walk stops at the first corrupt container, the frames of
+            # the payloads before it decode (raising the first bad
+            # frame), and only then does the walk error propagate.
             refs, fidx, sidx, nsrc, frames = [], [], [], [], []
+            walk_error = None
             for r, p in zip(pdf["media_ref"], pdf["payload"]):
-                payload_frames = avi_frames(p)
+                try:
+                    payload_frames = avi_frames(p)
+                except Exception as exc:
+                    walk_error = exc
+                    break
                 n = len(payload_frames)
                 for i, src in enumerate(sample_indices(n, n_frames)):
                     refs.append(r)
@@ -766,6 +801,8 @@ def media_video_frames(
             imgs = _batch_decode_list(frames, decoder)
             if imgs is None:
                 imgs = [decoder(f) for f in frames]
+            if walk_error is not None:
+                raise walk_error
             hs = [img.shape[0] for img in imgs]
             ws = [img.shape[1] for img in imgs]
             yield pd.DataFrame(

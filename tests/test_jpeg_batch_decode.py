@@ -1,14 +1,16 @@
 """The multi-lane batch JPEG decoder must be pixel-exact AND
-exception-class-exact against the serial decoder it accelerates (r6
-optimization: decode_jpeg_batch keeps one lane of state per payload and
-decodes one Huffman symbol per active lane per numpy step; anything the
-fast path does not model falls back to decode_jpeg, which stays the
-authority on both pixels and errors)."""
+exception-exact against the serial decoder it accelerates
+(decode_jpeg_batch keeps one lane of state per payload and decodes one
+Huffman symbol per active lane per numpy step through fused per-table
+lookups; anything the fast path does not model falls back to
+decode_jpeg, which stays the authority on both pixels and errors)."""
 
 import numpy as np
 
 from dd_ops_ocr_spark.operators import jpeg as J
 from dd_ops_ocr_spark.operators.multimodal import (
+    ahash64,
+    ahash64_batch,
     decode_images_batch,
     synth_jpeg_payload,
 )
@@ -92,3 +94,98 @@ def test_decode_images_batch_raises_first_in_order():
         raise AssertionError("expected EOFError")
     except EOFError:
         pass  # the FIRST failing payload's class, not the later one
+
+
+def _variants(base, n, seed):
+    """Seeded damaged copies of ``base`` entries: every third one
+    truncated at a random byte, the rest with 1-3 random bit flips."""
+    rng = np.random.default_rng(seed)
+    out = []
+    for t in range(n):
+        p = bytearray(base[int(rng.integers(len(base)))])
+        if t % 3 == 0:
+            out.append(bytes(p[: int(rng.integers(2, len(p)))]))
+            continue
+        for _ in range(int(rng.integers(1, 4))):
+            p[int(rng.integers(len(p)))] ^= 1 << int(rng.integers(8))
+        out.append(bytes(p))
+    return out
+
+
+def _assert_parity(payloads, got):
+    """Pixels and dtype on success, exception class and message on
+    failure; returns the number of failing payloads."""
+    n_err = 0
+    for p, g in zip(payloads, got):
+        try:
+            want = J.decode_jpeg(p)
+        except Exception as exc:
+            n_err += 1
+            assert type(g) is type(exc) and str(g) == str(exc), (exc, g)
+            continue
+        assert isinstance(g, np.ndarray), g
+        assert g.dtype == want.dtype and np.array_equal(g, want)
+    return n_err
+
+
+def test_batch_decode_fuzz_parity(monkeypatch):
+    slow = []
+    real_slow = J._slow_symbols
+
+    def counting(W, F, C, S, idx, mask, ko):
+        slow.append(int(mask.sum()))
+        return real_slow(W, F, C, S, idx, mask, ko)
+
+    monkeypatch.setattr(J, "_slow_symbols", counting)
+    base = _mixed_payloads() + [
+        synth_jpeg_payload(f"media_{i:06d}.bin") for i in range(20)
+    ]
+    # clean streams reach the slow branch only through code + magnitude
+    # longer than 16 bits (q100 noise has AC coefficients >= 256)
+    assert _assert_parity(base, J.decode_jpeg_batch(base)) == 0
+    assert sum(slow) > 0
+    damaged = _variants(base, 240, seed=20261017)
+    n_err = _assert_parity(damaged, J.decode_jpeg_batch(damaged))
+    assert 0 < n_err < len(damaged)
+
+
+def test_non_baseline_payloads_skip_the_header_parse(monkeypatch):
+    """The marker sniff sends SOF2 and nonzero-DRI payloads straight to
+    the serial decoder: the batch header parse never sees them."""
+    parsed = []
+    real_parse = J._parse_baseline_for_batch
+
+    def counting(payload):
+        parsed.append(payload)
+        return real_parse(payload)
+
+    monkeypatch.setattr(J, "_parse_baseline_for_batch", counting)
+    monkeypatch.setattr(J, "_HDR_CACHE", {})
+    rng = np.random.default_rng(5)
+    px = rng.integers(0, 256, (17, 23, 3), dtype=np.uint8)
+    prog = J.encode_jpeg_progressive(px, quality=95, subsampling="4:2:0")
+    base = J.encode_jpeg(px, quality=95, subsampling="4:2:0")
+    dri = base[:2] + b"\xff\xdd\x00\x04\x00\x01" + base[2:]
+    payloads = [prog, dri, base]
+    _assert_parity(payloads, J.decode_jpeg_batch(payloads))
+    assert parsed == [base]
+
+
+def test_ahash64_batch_matches_ahash64():
+    rng = np.random.default_rng(11)
+    imgs = [J.decode_jpeg(p) for p in _mixed_payloads()]  # 1x1 .. 69x69
+    imgs += [
+        np.zeros((1, 1, 3), np.uint8),
+        rng.integers(0, 256, (70, 70, 3), dtype=np.uint8),
+        rng.integers(0, 256, (40, 90, 3), dtype=np.uint8)[::3, 1::2],
+    ]
+    # seed-1 benchmark payloads whose threshold is a float tie: summing
+    # the 8x8 cells in any order but ahash64's flips a bit
+    imgs += [
+        J.decode_jpeg(synth_jpeg_payload(ref))
+        for ref in ("img_10040681_3_123", "img_10096182_1_381")
+    ]
+    got = ahash64_batch(imgs)
+    assert got.dtype == np.int64
+    assert got.tolist() == [ahash64(im) for im in imgs]
+    assert ahash64_batch([]).tolist() == []

@@ -337,6 +337,39 @@ def test_media_video_quarantine_all_corrupt_batch_still_quarantines(spark):
         ).collect()
 
 
+
+def test_media_video_frames_raises_in_sequential_payload_order(spark):
+    """A corrupt frame in payload 0 and a corrupt container in payload 1
+    of one Arrow batch: the loop "walk payload, decode its frames" hits
+    payload 0's frame error first, so that is what the task raises."""
+    import pandas as pd
+    import pytest as _pytest
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PythonException
+
+    from dd_ops_ocr_spark.operators.jpeg import encode_jpeg
+    from dd_ops_ocr_spark.operators.multimodal import (
+        _synth_pixels,
+        media_video_frames,
+    )
+    from dd_ops_ocr_spark.operators.video import encode_avi_mjpeg
+
+    px = _synth_pixels("vo_ref")
+    h, w, _ = px.shape
+    frame = encode_jpeg(px, quality=95, subsampling="4:2:0")
+    bad_frame = encode_avi_mjpeg([frame[: len(frame) // 2]], w, h, fps=10)
+    good = encode_avi_mjpeg([frame], w, h, fps=10)
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {"media_ref": ["v0", "v1"], "payload": [bad_frame, good[:10]]}
+        )
+    ).coalesce(1)
+    with _pytest.raises((Py4JJavaError, PythonException)) as err:
+        media_video_frames(df).collect()
+    msg = str(err.value)
+    assert "EOFError: truncated JPEG scan" in msg  # payload 0's frame
+    assert "not an AVI payload" not in msg
+
 # ------------------------------------------------- inter-frame delta codec
 
 def _shifted_frames(n: int, seed: int = 3, shape=(24, 16)):
