@@ -414,11 +414,12 @@ def native_decode_batch(payloads) -> "pd.DataFrame":  # noqa: F821
     from dd_ops_ocr_spark.native import webp as nwebp
     from dd_ops_ocr_spark.operators.multimodal import (
         ahash64_batch,
+        ahash64_cells,
         decode_image,
         detect_format,
     )
 
-    n_bytes, fmts, widths, heights, imgs = [], [], [], [], []
+    n_bytes, fmts, widths, heights, cells = [], [], [], [], []
     for p in payloads:
         fmt = detect_format(p)
         if fmt == "jpeg" and available():
@@ -431,14 +432,14 @@ def native_decode_batch(payloads) -> "pd.DataFrame":  # noqa: F821
         fmts.append(fmt)
         heights.append(img.shape[0])
         widths.append(img.shape[1])
-        imgs.append(img)
+        cells.append(ahash64_cells(img))  # the image itself is dropped
     return pd.DataFrame(
         {
             "n_bytes": np.asarray(n_bytes, dtype=np.int64),
             "format": np.asarray(fmts, dtype=object),
             "width": np.asarray(widths, dtype=np.int32),
             "height": np.asarray(heights, dtype=np.int32),
-            "phash": ahash64_batch(imgs),
+            "phash": ahash64_batch(cells),
         }
     )
 

@@ -24,17 +24,20 @@ The decoder is throughput-shaped: one 16-bit-LUT lookup per Huffman
 symbol over a numpy-unstuffed bitstream, coefficients batched into a
 single einsum IDCT per component (~4 Mpx/s/core on q95 4:2:0 document
 pages — bench.py records the current number). ``decode_jpeg_batch``
-decodes many baseline payloads side by side through a fused table per
-Huffman table: one lookup on a 16-bit peek yields the bits consumed
-(code plus magnitude), the zigzag advance, the write offset and the
-sign-extended coefficient, so one numpy step decodes one symbol for
-every payload of the chunk. Codec injection
+decodes many baseline payloads side by side through a run table per
+Huffman table: one ``searchsorted`` of the 16-bit peeks finds each
+payload's code run, which yields the bits consumed (code plus
+magnitude), the zigzag advance, the write offset and the sign-extended
+coefficient, so one numpy step decodes one symbol for every payload of
+the chunk; a table costs a few KB however many distinct tables a corpus
+carries. Codec injection
 (multimodal.py seam) remains available for native decoders. Everything
 here is from the public JPEG spec (ITU T.81) + JFIF.
 """
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -683,8 +686,8 @@ def _build_decode_lut(bits: list[int], vals: list[int]) -> list[int]:
 
 def _packed_lut(bits: list[int], vals: list[int]) -> np.ndarray:
     """``_build_decode_lut``'s packed LUT as an int64 numpy array,
-    unmemoized: the serial decoder's list and the batch decoder's fused
-    tables are built from it, each memoized by its own cache."""
+    unmemoized: the serial decoder's list is built from it, and the
+    batch decoder's run tables reproduce it run by run."""
     arr = np.zeros(1 << 16, dtype=np.int64)
     for sym, (code, ln) in _canonical_codes(bits, vals).items():
         lo = code << (16 - ln)
@@ -692,53 +695,85 @@ def _packed_lut(bits: list[int], vals: list[int]) -> np.ndarray:
     return arr
 
 
+def _scan_windows(parts: list[bytes]):
+    """The entropy-coded segments of many scans at once, with no
+    per-byte Python; ``parts[j]`` is a payload from its scan's first
+    byte on. Each scan ends at its first marker other than RSTn and
+    splits at its RSTn markers into segments. T.81 B.1.1.2 lets any
+    marker, RSTn included, follow 0xFF fill bytes: an FF followed by FF
+    is fill, not a terminator, and the fill before a marker is not
+    entropy data (data FFs are always stuffed as FF 00, so a bare FF
+    right before a marker can only be fill). Each segment is unstuffed
+    (FF 00 -> FF) and packed as 32-bit sliding windows, all segments
+    back to back with 4 zero bytes after each (8 after the last):
+    ``W[w0[i] + b]`` holds the 32 bits starting at byte b of segment i,
+    so a decode loop reads any <= 16-bit code or magnitude with one
+    index + shift + mask, and the ``count[i] + 1`` windows from
+    ``w0[i]`` are the segment's bytes with a zero tail. Returns (W, w0,
+    count, seg_part, end): segment i belongs to part ``seg_part[i]``
+    (segments in order), and ``end[j]`` is the offset in part j of the
+    0xFF of its terminating marker (the part's length when there is
+    none)."""
+    n = len(parts)
+    size = np.array([len(q) for q in parts], dtype=np.int64)
+    o = np.cumsum(size) - size
+    # one pad byte so the byte after every FF is addressable
+    buf = b"".join(parts) + b"\0"
+    A = np.frombuffer(buf, dtype=np.uint8)
+    ff = np.flatnonzero(A[:-1] == 0xFF)
+    ff_part = np.searchsorted(o, ff, side="right") - 1
+    last = ff + 1 < o[ff_part] + size[ff_part]  # never a part's last byte
+    ff, ff_part = ff[last], ff_part[last]
+    nxt = A[ff + 1]
+    rst = (nxt >= 0xD0) & (nxt <= 0xD7)
+    term = ~(rst | (nxt == 0x00) | (nxt == 0xFF))
+    end = o + size
+    t_part = ff_part[term]
+    first = np.flatnonzero(np.diff(t_part, prepend=-1))
+    end[t_part[first]] = ff[term][first]
+    rst &= ff < end[ff_part]
+    # segments run from the scan start or an RST's code byte + 1 to the
+    # next RST or the scan end: sorted, starts and ends pair up in order
+    s0, s1, seg_part = o, end.copy(), np.arange(n)
+    if rst.any():
+        s0 = np.sort(np.concatenate([o, ff[rst] + 2]))
+        s1 = np.sort(np.concatenate([ff[rst], end]))
+        seg_part = np.repeat(
+            seg_part, 1 + np.bincount(ff_part[rst], minlength=n)
+        )
+    # trim the fill FFs padding up to a marker (rare)
+    for i in np.flatnonzero((s1 > s0) & (A[s1 - 1] == 0xFF)):
+        while s1[i] > s0[i] and A[s1[i] - 1] == 0xFF:
+            s1[i] -= 1
+    raw = s1 - s0
+    view = memoryview(buf)
+    pieces = []
+    for i, j in zip(s0.tolist(), s1.tolist()):
+        pieces += (view[i:j], b"\0\0\0\0")
+    B = np.frombuffer(b"".join(pieces) + b"\0\0\0\0", dtype=np.uint8)
+    # unstuff: every FF inside a segment drops the byte after it
+    seg = np.searchsorted(s0, ff, side="right") - 1
+    inside = ff + 1 < s1[seg]
+    seg = seg[inside]
+    at = np.cumsum(raw + 4) - (raw + 4)  # segment starts in B
+    B = np.delete(B, ff[inside] + 1 - s0[seg] + at[seg])
+    count = raw - np.bincount(seg, minlength=raw.size)
+    W = np.ndarray((B.size - 3,), ">u4", B, 0, (1,)).astype(np.int64)
+    return W, np.cumsum(count + 4) - (count + 4), count, seg_part, end - o
+
+
 def _entropy_segments(payload: bytes, pos: int) -> tuple[list[list[int]], int]:
-    """RST-delimited entropy segments starting at ``pos``, plus the
+    """RST-delimited entropy segments of the scan starting at ``pos``,
+    each as the list of its 32-bit windows (``_scan_windows``), plus the
     absolute index of the terminating marker's 0xFF (so multi-scan
-    progressive parsing can resume at the next marker).
-
-    Each segment is unstuffed (FF 00 -> FF) with vectorized numpy — no
-    per-byte Python — and packed as a 32-bit sliding-window array:
-    ``seg[i]`` holds the 32 bits beginning at byte offset ``i`` (tail
-    zero-padded), so the decode loop reads any <=16-bit code or <=16-bit
-    magnitude with one index + shift + mask. Segments come back as plain
-    lists: scalar list indexing beats numpy scalar indexing ~5x in the
-    per-symbol loop. (``_chunk_windows`` is the batch decoder's
-    whole-chunk twin.)"""
-    arr = np.frombuffer(payload, dtype=np.uint8)
-    ff = np.flatnonzero(arr[pos:-1] == 0xFF) + pos
-    nxt = arr[ff + 1]
-    is_stuff = nxt == 0x00
-    # T.81 B.1.1.2: any marker (incl. RSTn) may be preceded by 0xFF fill
-    # bytes — an FF followed by FF is padding, not a scan terminator.
-    is_fill = nxt == 0xFF
-    is_rst = (nxt >= 0xD0) & (nxt <= 0xD7)
-    term = ff[~(is_stuff | is_rst | is_fill)]
-    end = int(term[0]) if term.size else len(arr)
-    rsts = ff[is_rst & (ff < end)]
-
-    def _trim_fill(e: int) -> int:
-        # exclude the fill-FF run padding up to this marker from the
-        # entropy data (data FFs are always FF 00 stuffed pairs, so a
-        # bare FF directly before a marker can only be padding)
-        while e > pos and arr[e - 1] == 0xFF:
-            e -= 1
-        return e
-
-    starts = [pos] + [int(r) + 2 for r in rsts]
-    ends = [_trim_fill(int(r)) for r in rsts] + [_trim_fill(end)]
-    segs = []
-    for s0, e0 in zip(starts, ends):
-        seg = arr[s0:e0]
-        drop = np.flatnonzero(seg[:-1] == 0xFF) + 1
-        if drop.size:
-            keep = np.ones(len(seg), dtype=bool)
-            keep[drop] = False
-            seg = seg[keep]
-        b = np.concatenate([seg, np.zeros(4, dtype=np.uint8)]).astype(np.int64)
-        word = (b[:-3] << 24) | (b[1:-2] << 16) | (b[2:-1] << 8) | b[3:]
-        segs.append(word.tolist())
-    return segs, end
+    progressive parsing can resume at the next marker). Plain lists:
+    scalar list indexing beats numpy scalar indexing ~5x in the
+    per-symbol loop."""
+    W, w0, count, _, end = _scan_windows([payload[pos:]])
+    segs = [
+        W[a: a + c + 1].tolist() for a, c in zip(w0.tolist(), count.tolist())
+    ]
+    return segs, pos + int(end[0])
 
 
 def _decode_scan(payload, pos, w, h, comps, qts, huff_dc, huff_ac,
@@ -1266,17 +1301,22 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
 # the number of numpy calls, not by arithmetic, so everything is shaped
 # to run once per step or once per chunk:
 #
+#   * the entropy windows of the whole chunk come from one
+#     ``_scan_windows`` call, the serial decoder's own segment format;
 #   * the entropy step is a fixed, branch-free sequence of whole-chunk
-#     calls: one fused-table gather (``_fused_table``) turns a 16-bit
-#     peek into the bits consumed (code + magnitude), the zigzag advance,
-#     the write offset and the already-extended coefficient, so DC, AC,
-#     EOB and ZRL symbols share one update; the few symbols the table
-#     cannot hold take a masked slow branch with the serial formula;
+#     calls: one ``searchsorted`` into the chunk's run tables
+#     (``_run_table``) turns a 16-bit peek into the bits consumed (code
+#     + magnitude), the zigzag advance, the write offset and the
+#     already-extended coefficient, so DC, AC, EOB and ZRL symbols share
+#     one update; the few symbols the peek cannot hold take a masked
+#     slow branch with the serial formula. Run tables are a few KB, so
+#     neither per-image Huffman tables nor a chunk of them cost memory;
 #   * DC diffs are written as decoded and become predictions after the
 #     loop, by one cumulative sum per (lane, component);
-#   * dequant + IDCT run once over the chunk, upsampling + colour
-#     conversion once per sampling pattern at MCU granularity, and each
-#     lane only reshapes and crops its MCUs.
+#   * dequant + IDCT, upsampling + colour conversion run once per
+#     sampling pattern at MCU granularity, in passes of at most
+#     ``_TAIL_BLOCKS`` blocks so their temporaries stay small however
+#     large the images; each lane only reshapes and crops its MCUs.
 #
 # Lanes that hit anything the fast path does not model (or any malformed
 # stream) are re-decoded by the serial decoder, which stays the authority
@@ -1434,16 +1474,62 @@ def _parse_baseline_for_batch(payload: bytes):
         return None
 
 
-_FUSED_CACHE: dict[tuple, np.ndarray] = {}
+class _Memo(dict):
+    """A memo bounded by bytes: it forgets everything once its entries
+    pass ``budget`` bytes, as ``put``'s callers size them. The batch
+    decoder's memos only need to outlive runs of payloads that repeat a
+    few encoder settings; a corpus of one-off headers or tables churns
+    through them without growing them."""
 
-# rows of a fused table (see _fused_table)
-_NB, _KA, _OFF, _VAL, _LUT = range(5)
+    def __init__(self, budget: int):
+        super().__init__()
+        self.budget = budget
+        self.nbytes = 0
+
+    def put(self, key, value, nbytes: int):
+        if self.nbytes + nbytes > self.budget:
+            self.clear()
+            self.nbytes = 0
+        self[key] = value
+        self.nbytes += nbytes
+        return value
 
 
-def _fused_table(tc: int, bits: list[int], vals: list[int]) -> np.ndarray:
-    """(5, 65536) int64 fused Huffman table for the batch entropy step,
-    indexed by the next 16 bits of the stream. Per peek:
+_RUN_CACHE = _Memo(8 << 20)  # hundreds of run tables
 
+# rows of a run table (see _run_table)
+_END, _NB, _KA, _OFF, _VOFF, _LUT = range(6)
+
+
+@functools.lru_cache(maxsize=None)
+def _val_rows() -> tuple[np.ndarray, np.ndarray]:
+    """(values, base), shared by every run table. For a code of length
+    ln with a magnitude of s bits (ln + s <= 16), the 2**(16 - ln) peeks
+    that start with the code read each of the 2**s magnitudes in turn,
+    2**(16 - ln - s) times; row ``base[ln, s]`` of ``values`` holds the
+    sign-extended values of those peeks in order. Slot 0 starts 65536
+    zeros, the row of every run that writes no value. ~2 MB of int16:
+    a fast magnitude has at most 15 bits."""
+    rows = [np.zeros(1 << 16, dtype=np.int16)]
+    base = np.zeros((17, 17), dtype=np.int64)
+    at = 1 << 16
+    for ln in range(1, 17):
+        for size in range(17 - ln):
+            m = np.arange(1 << size)
+            ext = m - (m < (1 << size) >> 1) * ((1 << size) - 1)
+            rows.append(np.repeat(ext, 1 << (16 - ln - size)).astype(np.int16))
+            base[ln, size] = at
+            at += 1 << (16 - ln)
+    return np.concatenate(rows), base
+
+
+def _run_table(tc: int, bits: list[int], vals: list[int]) -> np.ndarray:
+    """(6, runs) int64 run table of a Huffman table for the batch
+    entropy step. The 16-bit peeks at the next stream bits split into
+    runs: each code's 2**(16 - length) peeks, and the invalid gaps
+    between codes. Per run:
+
+    * ``_END`` the exclusive end of the run's peeks;
     * ``_NB``  bits consumed, code plus magnitude; 0 where the code is
       invalid or code + magnitude exceeds 16 bits (slow branch);
     * ``_KA``  zigzag advance: 1 for DC, run + 1 for AC, 16 for ZRL,
@@ -1451,48 +1537,51 @@ def _fused_table(tc: int, bits: list[int], vals: list[int]) -> np.ndarray:
     * ``_OFF`` write offset from k, which is also the range-check offset
       (the serial "AC index out of range" fires when k + run > 63); EOB,
       ZRL and DC write their 0 / diff at k itself;
-    * ``_VAL`` the sign-extended coefficient (the DC diff for DC
-      tables, the AC value otherwise);
-    * ``_LUT`` the packed (length << 8) | symbol entry the slow branch
-      decodes with.
+    * ``_VOFF`` where the run's values start in ``_val_rows``, less the
+      run's first peek: the sign-extended coefficient (the DC diff for
+      DC tables) of peek ``pk`` is ``values[VOFF + pk]``, 0 for runs of
+      the slow branch;
+    * ``_LUT`` the packed (length << 8) | symbol entry of
+      ``_packed_lut``, which the slow branch decodes with.
 
-    Memoized on (table class, table bytes) and bounded like the serial
-    decoder's LUT cache."""
+    At most 2 * 256 + 1 runs, so a table costs a few KB and a few numpy
+    calls however many distinct tables a corpus carries. Memoized on
+    (table class, table bytes)."""
     key = (tc, tuple(bits), tuple(vals))
-    tbl = _FUSED_CACHE.get(key)
-    if tbl is None:
-        lut = _packed_lut(bits, vals)
-        ln = lut >> 8
-        sym = lut & 0xFF
-        # per-symbol fields, then one gather each
-        s = np.arange(256, dtype=np.int64)
-        if tc == 0:
-            size_s, ka_s, off_s = s, np.ones_like(s), np.zeros_like(s)
-        else:
-            size_s, off_s = s & 0xF, s >> 4
-            ka_s = off_s + 1
-            ka_s[0x00], ka_s[0xF0] = 64, 16  # EOB, ZRL
-            off_s[0x00] = off_s[0xF0] = 0
-        size = size_s[sym]
-        nb = ln + size
-        fast = (ln > 0) & (nb <= 16)
-        nb *= fast
-        size *= fast
-        # the magnitude bits follow the code inside the 16-bit peek
-        mag = (np.arange(1 << 16, dtype=np.int64) >> (16 - nb)) & (
-            (1 << size) - 1
-        )
-        half = (1 << size) >> 1
-        val = mag - (mag < half) * ((1 << size) - 1)
-        tbl = np.stack([nb, ka_s[sym] * fast, off_s[sym] * fast, val, lut])
-        if len(_FUSED_CACHE) > 64:
-            _FUSED_CACHE.clear()
-        _FUSED_CACHE[key] = tbl
-    return tbl
+    tbl = _RUN_CACHE.get(key)
+    if tbl is not None:
+        return tbl
+    codes = sorted(
+        (code << (16 - ln), ln, sym)
+        for sym, (code, ln) in _canonical_codes(bits, vals).items()
+    )
+    lo, ln, sym = np.array(codes, dtype=np.int64).reshape(-1, 3).T
+    # run 2j is the gap before code j, run 2j + 1 the code, the last run
+    # the gap after the last code; gaps keep length and symbol 0
+    ends = np.full(2 * len(codes) + 1, 1 << 16, dtype=np.int64)
+    ends[0:-1:2] = np.minimum(lo, 1 << 16)
+    ends[1::2] = np.minimum(lo + (1 << (16 - ln)), 1 << 16)
+    rl = np.zeros_like(ends)
+    rs = np.zeros_like(ends)
+    rl[1::2], rs[1::2] = ln, sym
+    if tc == 0:
+        size, ka, off = rs, np.ones_like(rs), np.zeros_like(rs)
+    else:
+        size, off = rs & 0xF, rs >> 4
+        ka = off + 1
+        ka[rs == 0x00], ka[rs == 0xF0] = 64, 16  # EOB, ZRL
+        off[(rs == 0x00) | (rs == 0xF0)] = 0
+    nb = rl + size
+    fast = (rl > 0) & (nb <= 16)
+    voff = _val_rows()[1][rl * fast, size * fast] - np.r_[0, ends[:-1]]
+    tbl = np.stack(
+        [ends, nb * fast, ka * fast, off * fast, voff, (rl << 8) | rs]
+    )
+    return _RUN_CACHE.put(key, tbl, tbl.nbytes)
 
 
-_BATCH_CHUNK = 2048  # lanes per inner batch (bounds W/C/IDCT memory)
-_STRIDE = 80  # C row width: 64 coefficients + room for a k + 15 write
+_BATCH_CHUNK = 2048  # lanes per inner batch (bounds W and C memory)
+_TAIL_BLOCKS = 8192  # blocks per dequant / IDCT / colour pass
 
 
 def decode_jpeg_batch(payloads) -> list:
@@ -1511,66 +1600,70 @@ def decode_jpeg_batch(payloads) -> list:
             out[i] = _decode_scalar(p)
         else:
             lanes.append((i, tpl, start))
+    # lanes sharing a signature are contiguous, so every per-block
+    # schedule is one tile per signature run
+    lanes.sort(key=lambda ln: id(ln[1][4]))
     for lo in range(0, len(lanes), _BATCH_CHUNK):
         _decode_lane_chunk(payloads, lanes[lo: lo + _BATCH_CHUNK], out)
     return out
 
 
-_HDR_CACHE: dict[bytes, tuple | None] = {}
-_SIG_CACHE: dict[tuple, tuple] = {}
+_HDR_CACHE = _Memo(16 << 20)
+_SIG_CACHE = _Memo(4 << 20)
 
 
 def _lane_template(p: bytes, scan_start: int):
     """(w, h, mcus_x, mcus_y, signature) for a payload's HEADER, or None
     when the header needs the serial decoder. The signature holds what
     lanes share a chunk-wide pass on — sampling pattern, per-MCU
-    component ids, fused DC / AC tables and zigzag quant tables per
-    component — and is interned, so lanes group by identity. Both are
-    memoized on raw bytes: a corpus re-uses a handful of encoder
-    settings, so a header is parsed once and per-lane prep is one dict
-    hit."""
+    component ids, the keys of the DC / AC run tables and the zigzag
+    quant tables per component — and is interned, so lanes group by
+    identity. It holds table keys, not tables: run tables live only in
+    their own memo. Both are memoized on raw bytes: a corpus re-uses a
+    handful of encoder settings, so a header is parsed once and per-lane
+    prep is one dict hit."""
     hdr = p[:scan_start]
     if hdr in _HDR_CACHE:
         return _HDR_CACHE[hdr]
     ctx = _parse_baseline_for_batch(p)
     tpl = None
+    size = len(hdr)
     if ctx is not None and ctx["scan_start"] == scan_start:
         comps = ctx["comps"]
         pattern = tuple((c["h"], c["v"]) for c in comps)
-        dc = [ctx["huff"][(0, c["td"])] for c in comps]
-        ac = [ctx["huff"][(1, c["ta"])] for c in comps]
-        qts = [ctx["qts"][c["tq"]] for c in comps]
-        key = (
-            pattern, tuple((tuple(b), tuple(v)) for b, v in dc + ac),
-            b"".join(q.tobytes() for q in qts),
+        dc = tuple(
+            (0, tuple(b), tuple(v))
+            for b, v in (ctx["huff"][(0, c["td"])] for c in comps)
         )
+        ac = tuple(
+            (1, tuple(b), tuple(v))
+            for b, v in (ctx["huff"][(1, c["ta"])] for c in comps)
+        )
+        qts = [ctx["qts"][c["tq"]] for c in comps]
+        key = (pattern, dc + ac, b"".join(q.tobytes() for q in qts))
+        # table tuples at 8 bytes a slot, plus the quant tables
+        sig_size = 8 * sum(len(b) + len(v) for _, b, v in dc + ac) + 2048
+        size += sig_size
         sig = _SIG_CACHE.get(key)
         if sig is None:
-            sig = (
+            sig = _SIG_CACHE.put(key, (
                 pattern,
                 np.repeat(np.arange(len(comps)), [h * v for h, v in pattern]),
-                [_fused_table(0, *t) for t in dc],
-                [_fused_table(1, *t) for t in ac],
-                [q[ZZ] for q in qts],
-            )
-            if len(_SIG_CACHE) > 256:
-                _SIG_CACHE.clear()
-            _SIG_CACHE[key] = sig
+                dc, ac, [q[ZZ] for q in qts],
+            ), sig_size)
         hmax = max(h for h, _ in pattern)
         vmax = max(v for _, v in pattern)
         tpl = (
             ctx["w"], ctx["h"], -(-ctx["w"] // (8 * hmax)),
             -(-ctx["h"] // (8 * vmax)), sig,
         )
-    if len(_HDR_CACHE) > 4096:
-        _HDR_CACHE.clear()
-    _HDR_CACHE[hdr] = tpl
-    return tpl
+    # an entry keeps its signature alive, so it is sized with it
+    return _HDR_CACHE.put(hdr, tpl, size)
 
 
 def _row(arr: np.ndarray, seen: dict[int, int], items: list) -> int:
     """Row id of ``arr`` in a chunk-wide stack, appending it on first
-    sight (keyed by identity: signatures share cached tables)."""
+    sight (keyed by identity: signatures share cached quant tables)."""
     r = seen.get(id(arr))
     if r is None:
         r = seen[id(arr)] = len(items)
@@ -1578,68 +1671,22 @@ def _row(arr: np.ndarray, seen: dict[int, int], items: list) -> int:
     return r
 
 
-def _chunk_windows(payloads, lanes):
-    """``_entropy_segments`` for a whole chunk at once: find each
-    lane's scan end, unstuff, and pack the 32-bit windows of all lanes
-    back to back. Returns (W, bit0, bitend, single) over the lanes whose
-    scan is one segment (``single``; a restart marker inside the scan
-    sends a lane to the serial decoder): a lane's windows start at bit
-    ``bit0`` of ``W`` and it may consume bits up to ``bitend`` (its
-    window count, in bits). Zero padding follows each lane's windows, so
-    a read past them stays in bounds."""
-    parts = [payloads[i][s:] for i, _, s in lanes]
-    n = len(parts)
-    size = np.array([len(q) for q in parts], dtype=np.int64)
-    o = np.cumsum(size) - size
-    # one pad byte so the byte after every FF is addressable
-    A = np.frombuffer(b"".join(parts) + b"\0", dtype=np.uint8)
-    ff = np.flatnonzero(A[:-1] == 0xFF)
-    ff_lane = np.searchsorted(o, ff, side="right") - 1
-    last = ff + 1 < o[ff_lane] + size[ff_lane]  # never a payload's last byte
-    ff, ff_lane = ff[last], ff_lane[last]
-    nxt = A[ff + 1]
-    rst = (nxt >= 0xD0) & (nxt <= 0xD7)
-    term = ~(rst | (nxt == 0x00) | (nxt == 0xFF))
-    end = o + size
-    t_lane, t_first = np.unique(ff_lane[term], return_index=True)
-    end[t_lane] = ff[term][t_first]
-    single = np.ones(n, dtype=bool)
-    single[ff_lane[rst][ff[rst] < end[ff_lane[rst]]]] = False
-    # fill FFs padding up to the marker are not entropy data (rare)
-    for j in np.flatnonzero((end > o) & (A[end - 1] == 0xFF)):
-        while end[j] > o[j] and A[end[j] - 1] == 0xFF:
-            end[j] -= 1
-    seg = np.where(single, end - o, 0)
-    K = np.frombuffer(
-        b"".join(q[:m] for q, m in zip(parts, seg.tolist())), dtype=np.uint8
-    )
-    # unstuff: every FF inside a segment drops the byte after it
-    inside = ff + 1 < o[ff_lane] + seg[ff_lane]
-    d_lane = ff_lane[inside]
-    K = np.delete(K, ff[inside] + 1 - o[d_lane] + (np.cumsum(seg) - seg)[d_lane])
-    count = seg - np.bincount(d_lane, minlength=n)
-    pad = np.full(n, 4)
-    pad[-1] = 8
-    B = np.insert(K, np.repeat(np.cumsum(count), pad), 0)
-    W = (
-        np.ascontiguousarray(np.lib.stride_tricks.sliding_window_view(B, 4))
-        .view(">u4")[:, 0]
-        .astype(np.int64)
-    )
-    start = (np.cumsum(count + 4) - (count + 4))[single]
-    return W, 8 * start, 8 * (start + count[single] + 1), single
-
-
 def _decode_lane_chunk(payloads, lanes, out) -> None:
-    """Decode one chunk of eligible lanes: fused entropy step, DC
-    predictions, chunk-wide dequant + IDCT, per-pattern colour
-    conversion. Results land in ``out`` positionally; failed lanes are
-    re-decoded serially (the serial decoder is the authority on
-    exceptions)."""
-    # lanes sharing a signature are contiguous, so every per-block
-    # schedule is one tile per signature run
-    lanes = sorted(lanes, key=lambda ln: id(ln[1][4]))
-    W, bit0, bitend, single = _chunk_windows(payloads, lanes)
+    """Decode one chunk of eligible lanes, sorted by signature: entropy
+    step, DC predictions, then dequant + IDCT + colour conversion in
+    passes of at most ``_TAIL_BLOCKS`` blocks. Results land in ``out``
+    positionally; failed lanes are re-decoded serially (the serial
+    decoder is the authority on exceptions)."""
+    # one segment per lane: a restart marker inside the scan sends the
+    # lane to the serial decoder. A lane's windows start at bit ``bit0``
+    # of ``W`` and it may consume bits up to ``bitend`` (its window
+    # count, in bits); a read past them stays in bounds.
+    W, w0, count, seg_part, _ = _scan_windows(
+        [payloads[i][s:] for i, _, s in lanes]
+    )
+    single = np.bincount(seg_part, minlength=len(lanes)) == 1
+    one = single[seg_part]
+    bit0, bitend = 8 * w0[one], 8 * (w0[one] + count[one] + 1)
     for (i, _, _), ok in zip(lanes, single):
         if not ok:
             out[i] = _decode_scalar(payloads[i])
@@ -1654,15 +1701,14 @@ def _decode_lane_chunk(payloads, lanes, out) -> None:
         if li == nl or lanes[li][1][4] is not lanes[lo][1][4]:
             runs.append((lanes[lo][1][4], lo, li))
             lo = li
-    tables: dict[int, int] = {}
-    table_list: list[np.ndarray] = []
+    tables: dict[tuple, int] = {}  # run table key -> table number
     quants: dict[int, int] = {}
     quant_list: list[np.ndarray] = []
     tsel, qrow, comp = [], [], []
     nblocks = np.empty(nl, dtype=np.int64)
-    for (_, mcu, dc_t, ac_t, qzz), lo, hi in runs:
-        dc_r = np.array([_row(t, tables, table_list) for t in dc_t])
-        ac_r = np.array([_row(t, tables, table_list) for t in ac_t])
+    for (_, mcu, dc_k, ac_k, qzz), lo, hi in runs:
+        dc_r = np.array([tables.setdefault(k, len(tables)) for k in dc_k])
+        ac_r = np.array([tables.setdefault(k, len(tables)) for k in ac_k])
         q_r = np.array([_row(q, quants, quant_list) for q in qzz])
         m = int(n_mcus[lo:hi].sum())
         pair = np.stack([dc_r[mcu], ac_r[mcu]], axis=1).ravel() << 16
@@ -1672,10 +1718,16 @@ def _decode_lane_chunk(payloads, lanes, out) -> None:
         nblocks[lo:hi] = n_mcus[lo:hi] * mcu.size
 
     blk0 = np.cumsum(nblocks) - nblocks
-    C = np.zeros((int(nblocks.sum()), _STRIDE), dtype=np.int64)
+    blkend = blk0 + nblocks
+    # the chunk's run tables side by side, table t's peeks at t << 16
+    F = [_run_table(*k) for k in tables]
+    width = [t.shape[1] for t in F]
+    F = np.concatenate(F, axis=1)
+    F[_END] += np.repeat(np.arange(len(width)) << 16, width)
+    C = np.zeros((int(blkend[-1]), 64), dtype=np.int64)
     failed = _decode_entropy_lanes(
-        W, np.concatenate(table_list, axis=1), np.concatenate(tsel),
-        C.reshape(-1), bit0, bitend, blk0, blk0 + nblocks,
+        W, F, np.concatenate(tsel), C.reshape(-1), bit0, bitend, blk0,
+        blkend,
     )
 
     # DC predictions: C[:, 0] holds diffs; a stable per-(lane,
@@ -1690,32 +1742,42 @@ def _decode_lane_chunk(payloads, lanes, out) -> None:
     base = run[new] - diffs[new]
     C[order, 0] = run - base[np.cumsum(new) - 1]
 
-    # chunk-wide dequant + IDCT (the same arithmetic, hence the same
-    # bits, as _assemble_scan's per-component form)
-    deq = np.stack(quant_list)[np.concatenate(qrow)]
-    deq *= C[:, :64]
-    del C
-    px = DCT.T @ deq[:, UNZZ].reshape(-1, 8, 8).astype(np.float64) @ DCT
-    px += 128.0
-
+    quant = np.stack(quant_list)
+    qrow = np.concatenate(qrow)
     for (pattern, *_), lo, hi in runs:
-        b = int(blk0[lo])
-        rgb = _mcu_rgb(px[b: b + int(nblocks[lo:hi].sum())], pattern)
-        mh, mw = rgb.shape[1:3]
-        m = 0
-        for li in range(lo, hi):
-            i, (w, h, mcus_x, mcus_y, _), _ = lanes[li]
-            if failed[li]:
-                out[i] = _decode_scalar(payloads[i])
-            else:
-                img = (
-                    rgb[m: m + n_mcus[li]]
-                    .reshape(mcus_y, mcus_x, mh, mw, 3)
-                    .transpose(0, 2, 1, 3, 4)
-                    .reshape(mcus_y * mh, mcus_x * mw, 3)
-                )
-                out[i] = img[:h, :w].copy()
-            m += n_mcus[li]
+        while lo < hi:
+            # whole lanes, at most _TAIL_BLOCKS blocks (or one lane)
+            mid = int(np.searchsorted(
+                blkend, blk0[lo] + _TAIL_BLOCKS, side="right"
+            ))
+            mid = min(max(mid, lo + 1), hi)
+            b0, b1 = int(blk0[lo]), int(blkend[mid - 1])
+            # dequant + IDCT: the same arithmetic, hence the same bits,
+            # as _assemble_scan's per-component form
+            deq = quant[qrow[b0:b1]]
+            deq *= C[b0:b1]
+            px = DCT.T @ deq[:, UNZZ].reshape(-1, 8, 8).astype(np.float64)
+            del deq
+            px = px @ DCT
+            px += 128.0
+            rgb = _mcu_rgb(px, pattern)
+            del px
+            mh, mw = rgb.shape[1:3]
+            m = 0
+            for li in range(lo, mid):
+                i, (w, h, mcus_x, mcus_y, _), _ = lanes[li]
+                if failed[li]:
+                    out[i] = _decode_scalar(payloads[i])
+                else:
+                    img = (
+                        rgb[m: m + n_mcus[li]]
+                        .reshape(mcus_y, mcus_x, mh, mw, 3)
+                        .transpose(0, 2, 1, 3, 4)
+                        .reshape(mcus_y * mh, mcus_x * mw, 3)
+                    )
+                    out[i] = img[:h, :w].copy()
+                m += n_mcus[li]
+            lo = mid
 
 
 def _mcu_rgb(px: np.ndarray, pattern: tuple) -> np.ndarray:
@@ -1775,11 +1837,14 @@ def _decode_scalar(payload: bytes):
 def _decode_entropy_lanes(W, F, tsel, C, bit0, bitend, blk0, blkend
                           ) -> np.ndarray:
     """The multi-lane entropy step: one Huffman symbol per active lane
-    per iteration, through the fused tables ``F`` (``_fused_table`` rows,
-    tables side by side; ``tsel[2 * block + (k > 0)]`` is the column
-    offset of a block's DC / AC table). Writes zigzag coefficients into
-    the flat ``C`` (``_STRIDE`` per block, DC diffs at slot 0) and
-    returns the per-lane failed mask.
+    per iteration, through the run tables ``F`` (``_run_table`` rows,
+    tables side by side, table t's ``_END`` raised by t << 16;
+    ``tsel[2 * block + (k > 0)]`` is t << 16 for a block's DC / AC
+    table, so one ``searchsorted`` of ``tsel + peek`` finds every lane's
+    run). Writes zigzag coefficients into the flat ``C`` (64 per block,
+    DC diffs at slot 0) and returns the per-lane failed mask. A write
+    offset past 63 fails the lane, so it is clipped to 63: the lane's
+    own block takes the stray write, never a neighbour's.
 
     A lane fails on every condition the serial loop raises for (invalid
     code, AC index out of range, reading past the window array) and,
@@ -1792,10 +1857,11 @@ def _decode_entropy_lanes(W, F, tsel, C, bit0, bitend, blk0, blkend
     a read the serial decoder fails on."""
     nl = bit0.size
     failed = np.zeros(nl, dtype=bool)
-    NB, KA, OFF, VAL = F[_NB], F[_KA], F[_OFF], F[_VAL]
+    END, NB, KA, OFF, VOFF = F[_END], F[_NB], F[_KA], F[_OFF], F[_VOFF]
+    values = _val_rows()[0]
     # per-lane state, one row each, always compacted to the live lanes
     S = np.stack([
-        bit0, np.zeros(nl, dtype=np.int64), 2 * blk0, _STRIDE * blk0,
+        bit0, np.zeros(nl, dtype=np.int64), 2 * blk0, 64 * blk0,
         bitend, 2 * blkend, np.arange(nl, dtype=np.int64),
     ])
     # every live step consumes >= 1 bit, so no lane outlives its bits
@@ -1804,39 +1870,41 @@ def _decode_entropy_lanes(W, F, tsel, C, bit0, bitend, blk0, blkend
             break
         bp, k, g2, pos0, bend, gend, lane = S
         pk = (W[bp >> 3] >> (16 - (bp & 7))) & 0xFFFF
-        idx = tsel[g2 + (k > 0)] + pk
-        nb = NB[idx]
-        ko = k + OFF[idx]
-        C[pos0 + ko] = VAL[idx]
+        r = END.searchsorted(tsel[g2 + (k > 0)] + pk, side="right")
+        nb = NB[r]
+        ko = k + OFF[r]
+        C[pos0 + np.minimum(ko, 63)] = values[VOFF[r] + pk]
         bp += nb
-        k += KA[idx]
-        if not nb.all():
-            _slow_symbols(W, F, C, S, idx, nb == 0, ko)
+        k += KA[r]
+        # count_nonzero, not .all() / .any(): those add a Python-level
+        # wrapper call per step, a tenth of the step at this width
+        if np.count_nonzero(nb) < nb.size:
+            _slow_symbols(W, F, C, S, r, nb == 0, ko)
         done = k >> 6  # 1 once the block's last coefficient is decoded
         g2 += done << 1
-        pos0 += done * _STRIDE
+        pos0 += done << 6
         k &= done - 1
         live = (ko <= 63) & (bp <= bend)
-        if not live.all():
+        if np.count_nonzero(live) < live.size:
             failed[lane[~live]] = True
             live &= g2 < gend
             S = S[:, live]
-        elif (g2 >= gend).any():
+        elif np.count_nonzero(g2 >= gend):
             S = S[:, g2 < gend]
     else:
         failed[S[6]] = True  # step bound hit: never terminated
     return failed
 
 
-def _slow_symbols(W, F, C, S, idx, slow, ko) -> None:
-    """Masked slow branch for the lanes whose fused entry is 0: an
+def _slow_symbols(W, F, C, S, r, slow, ko) -> None:
+    """Masked slow branch for the lanes whose run has 0 bits: an
     invalid code, or code + magnitude longer than the 16-bit peek. Decode
     the symbol the serial way (packed LUT, second window read for the
     magnitude) and apply it in place; ``ko`` takes the range-check /
     write offset, set past 63 on invalid codes so the lane fails."""
     s = np.flatnonzero(slow)
     bp, k, pos0 = S[0, s], S[1, s], S[3, s]
-    e = F[_LUT, idx[s]]
+    e = F[_LUT, r[s]]
     ln = e >> 8
     sym = e & 0xFF
     isdc = k == 0
@@ -1848,7 +1916,7 @@ def _slow_symbols(W, F, C, S, idx, slow, ko) -> None:
     mv = (W[p2 >> 3] >> (32 - (p2 & 7) - sz)) & ((1 << sz) - 1)
     ext = np.where(mv >= (1 << (sz - 1)), mv, mv - (1 << sz) + 1)
     kk = k + run
-    C[pos0 + kk] = np.where(size > 0, ext, 0)
+    C[pos0 + np.minimum(kk, 63)] = np.where(size > 0, ext, 0)
     S[0, s] = p2 + size
     S[1, s] = kk + 1
     ko[s] = np.where(bad, 64, kk)

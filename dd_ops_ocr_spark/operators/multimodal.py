@@ -225,35 +225,31 @@ def ahash64(img: np.ndarray) -> int:
     return val & ((1 << 63) - 1)
 
 
-def ahash64_batch(imgs) -> np.ndarray:
-    """``[ahash64(im) for im in imgs]`` as an int64 array, computed in one
-    pass: every image's 8x8x3 nearest-neighbour samples come out of one
-    fancy index over the concatenated pixels, and the channel means of
-    all of them out of one call. The threshold is summed in ahash64's
-    order: its ``small`` comes out of the fancy index x-major in memory,
-    and a mean over other orders rounds differently on some images and
-    flips bits. Anything but non-empty (h, w, 3) uint8 images goes
-    through ahash64 itself, the single-image authority."""
-    n = len(imgs)
-    if any(
-        im.ndim != 3 or im.shape[2] != 3 or im.dtype != np.uint8
-        or not (im.shape[0] and im.shape[1])
-        for im in imgs
-    ):
-        return np.array([ahash64(im) for im in imgs], dtype=np.int64)
+def ahash64_cells(img: np.ndarray) -> np.ndarray:
+    """The (8, 8, 3) nearest-neighbour cells ``ahash64`` averages, as
+    one fancy index indexed [x, y]: C order here is the x-major memory
+    order ahash64's ``resize_nn`` leaves its samples in. A batch decoder
+    keeps these 192 bytes per image instead of the image."""
+    h, w, _ = img.shape
+    g = np.arange(8)
+    return img[g * h // 8, (g * w // 8)[:, None]]
+
+
+def ahash64_batch(cells) -> np.ndarray:
+    """``[ahash64(im) for im in imgs]`` as an int64 array, from
+    ``[ahash64_cells(im) for im in imgs]`` of uint8 RGB images: the
+    channel means and thresholds of all of them in one pass each. The
+    threshold sums each image's 64 cell means in memory order, x-major
+    like ahash64's; summing in another order rounds differently on some
+    images and flips bits. ``ahash64`` stays the single-image
+    authority."""
+    n = len(cells)
     if not n:
         return np.zeros(0, dtype=np.int64)
-    h = np.array([im.shape[0] for im in imgs], dtype=np.int64)
-    w = np.array([im.shape[1] for im in imgs], dtype=np.int64)
-    off = np.cumsum(3 * h * w) - 3 * h * w
-    g = np.arange(8)
-    ys = g * h[:, None] // 8
-    xs = g * w[:, None] // 8
-    # (image, x, y) cell offsets: x-major, like ahash64's small
-    cell = off[:, None, None] + 3 * (ys[:, None, :] * w[:, None, None]
-                                     + xs[:, :, None])
-    flat = np.concatenate([im.reshape(-1) for im in imgs])
-    small = flat[cell[..., None] + np.arange(3)].mean(axis=3)
+    stack = np.stack(cells)
+    if stack.dtype != np.uint8 or stack.shape[1:] != (8, 8, 3):
+        raise ValueError("ahash64_batch takes ahash64_cells of uint8 RGB")
+    small = stack.mean(axis=3)
     bits = small > small.reshape(n, 64).mean(axis=1)[:, None, None]
     bits = bits.transpose(0, 2, 1).reshape(n, 64).astype(np.uint64)
     val = bits @ (np.uint64(1) << np.arange(64, dtype=np.uint64))
@@ -553,7 +549,7 @@ def real_decode_batch(payloads: pd.Series) -> pd.DataFrame:
             ),
             "width": np.asarray([im.shape[1] for im in imgs], dtype=np.int32),
             "height": np.asarray([im.shape[0] for im in imgs], dtype=np.int32),
-            "phash": ahash64_batch(imgs),
+            "phash": ahash64_batch([ahash64_cells(im) for im in imgs]),
         }
     )
 

@@ -1,9 +1,11 @@
 """The multi-lane batch JPEG decoder must be pixel-exact AND
 exception-exact against the serial decoder it accelerates
 (decode_jpeg_batch keeps one lane of state per payload and decodes one
-Huffman symbol per active lane per numpy step through fused per-table
+Huffman symbol per active lane per numpy step through per-table run
 lookups; anything the fast path does not model falls back to
 decode_jpeg, which stays the authority on both pixels and errors)."""
+
+import struct
 
 import numpy as np
 
@@ -11,6 +13,7 @@ from dd_ops_ocr_spark.operators import jpeg as J
 from dd_ops_ocr_spark.operators.multimodal import (
     ahash64,
     ahash64_batch,
+    ahash64_cells,
     decode_images_batch,
     synth_jpeg_payload,
 )
@@ -160,7 +163,7 @@ def test_non_baseline_payloads_skip_the_header_parse(monkeypatch):
         return real_parse(payload)
 
     monkeypatch.setattr(J, "_parse_baseline_for_batch", counting)
-    monkeypatch.setattr(J, "_HDR_CACHE", {})
+    monkeypatch.setattr(J, "_HDR_CACHE", J._Memo(1 << 20))
     rng = np.random.default_rng(5)
     px = rng.integers(0, 256, (17, 23, 3), dtype=np.uint8)
     prog = J.encode_jpeg_progressive(px, quality=95, subsampling="4:2:0")
@@ -185,7 +188,137 @@ def test_ahash64_batch_matches_ahash64():
         J.decode_jpeg(synth_jpeg_payload(ref))
         for ref in ("img_10040681_3_123", "img_10096182_1_381")
     ]
-    got = ahash64_batch(imgs)
+    got = ahash64_batch([ahash64_cells(im) for im in imgs])
     assert got.dtype == np.int64
     assert got.tolist() == [ahash64(im) for im in imgs]
     assert ahash64_batch([]).tolist() == []
+
+
+def test_entropy_segments_format():
+    """The segment format both decoders share: FF 00 unstuffing, fill
+    FFs before a marker dropped, RSTn splitting, the terminator's
+    offset (before fill trimming) and zero-tailed 32-bit windows."""
+    cases = [
+        # FF 00 -> FF; the FF before FF D9 is fill
+        (bytes([0x12, 0xFF, 0x00, 0x34, 0xFF, 0xFF, 0xD9]),
+         [[0x12FF3400, 0xFF340000, 0x34000000, 0]], 5),
+        # an RST splits the scan; the next marker ends it
+        (bytes([0xAB, 0xFF, 0xD0, 0xCD, 0xFF, 0xD9]),
+         [[0xAB000000, 0], [0xCD000000, 0]], 4),
+        # no terminator: the scan runs to the end of the payload
+        (bytes([0x01, 0x02]), [[0x01020000, 0x02000000, 0]], 2),
+        # nothing but fill before the marker
+        (bytes([0xFF, 0xFF, 0xFF, 0xC0]), [[0]], 2),
+    ]
+    for payload, segs, end in cases:
+        assert J._entropy_segments(payload, 0) == (segs, end)
+        assert J._entropy_segments(b"\x00\x00" + payload, 2) == (
+            segs, end + 2
+        )
+    # many scans at once give each scan's own segments
+    parts = [p for p, _, _ in cases] + _variants(_mixed_payloads(), 30, 4)
+    W, w0, count, seg_part, end = J._scan_windows(parts)
+    for j, p in enumerate(parts):
+        segs, e = J._entropy_segments(p, 0)
+        mine = np.flatnonzero(seg_part == j)
+        assert [W[w0[i]: w0[i] + count[i] + 1].tolist() for i in mine] == segs
+        assert end[j] == e
+
+
+def _with_extra_codes(payload: bytes, j: int) -> bytes:
+    """``payload`` with one unused code added to each of its Huffman
+    tables, chosen by ``j``: the scan decodes exactly as before, but
+    every j gives four tables of its own, like per-image optimized
+    tables."""
+    out = bytearray(payload[:2])
+    pos = 2
+    t = 0
+    while True:
+        marker = payload[pos + 1]
+        (n,) = struct.unpack_from(">H", payload, pos + 2)
+        seg = payload[pos + 4: pos + 2 + n]
+        if marker == 0xC4:
+            bits, vals = list(seg[1:17]), list(seg[17:])
+            k = 4 * j + t
+            t += 1
+            if seg[0] >> 4 == 0:  # DC: 12 codes of length 4 are in use
+                bits[4 + k % 12] += 1
+                vals.append(12 + k // 12 % 4)
+            else:  # AC: 162 codes of length 8
+                bits[8 + k % 8] += 1
+                vals.append((k // 8 % 16) << 4 | 11 + k // 128 % 5)
+            body = bytes([seg[0]]) + bytes(bits) + bytes(vals)
+            out += b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
+        else:
+            out += payload[pos: pos + 2 + n]
+        pos += 2 + n
+        if marker == 0xDA:
+            return bytes(out + payload[pos:])
+
+
+def test_batch_caches_stay_bounded_on_one_off_tables(monkeypatch):
+    """Per-image Huffman and quant tables: every payload brings new
+    run tables and a new header. Each memo stays within its byte
+    budget, and header and signature entries hold table keys, never
+    the run tables themselves."""
+    budget = 64 << 10
+    for name in ("_RUN_CACHE", "_HDR_CACHE", "_SIG_CACHE"):
+        monkeypatch.setattr(J, name, J._Memo(budget))
+    rng = np.random.default_rng(9)
+    payloads = [
+        _with_extra_codes(J.encode_jpeg(
+            rng.integers(0, 256, (int(rng.integers(8, 40)), 24, 3),
+                         dtype=np.uint8),
+            quality=30 + j,
+        ), j)
+        for j in range(40)
+    ]
+    assert _assert_parity(payloads, J.decode_jpeg_batch(payloads)) == 0
+    for memo in (J._RUN_CACHE, J._HDR_CACHE, J._SIG_CACHE):
+        assert 0 < memo.nbytes <= budget
+    # 160 distinct tables went through a memo that holds a few of them
+    assert len(J._RUN_CACHE) < 40
+
+    def arrays(x):
+        if isinstance(x, np.ndarray):
+            yield x
+        elif isinstance(x, (tuple, list)):
+            for y in x:
+                yield from arrays(y)
+
+    held = list(arrays(list(J._HDR_CACHE.values())))
+    held += list(arrays(list(J._SIG_CACHE.values())))
+    assert held and max(a.nbytes for a in held) <= 512
+
+
+def test_run_table_matches_packed_lut():
+    """Every 16-bit peek, looked up through a run table, gives the
+    serial decoder's packed LUT entry and, where code + magnitude fit
+    the peek, the bits consumed and the sign-extended value; otherwise
+    0 bits (the slow branch) and value 0. Standard, random, overfull,
+    duplicate-symbol and empty tables."""
+    rng = np.random.default_rng(16)
+    tables = [(0, J._ENC_DC_BITS, J._DC_SYMS), (1, J._ENC_AC_BITS, J._AC_SYMS),
+              (0, [0] * 16, []), (1, [0] * 15 + [1], [0xF0])]
+    for t in range(60):
+        bits = [int(b) for b in rng.integers(0, 4 if t % 3 else 30, 16)]
+        vals = [int(v) for v in rng.integers(0, 256, sum(bits))]
+        if t % 4 == 0 and vals:
+            vals[-1] = vals[0]
+        tables.append((t % 2, bits, vals))
+    pk = np.arange(1 << 16)
+    values = J._val_rows()[0]
+    for tc, bits, vals in tables:
+        F = J._run_table(tc, bits, vals)
+        r = F[J._END].searchsorted(pk, side="right")
+        lut = J._packed_lut(bits, vals)
+        assert np.array_equal(F[J._LUT][r], lut)
+        ln, sym = lut >> 8, lut & 0xFF
+        size = sym if tc == 0 else sym & 0xF
+        fast = (ln > 0) & (ln + size <= 16)
+        nb = np.where(fast, ln + size, 0)
+        assert np.array_equal(F[J._NB][r], nb)
+        mag = (pk >> (16 - nb)) & ((1 << np.where(fast, size, 0)) - 1)
+        half = (1 << np.where(fast, size, 0)) >> 1
+        want = np.where(mag < half, mag - 2 * half + 1, mag)
+        assert np.array_equal(values[F[J._VOFF][r] + pk], want)
