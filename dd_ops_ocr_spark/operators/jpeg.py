@@ -144,8 +144,8 @@ def _quantized_blocks_zz(plane: np.ndarray, qt: np.ndarray):
     the last nonzero AC coeff per row, blocks-per-row). DCT + quantize
     run as ONE broadcast matmul chain over every block (the per-block
     matmul loop was the encoder's hot spot); rows stay numpy for the
-    vectorized bit-emission pass (the serial emitters index them
-    per-element and cast with int())."""
+    vectorized bit-emission pass (the progressive encoder indexes them
+    per-element and casts with int())."""
     H, W = plane.shape
     nby, nbx = H // 8, W // 8
     blocks = plane.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3)
@@ -245,86 +245,6 @@ def _prep_components(pixels, quality: int, subsampling: str):
     return comps_q, mcus_y, mcus_x, hs, vs, qt_l, qt_c
 
 
-def _emit_scan_serial(comps_q, mcus_y: int, mcus_x: int,
-                      hs: int, vs: int) -> bytes:
-    """Reference (serial, per-coefficient) baseline scan emission —
-    the T.81 F.1 procedure written out plainly. ``_emit_scan_vector``
-    must produce byte-identical output (tests/test_jpeg pins it); this
-    path stays as the executable spec and the arbiter when debugging."""
-    dc_codes = _ENC_DC_CODES
-    ac_codes = _ENC_AC_CODES
-    buf = bytearray()
-    append = buf.append
-    acc = 0
-    nbits = 0
-
-    def put(code: int, ln: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << ln) | code
-        nbits += ln
-        while nbits >= 8:
-            nbits -= 8
-            b = (acc >> nbits) & 0xFF
-            append(b)
-            if b == 0xFF:
-                append(0x00)  # byte stuffing
-        acc &= (1 << nbits) - 1
-
-    def emit(ci: int, bi: int, pred: int) -> int:
-        rows, lasts, _ = comps_q[ci]
-        coef = rows[bi]
-        last = int(lasts[bi])
-        dc = int(coef[0])
-        diff = dc - pred
-        if diff == 0:
-            c, ln = dc_codes[0]
-            put(c, ln)
-        else:
-            size = diff.bit_length() if diff > 0 else (-diff).bit_length()
-            c, ln = dc_codes[size]
-            put(c, ln)
-            put(diff if diff > 0 else diff + (1 << size) - 1, size)
-        run = 0
-        for k in range(1, last + 1):
-            v = int(coef[k])
-            if v == 0:
-                run += 1
-                continue
-            while run >= 16:
-                c, ln = ac_codes[0xF0]  # ZRL
-                put(c, ln)
-                run -= 16
-            size = v.bit_length() if v > 0 else (-v).bit_length()
-            c, ln = ac_codes[(run << 4) | size]
-            put(c, ln)
-            put(v if v > 0 else v + (1 << size) - 1, size)
-            run = 0
-        if last < 63:
-            c, ln = ac_codes[0x00]  # EOB
-            put(c, ln)
-        return dc
-
-    ybw_blocks = comps_q[0][2]
-    cbw_blocks = comps_q[1][2]
-    p0 = p1 = p2 = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for by in range(vs):
-                base = (my * vs + by) * ybw_blocks + mx * hs
-                for bx in range(hs):
-                    p0 = emit(0, base + bx, p0)
-            cbi = my * cbw_blocks + mx
-            p1 = emit(1, cbi, p1)
-            p2 = emit(2, cbi, p2)
-    if nbits:  # pad the final partial byte with 1-bits (T.81 B.1.1.5)
-        pad = 8 - nbits
-        b = ((acc << pad) | ((1 << pad) - 1)) & 0xFF
-        append(b)
-        if b == 0xFF:
-            append(0x00)
-    return bytes(buf)
-
-
 # lookup arrays for the vectorized emitter (size/symbol -> code, length);
 # length 0 marks a symbol the encoder tables do not define, so the vector
 # path can raise the same KeyError the dict lookup would
@@ -390,8 +310,9 @@ def _bitlen(x: np.ndarray) -> np.ndarray:
 
 def _emit_scan_vector(comps_q, mcus_y: int, mcus_x: int,
                       hs: int, vs: int) -> bytes:
-    """Vectorized baseline scan emission — byte-identical to
-    ``_emit_scan_serial`` (test-pinned), built from whole-array numpy:
+    """Vectorized baseline scan emission — byte-identical to the serial
+    T.81 F.1 reference ``emit_scan_serial`` in tests/jpeg_reference.py
+    (test-pinned), built from whole-array numpy:
 
     * blocks gathered into emission (MCU-interleaved) order in one take;
     * DC sizes/magnitudes and AC run-lengths (incl. ZRL expansion and

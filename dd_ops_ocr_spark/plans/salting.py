@@ -13,15 +13,21 @@ broadcasts, exactly ONE extra scan and ONE small shuffle over the tail):
     ``array_max(spans.offset)`` — no higher-order lambda in the hot scan.
   * **big docs** (the rare tail) run ONE doc-global Arrow pass
     (``_bucketize_kernel``, shuffle-free: a row is a whole doc) that
-    normalizes (RE2), drops empties, strips boilerplate, and emits one
-    nested row per salt bucket ``(doc_id, base, spans)`` where
+    runs ``pipeline``'s flatten and strip stages (normalize, empty-drop,
+    boilerplate strip) and emits one nested row per salt bucket
+    ``(doc_id, base, spans)``, where
     ``base`` is the exclusive prefix sum of earlier buckets' survivor
     counts and ``spans`` carry pre-normalized text. The bucket rows —
     each bounded by pages_per_bucket pages regardless of document size —
     are spread round-robin across the cluster (`repartition(n)`, the
     salt shuffle; nested rows, so the shuffle moves compact array
-    payloads), and a second small kernel (``_rank_kernel``) does the
-    page-local two-up + reading-order rank, offset by ``base``.
+    payloads), and a second small kernel (``_rank_kernel``) runs
+    ``pipeline``'s reading-order stage (page-local two-up + rank) with
+    the bucket row as the group, offset by ``base``.
+
+  This module owns only what is specific to salting: routing, salt
+  buckets, order bases, the shuffle and the union. The extraction spec
+  itself lives once, in ``pipeline``'s stages.
 
   All doc-global state (boilerplate keys, order bases) is resolved
   inside the bucketize kernel while the doc is still whole — nothing is
@@ -44,19 +50,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame, functions as F
 
-from dd_ops_ocr_spark.schema import (
-    BOILERPLATE_FRAC,
-    CX,
-    FOOTER_ZONE,
-    GUTTER_HALF,
-    HEADER_ZONE,
-    MIN_PAGES_BOILERPLATE,
-    OUT_SPANS_DDL,
-    PAGE_H,
-    PAGE_W,
-    STRIDE,
-    TWOUP_MIN_SIDE,
-)
+from dd_ops_ocr_spark import pipeline
+from dd_ops_ocr_spark.schema import OUT_SPANS_DDL, STRIDE
 
 PAGES_PER_BUCKET = 25
 
@@ -66,18 +61,9 @@ BUCKET_DDL = (
 )
 
 
-def _normalize_arrow(text_arr):
-    """C14 in Arrow C++ (RE2): collapse newline runs, trim whitespace."""
-    import pyarrow.compute as pc
-
-    return pc.utf8_trim_whitespace(
-        pc.replace_substring_regex(text_arr, pattern="\n{2,}", replacement="\n")
-    )
-
-
 def _bucketize_kernel(ppb: int):
     """Doc-global pass over whole tail docs (nested in, nested out):
-    normalize + empty-drop + boilerplate strip, then split the survivors
+    ``pipeline``'s flatten and strip stages, then split the survivors
     into salt buckets of <= ppb pages and emit one row per bucket with
     the doc-global order base attached. ``ppb`` is baked into the closure
     (module globals reset on worker re-import)."""
@@ -102,91 +88,17 @@ def _bucketize_kernel(ppb: int):
             ]
         )
         for batch in batches:
-            tbl = pa.Table.from_batches([batch]).combine_chunks()
-            spans = tbl.column("spans").chunk(0)
-            counts = pc.list_value_length(spans).fill_null(0).to_numpy()
-            struct = pc.list_flatten(spans)
+            tbl, struct, doc_idx, offset = pipeline._flatten(batch)
             if len(struct) == 0:
                 continue
-            doc_ids = tbl.column("doc_id").chunk(0)
-            doc_idx = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
-
-            is_text = (
-                pc.equal(struct.field("kind"), "text")
-                .fill_null(False)
-                .to_numpy(zero_copy_only=False)
-                .astype(bool)
+            norm, gi, d, page, _, _, is_text = pipeline._strip(
+                struct, doc_idx, offset, tbl.num_rows
             )
-            norm = _normalize_arrow(struct.field("text"))
-            norm_len = pc.binary_length(norm).fill_null(0).to_numpy()
-            offset = (
-                struct.field("offset").to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            keep = (~is_text) | (norm_len > 0)
-
-            ki = np.flatnonzero(keep)
-            d = doc_idx[ki]
-            off = offset[ki]
-            page = off // STRIDE
-            y = (off % STRIDE) // PAGE_W
-            zone = np.where(
-                y < HEADER_ZONE, 1, np.where(y >= PAGE_H - FOOTER_ZONE, 2, 0)
-            )
-            zone = np.where(is_text[ki], zone, 0)
-
-            # boilerplate strip — factorized keys + run counting, the
-            # same no-Python-strings form as pipeline._run_arrow (the
-            # old pandas groupby materialized every candidate text via
-            # to_pylist, re-introducing per-row Python objects in the
-            # tail-doc hot kernel); spec unchanged vs
-            # oracle.extract_doc step 4.
-            boiler = np.zeros(len(ki), dtype=bool)
-            cand = np.flatnonzero(zone > 0)
-            if len(cand):
-                # distinct (doc, page) pairs -> n_pages per doc
-                dpk = (d << 10) | page  # page <= 409 < 2^10
-                seen = np.zeros(
-                    np.int64(len(counts)) << 10, dtype=bool
-                )
-                seen[dpk] = True
-                dp_dom = np.flatnonzero(seen)
-                n_pages = np.bincount(dp_dom >> 10, minlength=len(counts))
-                span_n_pages = n_pages[d]
-
-                # distinct pages per (doc, zone, text-code)
-                norm_cand = pc.take(norm, pa.array(ki[cand]))
-                codes = pc.dictionary_encode(norm_cand)
-                code_np = np.asarray(
-                    pc.fill_null(codes.indices, -1)
-                    .to_numpy(zero_copy_only=False),
-                    dtype=np.int64,
-                )
-                ukey = (
-                    (d[cand] << 34)
-                    | (np.int64(1) * zone[cand] << 32)
-                    | code_np
-                )
-                pg = page[cand]
-                srt2 = np.lexsort((pg, ukey))
-                uk_s, pg_s = ukey[srt2], pg[srt2]
-                first = np.ones(len(srt2), dtype=bool)
-                first[1:] = (uk_s[1:] != uk_s[:-1]) | (pg_s[1:] != pg_s[:-1])
-                uniq_keys, zpages = np.unique(uk_s[first], return_counts=True)
-                zp_span = zpages[np.searchsorted(uniq_keys, ukey)]
-                thr = np.ceil(BOILERPLATE_FRAC * span_n_pages[cand])
-                boiler[cand] = (
-                    (span_n_pages[cand] >= MIN_PAGES_BOILERPLATE)
-                    & (zp_span >= thr)
-                )
-
-            ki2 = np.flatnonzero(~boiler)
-            if len(ki2) == 0:
+            if len(gi) == 0:
                 # every span of this batch normalized to nothing / was
                 # boilerplate — nothing to emit (hypothesis-discovered)
                 continue
-            gi = ki[ki2]
-            d = d[ki2]
-            salt = page[ki2] // ppb
+            salt = page // ppb
 
             # group survivors by (doc, salt); bases = exclusive prefix sum
             ds = d * 4096 + salt  # salt <= 409 < 4096
@@ -199,14 +111,13 @@ def _bucketize_kernel(ppb: int):
             gdoc = ds_s[starts] // 4096
             cum = np.cumsum(glens) - glens  # batch-wide exclusive prefix
             doc_first = np.concatenate(([True], gdoc[1:] != gdoc[:-1]))
-            doc_base0 = np.repeat(cum[doc_first], np.diff(
-                np.append(np.flatnonzero(doc_first), len(gdoc))
-            ))
-            gbase = cum - doc_base0  # per-doc exclusive prefix sum
+            # cum increases, so a running max over the doc-first prefixes
+            # carries each doc's first prefix to all of its groups
+            gbase = cum - np.maximum.accumulate(np.where(doc_first, cum, 0))
 
             take_idx = pa.array(gi[srt])
             text_sorted = pc.take(norm, take_idx)
-            is_text_sorted = pa.array(is_text[gi[srt]])
+            is_text_sorted = pa.array(is_text[srt])
             values = pa.StructArray.from_arrays(
                 [
                     pc.take(struct.field("kind"), take_idx),
@@ -223,7 +134,7 @@ def _bucketize_kernel(ppb: int):
             )
             yield pa.RecordBatch.from_arrays(
                 [
-                    pc.take(doc_ids, pa.array(gdoc)),
+                    pc.take(tbl.column("doc_id").chunk(0), pa.array(gdoc)),
                     pa.array(gbase.astype(np.int64)),
                     pa.ListArray.from_arrays(list_offsets, values),
                 ],
@@ -234,69 +145,24 @@ def _bucketize_kernel(ppb: int):
 
 
 def _rank_kernel(batches):
-    """Per-bucket two-up + reading-order rank. Input rows are whole salt
-    buckets of pre-normalized, pre-stripped spans with the doc-global
-    order base; batches always contain whole rows, so this is shuffle-
-    and state-free."""
+    """Per-bucket reading-order rank: ``pipeline``'s flatten and
+    reading-order stages with the bucket row as the group, offset by the
+    row's doc-global order base. Input rows are whole salt buckets of
+    pre-normalized, pre-stripped spans; batches always contain whole
+    rows, so this is shuffle- and state-free."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    out_schema = pa.schema(
-        [
-            ("doc_id", pa.string()),
-            ("kind", pa.string()),
-            ("text", pa.string()),
-            ("media_ref", pa.string()),
-            ("order", pa.int32()),
-        ]
-    )
+    out_schema = pipeline._out_schema()
     for batch in batches:
-        tbl = pa.Table.from_batches([batch]).combine_chunks()
-        spans = tbl.column("spans").chunk(0)
-        counts = pc.list_value_length(spans).fill_null(0).to_numpy()
-        struct = pc.list_flatten(spans)
+        tbl, struct, row_idx, offset = pipeline._flatten(batch)
         if len(struct) == 0:
             continue
-        row_idx = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
         base = tbl.column("base").chunk(0).to_numpy(zero_copy_only=False)
-
-        offset = struct.field("offset").to_numpy(zero_copy_only=False).astype(np.int64)
-        page = offset // STRIDE
-        rem = offset % STRIDE
-        y = rem // PAGE_W
-        x = rem % PAGE_W
-
-        # two-up per (bucket row, page): pages never straddle buckets.
-        PAGE_CAP = 1024
-        rp = row_idx * PAGE_CAP + page
-        rp_codes, rp_inv = np.unique(rp, return_inverse=True)
-        m = len(rp_codes)
-        left = np.bincount(rp_inv[x < CX - GUTTER_HALF], minlength=m)
-        right = np.bincount(rp_inv[x >= CX + GUTTER_HALF], minlength=m)
-        gutter = np.bincount(
-            rp_inv[(x >= CX - GUTTER_HALF) & (x < CX + GUTTER_HALF)], minlength=m
+        srt, r_s, rank = pipeline._reading_order(
+            row_idx, *pipeline._geometry(offset)
         )
-        two_up = (gutter == 0) & (left >= TWOUP_MIN_SIDE) & (right >= TWOUP_MIN_SIDE)
-        side = (two_up[rp_inv] & (x >= CX)).astype(np.int64)
-
-        # composite sort key: row 20b | page 10b | side 1b | y 12b | x 11b.
-        # Bound guard: a batch-size or geometry change must fail loudly,
-        # never silently mis-rank via bit overflow. Explicit raises, not
-        # assert — PYTHONOPTIMIZE/-O workers compile asserts out.
-        if row_idx.max() >= (1 << 20):
-            raise ValueError("batch exceeds 2^20 bucket rows")
-        if page.max() >= (1 << 10):
-            raise ValueError("page index exceeds 2^10")
-        if y.max() >= (1 << 12) or x.max() >= (1 << 11):
-            raise ValueError("span coordinates exceed packed key geometry")
-        key = (((row_idx << 10 | page) << 1 | side) << 12 | y) << 11 | x
-        srt = np.argsort(key, kind="stable")
-        r_s = row_idx[srt]
-        starts = np.ones(len(srt), dtype=bool)
-        starts[1:] = r_s[1:] != r_s[:-1]
-        group_start = np.maximum.accumulate(np.where(starts, np.arange(len(srt)), 0))
-        local = np.arange(len(srt)) - group_start + 1
-        order = (local + base[r_s]).astype(np.int32)
+        order = (rank + base[r_s]).astype(np.int32)
 
         take_idx = pa.array(srt)
         yield pa.RecordBatch.from_arrays(
@@ -318,8 +184,6 @@ def _salted_from_parts(
     over ``big``. The two subtrees are independent — Spark schedules
     their stages concurrently within the one union action, so the small
     extract overlaps the bucketize stage."""
-    from dd_ops_ocr_spark import pipeline
-
     small_out = pipeline.extract(small)
     # Tail: one doc-global kernel -> bucket rows -> salt shuffle -> rank.
     buckets = big.mapInArrow(_bucketize_kernel(ppb), schema=BUCKET_DDL)

@@ -155,7 +155,7 @@ def try_iceberg_writer(df: DataFrame, table: str):
     except Exception as exc:  # pragma: no cover - environment-dependent
         raise NotImplementedError(
             "Iceberg catalog not available in this environment; use "
-            "write_output() + ledger.run_with_ledger() for snapshot-style "
+            "ledger.run_one_pass() (the default sink) for snapshot-style "
             "commits"
         ) from exc
 

@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 
 from dd_ops_ocr_spark.operators import jpeg as J
+from tests.jpeg_reference import emit_scan_serial
 
 
 def _images():
@@ -34,7 +35,7 @@ def test_vector_emitter_matches_serial_reference():
     n = 0
     for px, q, sub in _images():
         comps_q, my, mx, hs, vs, _, _ = J._prep_components(px, q, sub)
-        ser = J._emit_scan_serial(comps_q, my, mx, hs, vs)
+        ser = emit_scan_serial(comps_q, my, mx, hs, vs)
         vec = J._emit_scan_vector(comps_q, my, mx, hs, vs)
         assert ser == vec, (px.shape, q, sub)
         n += 1
@@ -63,4 +64,4 @@ def test_oversize_dc_category_still_raises():
     with pytest.raises(KeyError):
         J._emit_scan_vector(comps, 1, 1, 1, 1)
     with pytest.raises(KeyError):
-        J._emit_scan_serial(comps, 1, 1, 1, 1)
+        emit_scan_serial(comps, 1, 1, 1, 1)
