@@ -93,17 +93,19 @@ def _hadoop_parquet_nonempty(path: str, spark: SparkSession | None = None) -> bo
     fs = hpath.getFileSystem(jsc.hadoopConfiguration())
     if not fs.exists(hpath):
         return False
+    root = fs.makeQualified(hpath).toUri().getPath().rstrip("/") + "/"
     it = fs.listFiles(hpath, True)  # recursive
     while it.hasNext():
         p = it.next().getPath()
         if not p.getName().endswith(".parquet"):
             continue
         # mirror the local probe: uncommitted attempt files under
-        # _temporary (and any hidden dir) are invisible to Spark readers
-        tail = p.toString().split("://", 1)[-1]
-        if any(
-            s.startswith(("_", ".")) for s in tail.split("/")[:-1] if s
-        ):
+        # _temporary (and any hidden dir) below ``path`` are invisible to
+        # Spark readers; the ancestors of ``path`` itself do not count
+        sub = p.toUri().getPath()
+        if sub.startswith(root):
+            sub = sub[len(root):]
+        if any(s.startswith(("_", ".")) for s in sub.split("/")[:-1] if s):
             continue
         return True
     return False

@@ -19,6 +19,12 @@ def build_spark(
 
     ``cores=None`` -> local[*]. In local mode the driver is the only JVM, so
     ``spark.driver.memory`` is the one memory knob that matters.
+
+    Python workers fork from ``dd_ops_ocr_spark.pyworker``, the stock
+    ``pyspark.daemon`` plus a ``zipimporter.invalidate_caches`` that does
+    not re-read an unchanged ``pyspark.zip`` on every task. The package
+    must therefore be importable where workers start: the driver's
+    working directory (local mode) or the executors' ``PYTHONPATH``.
     """
     if cores is None:
         cores = os.cpu_count() or 8
@@ -44,6 +50,9 @@ def build_spark(
         # this, a reader that implements pushFilters() raises at plan
         # time rather than degrading to a post-scan filter
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # stops every task re-reading pyspark.zip's directory 16 times
+        # (0.16-0.27 CPU-s a task); see the docstring and pyworker.py
+        .config("spark.python.daemon.module", "dd_ops_ocr_spark.pyworker")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra or {}).items():

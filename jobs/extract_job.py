@@ -6,6 +6,17 @@ Submit:
         jobs/extract_job.py --input <spans parquet or sf dir> \
         --output /path/out --run-id r42 [--salted] [--buckets 64]
 
+Python workers: ``session.build_spark`` forks them from
+``dd_ops_ocr_spark.pyworker``, which stops each task from re-reading
+pyspark.zip's directory (0.16-0.27 CPU-s a task). This job builds its own
+session and keeps the stock daemon. To use the library's, add
+    --conf spark.python.daemon.module=dd_ops_ocr_spark.pyworker
+only where the package is importable when a worker starts: installed on
+every executor or on their PYTHONPATH (e.g. through
+spark.executorEnv.PYTHONPATH). --py-files alone is not enough: workers
+add those files to sys.path per task, after the daemon has started, and
+a daemon that cannot import its module fails every Python task.
+
 Resumable: re-running with the same --output continues from the ledger
 (only uncommitted buckets reprocess — see dd_ops_ocr_spark/ledger.py).
 """

@@ -8,6 +8,17 @@ Submit:
         jobs/stream_extract_job.py --input <landing dir of spans parquet> \
         --output /path/out --checkpoint /path/ckpt [--continuous]
 
+Python workers: ``session.build_spark`` forks them from
+``dd_ops_ocr_spark.pyworker``, which stops each task from re-reading
+pyspark.zip's directory (0.16-0.27 CPU-s a task). This job builds its own
+session and keeps the stock daemon. To use the library's, add
+    --conf spark.python.daemon.module=dd_ops_ocr_spark.pyworker
+only where the package is importable when a worker starts: installed on
+every executor or on their PYTHONPATH (e.g. through
+spark.executorEnv.PYTHONPATH). --py-files alone is not enough: workers
+add those files to sys.path per task, after the daemon has started, and
+a daemon that cannot import its module fails every Python task.
+
 Default is a bounded drain (trigger availableNow): process everything
 currently in the landing dir, then exit — the cron-driven deployment
 shape, and also how CI verifies it. --continuous leaves the query

@@ -12,6 +12,17 @@ BENCH.md are reproducible from the command line:
       spark-submit --master local[$N] --py-files ddops.zip \
         jobs/throughput_probe.py --input <spans parquet> --repeats 3
     done
+
+Python workers: ``session.build_spark`` forks them from
+``dd_ops_ocr_spark.pyworker``, which stops each task from re-reading
+pyspark.zip's directory (0.16-0.27 CPU-s a task). This job builds its own
+session and keeps the stock daemon. To use the library's, add
+    --conf spark.python.daemon.module=dd_ops_ocr_spark.pyworker
+only where the package is importable when a worker starts: installed on
+every executor or on their PYTHONPATH (e.g. through
+spark.executorEnv.PYTHONPATH). --py-files alone is not enough: workers
+add those files to sys.path per task, after the daemon has started, and
+a daemon that cannot import its module fails every Python task.
 """
 
 from __future__ import annotations

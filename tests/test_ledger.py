@@ -137,19 +137,41 @@ def test_parquet_nonempty_uri_scheme(spark, tmp_path):
     """ADVICE r4: _parquet_nonempty on a URI path must go through the
     Hadoop FileSystem API, not os.walk (which silently yields nothing for
     'scheme://...' strings and would downgrade every remote bucket to a
-    zero-count marker). Exercised via file:// — same code path as
-    hdfs://s3a://, resolvable in the sandbox."""
+    zero-count marker). ``file://`` takes the local branch, so the
+    Hadoop branch is called directly on it here: the same code path as
+    hdfs:// and s3a://, resolvable without a cluster."""
     from dd_ops_ocr_spark.ledger import _hadoop_parquet_nonempty, _parquet_nonempty
 
     d = tmp_path / "data"
     spark.range(5).write.mode("overwrite").parquet(str(d))
     assert _parquet_nonempty(str(d))                       # local walk
-    assert _parquet_nonempty(f"file://{d}")                # URI -> Hadoop FS
-    assert _hadoop_parquet_nonempty(f"file://{d}")
+    assert _parquet_nonempty(f"file://{d}")                # file:// -> local walk
+    assert _hadoop_parquet_nonempty(f"file://{d}")         # Hadoop FS
     empty = tmp_path / "empty"
     empty.mkdir()
     assert not _parquet_nonempty(f"file://{empty}")
     assert not _hadoop_parquet_nonempty(f"file://{tmp_path}/missing")
+
+
+@pytest.mark.parametrize("ancestor", ["_runs", ".dot"])
+def test_hadoop_parquet_probe_ignores_hidden_ancestors(spark, tmp_path, ancestor):
+    """Only the components below ``path`` hide a part file, as in the
+    local walk: a ``_``/``.``-prefixed ancestor of ``path`` itself does
+    not. Before, the Hadoop branch tested every component of the file's
+    full path and reported no data under such an out_dir."""
+    from dd_ops_ocr_spark.ledger import _hadoop_parquet_nonempty, _parquet_nonempty
+
+    d = tmp_path / ancestor / "data"
+    spark.range(5).write.mode("overwrite").parquet(str(d))
+    assert _parquet_nonempty(str(d))
+    assert _hadoop_parquet_nonempty(f"file://{d}")
+    # hidden entries below path still hide: an uncommitted attempt file
+    attempt = tmp_path / ancestor / "staged"
+    (attempt / "_temporary" / "0").mkdir(parents=True)
+    part = next(d.glob("*.parquet"))
+    shutil.copy(part, attempt / "_temporary" / "0" / part.name)
+    assert not _parquet_nonempty(str(attempt))
+    assert not _hadoop_parquet_nonempty(f"file://{attempt}")
 
 
 def test_observed_lineage_single_pass_and_docs_invariant(spark, spans):

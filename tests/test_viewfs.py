@@ -79,3 +79,34 @@ def test_crash_and_resume_exact_on_viewfs(spark, viewfs_root):
     finally:
         shutil.rmtree(local_dir, ignore_errors=True)
         spans.unpersist()
+
+
+def test_one_pass_markers_under_hidden_ancestor_on_viewfs(spark, viewfs_root):
+    """An out_dir below a ``_``-prefixed directory: the one-pass commit
+    must still see the data it wrote. Before, the Hadoop-branch probe
+    counted ancestors of the out_dir as hidden, so every marker committed
+    zero counts and committed_buckets saw nothing."""
+    from pyspark.sql import functions as F
+
+    spans = corpus.build_spans_df(spark, SF_SMOKE).limit(200).cache()
+    out_dir = f"{viewfs_root}/_runs/one_pass"
+    metrics = ["docs", "spans_emitted", "text_blocks", "media_blocks"]
+    try:
+        ledger.run_one_pass(spark, spans, out_dir, "run_a", n_buckets=N_BUCKETS)
+        assert ledger.committed_buckets(spark, out_dir) == set(range(N_BUCKETS))
+
+        got = (ledger.read_ledger(spark, out_dir).toPandas()
+               .set_index("bucket")[metrics].sort_index())
+        want = (
+            ledger.read_output(spark, out_dir).groupBy("bucket")
+            .agg(F.countDistinct("doc_id").alias("docs"),
+                 F.count("*").alias("spans_emitted"),
+                 F.count(F.when(F.col("kind") == "text", 1)).alias("text_blocks"),
+                 F.count(F.when(F.col("kind") != "text", 1)).alias("media_blocks"))
+            .toPandas().set_index("bucket")
+            .reindex(range(N_BUCKETS), fill_value=0)[metrics]
+        )
+        assert (got.values == want.values).all(), (got, want)
+        assert got["spans_emitted"].sum() > 0
+    finally:
+        spans.unpersist()
