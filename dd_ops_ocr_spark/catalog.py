@@ -344,8 +344,7 @@ class CommitConflict(Exception):
 def write_snapshot(df: DataFrame, table_dir: str, operation: str = "overwrite",
                    properties: dict | None = None,
                    aux: dict[str, DataFrame] | None = None,
-                   expected_parent: int | None = None,
-                   properties_fn=None) -> int:
+                   expected_parent: int | None = None) -> int:
     """Commit df as a new snapshot. ``overwrite`` starts a new file set;
     ``append`` unions the parent snapshot's files. Concurrent committers
     are safe: a snapshot id is claimed by exclusive manifest creation,
@@ -381,11 +380,6 @@ def write_snapshot(df: DataFrame, table_dir: str, operation: str = "overwrite",
     aux_files = {}
     for k, v in (aux or {}).items():
         aux_files[k], _ = _write_files(v, table_dir)
-    if properties_fn is not None:
-        # lazy lineage/metrics: evaluated AFTER the data write action so
-        # df.observe() metrics from that very pass can ride the manifest
-        # (one execution instead of an agg pass plus a write pass)
-        properties = {**(properties or {}), **properties_fn()}
     while True:
         parent = _max_manifest_id(table_dir) or None
         if expected_parent is not None and parent != expected_parent:

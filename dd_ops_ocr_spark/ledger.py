@@ -6,42 +6,44 @@ equivalent is its session-directory stale-file probing
 
   output layout   {out_dir}/data/bucket={b}/part-*.parquet
   ledger layout   {out_dir}/ledger/commit={run_id}_{b}/part-*.parquet
-     rows: (run_id, bucket, docs, spans_emitted, text_blocks,
-            media_blocks, committed_at_run)
+     rows: (bucket, n_buckets, docs, spans_emitted, text_blocks,
+            media_blocks, run_id, committed_at_run)
 
 A bucket is the checkpoint unit: ``bucket = pmod(xxhash64(doc_id), N)``
 — deterministic across retries/runs, so a resumed run reprocesses
-exactly the buckets without a ledger commit and nothing else. The data
-write and the ledger append are two steps; order (data first, ledger
-last) makes the ledger a commit marker: a crash between them leaves an
-orphaned-but-ignored data dir that the resumed run simply overwrites
-(dynamic partition overwrite), never double-counts.
+exactly the buckets without a ledger commit and nothing else. Every
+marker records N: bucket ids only name the same documents under the same
+N, so a resume with another N is refused before it writes anything. The
+data write and the ledger append are two steps; order (data first,
+ledger last) makes the ledger a commit marker: a crash between them
+leaves an orphaned-but-ignored data dir that the resumed run simply
+overwrites (dynamic partition overwrite), never double-counts.
 
+``run_one_pass`` is the one commit path: every uncommitted bucket is
+extracted and written in one job, then the markers land in one more.
 Lineage/metrics columns ride with every ledger row (north_rule:
-pages_processed/blocks_classified/spans_emitted per partition). The
-per-bucket loop observes them on each bucket's write pass (``df.observe``).
-``run_one_pass`` reads them back with ONE narrow per-bucket aggregate over
-the written data (``order`` and ``kind``; ``bucket`` is the partition
-column): observing them on its write would take a conditional sum per
-bucket and metric (4 x N expressions), which measured +0.5-0.7 CPU-s on
-the write at N=16 over a 1,600-doc batch on 4 vCPUs — more than the
-read-back — and grows with N. Markers
-are built in-process as an Arrow table (``session.local_frame``), so
-committing starts no Python worker.
+pages_processed/blocks_classified/spans_emitted per partition), read
+back with ONE narrow per-bucket aggregate over the written data
+(``order`` and ``kind``; ``bucket`` is the partition column): observing
+them on the write would take a conditional sum per bucket and metric
+(4 x N expressions), which measured +0.5-0.7 CPU-s on the write at N=16
+over a 1,600-doc batch on 4 vCPUs — more than the read-back — and grows
+with N. Markers are built in-process as an Arrow table
+(``session.local_frame``), so committing starts no Python worker.
 
-Scan amplification note: the per-bucket filter re-scans the source once
-per bucket. That is the right trade at checkpoint granularity ONLY when
-the source layout lets the filter prune — at scale, land the input
-partitioned/bucketed by the same ``pmod(xxhash64(doc_id), N)`` so each
-bucket's scan reads 1/N of the files (Spark prunes on the partition
-column). On an unpartitioned source, prefer fewer buckets.
+A crash before the markers land costs at most one rerun of the
+uncommitted buckets. A one-job-per-bucket loop would lose less to a
+crash but pays N x planning and input scans on every healthy run: on a
+1,606-doc batch with N=16 on a shared 4-vCPU x86 host it cost 13-18
+CPU-s more than this path's whole 4-5 CPU-s job, so it only wins at
+three or more crashes per run.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dd_ops_ocr_spark.session import local_frame
 
@@ -116,11 +118,11 @@ def bucket_col(n_buckets: int):
 
 
 def _metric_cols():
-    """The per-bucket marker metrics, usable in ``observe`` and ``agg``.
-    ``docs`` counts rows with order == 1: the extraction contract numbers
-    each doc's reading order from 1, so it equals countDistinct(doc_id)
-    without a distinct aggregation (which observe does not allow either);
-    tests/test_ledger.py pins the invariant."""
+    """The per-bucket marker metrics, as ``agg`` expressions. ``docs``
+    counts rows with order == 1: the extraction contract numbers each
+    doc's reading order from 1, so it equals countDistinct(doc_id)
+    without a distinct aggregation; tests/test_ledger.py pins the
+    invariant."""
     return (
         F.sum((F.col("order") == 1).cast("long")).alias("docs"),
         F.count(F.lit(1)).alias("spans_emitted"),
@@ -130,16 +132,19 @@ def _metric_cols():
 
 
 def _commit_markers(spark: SparkSession, out_dir: str, run_id: str,
-                    stats: dict) -> None:
+                    n_buckets: int, stats: dict) -> None:
     """Land one ledger marker per bucket of ``stats`` (bucket -> docs,
-    spans_emitted, text_blocks, media_blocks; NULL reads as 0) in one
-    dynamic-partitioned write keyed on the commit dir name. An empty
-    ``stats`` still runs the (empty) write."""
+    spans_emitted, text_blocks, media_blocks; NULL reads as 0), each
+    recording the run's bucket count, in one dynamic-partitioned write
+    keyed on the commit dir name. An empty ``stats`` still runs the
+    (empty) write."""
     markers = local_frame(
         spark,
-        [(b, *(int(v or 0) for v in m), run_id, run_id, f"{run_id}_{b}")
+        [(b, n_buckets, *(int(v or 0) for v in m), run_id, run_id,
+          f"{run_id}_{b}")
          for b, m in stats.items()],
-        "bucket int, docs long NOT NULL, spans_emitted long NOT NULL, "
+        "bucket int, n_buckets int NOT NULL, docs long NOT NULL, "
+        "spans_emitted long NOT NULL, "
         "text_blocks long NOT NULL, media_blocks long NOT NULL, "
         "run_id string NOT NULL, committed_at_run string NOT NULL, "
         "commit string",
@@ -152,8 +157,10 @@ def _commit_markers(spark: SparkSession, out_dir: str, run_id: str,
     )
 
 
-def committed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    """Buckets with a committed ledger marker under ``out_dir``.
+def _committed(spark: SparkSession, out_dir: str) -> list[tuple[int, int | None]]:
+    """(bucket, n_buckets) of every committed ledger marker under
+    ``out_dir``. A marker written before markers recorded N reads N as
+    None, which no resume can check.
 
     The emptiness pre-check must follow the same scheme split as
     ``_parquet_nonempty``: an ``os.path.isdir`` probe on an ``hdfs://``
@@ -169,56 +176,15 @@ def committed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
     # check would then hand spark.read.parquet a dir with zero visible
     # data files — AnalysisException on the resume path itself
     if not _parquet_nonempty(path, spark):
-        return set()
-    rows = spark.read.parquet(path).select("bucket").distinct().collect()
-    return {r["bucket"] for r in rows}
+        return []
+    rows = (spark.read.schema("bucket int, n_buckets int").parquet(path)
+            .select("bucket", "n_buckets").distinct().collect())
+    return [(r[0], r[1]) for r in rows]
 
 
-def run_with_ledger(
-    spark: SparkSession,
-    spans_df: DataFrame,
-    out_dir: str,
-    run_id: str,
-    n_buckets: int = DEFAULT_BUCKETS,
-    fail_after: int | None = None,
-    extractor=None,
-) -> dict:
-    """Extract with per-bucket checkpoint commits; resumable.
-
-    ``fail_after`` aborts after committing that many buckets (test hook
-    simulating a mid-run crash). Returns a summary dict.
-    """
-    from dd_ops_ocr_spark import pipeline
-
-    extractor = extractor or pipeline.extract
-    done = committed_buckets(spark, out_dir)
-    todo = [b for b in range(n_buckets) if b not in done]
-
-    src = spans_df.withColumn("bucket", bucket_col(n_buckets))
-    processed = 0
-    for b in todo:
-        part = src.filter(F.col("bucket") == b).drop("bucket")
-        # data first (idempotent overwrite of this bucket's directory);
-        # the bucket= path component carries the column (hive-style), so
-        # loop-written and one-pass-written files share one schema.
-        out = extractor(part)
-        # Lineage/metrics observed ON the write pass itself (df.observe):
-        # no read-back scan of the written bucket, no empty-bucket
-        # special case (sums observe as NULL -> 0).
-        obs = Observation(f"lineage_{run_id}_{b}")
-        out = out.observe(obs, *_metric_cols())
-        out.write.mode("overwrite").parquet(f"{out_dir}/data/bucket={b}")
-        # obs.get is available: the write action above ran the plan
-        _commit_markers(spark, out_dir, run_id, {b: obs.get.values()})
-        processed += 1
-        if fail_after is not None and processed >= fail_after:
-            raise RuntimeError(f"injected failure after {processed} buckets")
-    return {
-        "run_id": run_id,
-        "buckets_total": n_buckets,
-        "buckets_resumed_from": len(done),
-        "buckets_processed": processed,
-    }
+def committed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
+    """Buckets with a committed ledger marker under ``out_dir``."""
+    return {b for b, _ in _committed(spark, out_dir)}
 
 
 def run_one_pass(
@@ -230,21 +196,22 @@ def run_one_pass(
     fail_after: int | None = None,
     extractor=None,
 ) -> dict:
-    """One-pass variant of ``run_with_ledger``: all uncommitted buckets are
-    extracted and written in a SINGLE job (dynamic partition overwrite by
-    bucket), then the per-bucket commit markers land from one narrow
-    aggregate over the written data (``order`` and ``kind`` per
-    ``bucket`` partition; no ``doc_id``, no distinct shuffle) — no N-scan
-    amplification, wall-time ~= the plain extract. Not an ``observe`` on
-    the write: per-bucket metrics there take 4 x N conditional sums,
-    measured dearer than this read-back (module docstring).
+    """Extract and commit every uncommitted bucket; resumable. All of them
+    are extracted and written in a SINGLE job (dynamic partition
+    overwrite by bucket), then the per-bucket commit markers land from
+    one narrow aggregate over the written data (``order`` and ``kind``
+    per ``bucket`` partition; no ``doc_id``, no distinct shuffle) — no
+    N-scan amplification, wall-time ~= the plain extract. Not an
+    ``observe`` on the write: per-bucket metrics there take 4 x N
+    conditional sums, measured dearer than this read-back (module
+    docstring).
 
     Failure granularity is the trade: a crash mid-job commits nothing, so
-    resume reprocesses every uncommitted bucket (correct, just coarser);
-    the per-bucket loop (``run_with_ledger``) remains the fine-grained
-    resume path after repeated failures. Output and ledger layouts are
-    identical between the two, so they compose: run one-pass when
-    healthy, loop to limp through a flaky stretch.
+    resume reprocesses every uncommitted bucket (correct, just coarser).
+
+    Raises ``ValueError`` before any write when ``out_dir`` holds markers
+    committed under another ``n_buckets``: bucket ids name other
+    documents under another N, so resuming would duplicate rows.
 
     ``fail_after`` simulates a crash after committing that many buckets'
     markers (data already written, remaining markers missing) — the
@@ -253,7 +220,14 @@ def run_one_pass(
     from dd_ops_ocr_spark import pipeline
 
     extractor = extractor or pipeline.extract
-    done = committed_buckets(spark, out_dir)
+    committed = _committed(spark, out_dir)
+    other = sorted({n for _, n in committed if n not in (None, n_buckets)})
+    if other:
+        raise ValueError(
+            f"{out_dir} holds buckets committed with n_buckets={other}; "
+            f"this run asks for n_buckets={n_buckets}. Resume with the "
+            "committed count, or write to a fresh output dir")
+    done = {b for b, _ in committed}
     todo = [b for b in range(n_buckets) if b not in done]
     if not todo:
         return {
@@ -293,7 +267,7 @@ def run_one_pass(
         stats.update((r[0], r[1:]) for r in agg.collect())
     if fail_after is not None:  # crash after that many markers landed
         stats = {b: stats[b] for b in todo[:fail_after]}
-    _commit_markers(spark, out_dir, run_id, stats)
+    _commit_markers(spark, out_dir, run_id, n_buckets, stats)
     if fail_after is not None and fail_after < len(todo):
         raise RuntimeError(f"injected failure after {fail_after} buckets")
     return {
@@ -301,71 +275,6 @@ def run_one_pass(
         "buckets_total": n_buckets,
         "buckets_resumed_from": len(done),
         "buckets_processed": len(todo),
-    }
-
-
-def run_with_snapshots(
-    spark: SparkSession,
-    spans_df: DataFrame,
-    table_dir: str,
-    run_id: str,
-    n_buckets: int = DEFAULT_BUCKETS,
-    fail_after: int | None = None,
-    extractor=None,
-) -> dict:
-    """Checkpointed extraction where each bucket commit is an
-    Iceberg-style snapshot append (catalog.py): the snapshot manifest IS
-    the commit marker, its properties carry the lineage + metrics
-    (run_id, bucket, docs, spans_emitted), and the output stays readable
-    at every intermediate snapshot (time travel). Resume reads the
-    committed bucket set from the snapshot lineage."""
-    from dd_ops_ocr_spark import catalog, pipeline
-
-    extractor = extractor or pipeline.extract
-    done = set()
-    try:
-        for s in catalog.snapshots(table_dir):
-            b = s.get("properties", {}).get("bucket")
-            if b is not None:
-                done.add(int(b))
-    except FileNotFoundError:
-        done = set()  # first run: no snapshot log yet — nothing committed
-
-    src = spans_df.withColumn("bucket", bucket_col(n_buckets))
-    processed = 0
-    for b in [x for x in range(n_buckets) if x not in done]:
-        part = src.filter(F.col("bucket") == b).drop("bucket")
-        out = extractor(part)
-        # One execution per bucket, not two: metrics are OBSERVED on the
-        # snapshot's own write pass (previously an .agg().collect() ran
-        # the whole extraction once just for the stats, then the write
-        # ran it again) and injected into the manifest via the lazy
-        # properties_fn hook, which write_snapshot evaluates after the
-        # data files are staged.
-        obs = Observation(f"lineage_{run_id}_{b}")
-        out = out.observe(
-            obs,
-            F.sum((F.col("order") == 1).cast("long")).alias("docs"),
-            F.count(F.lit(1)).alias("spans"),
-        )
-        catalog.write_snapshot(
-            out,
-            table_dir,
-            operation="append" if (done or processed) else "overwrite",
-            properties={"run_id": run_id, "bucket": b},
-            properties_fn=lambda: {
-                "docs": int(obs.get["docs"] or 0),
-                "spans_emitted": int(obs.get["spans"] or 0),
-            },
-        )
-        processed += 1
-        if fail_after is not None and processed >= fail_after:
-            raise RuntimeError(f"injected failure after {processed} buckets")
-    return {
-        "run_id": run_id,
-        "buckets_total": n_buckets,
-        "buckets_resumed_from": len(done),
-        "buckets_processed": processed,
     }
 
 

@@ -4,7 +4,7 @@ Submit:
     zip -qr ddops.zip dd_ops_ocr_spark
     spark-submit --master <cluster> --py-files ddops.zip \
         jobs/extract_job.py --input <spans parquet or sf dir> \
-        --output /path/out --run-id r42 [--salted] [--buckets 64]
+        --output /path/out --run-id r42 [--salted] [--buckets 64 | --snapshots]
 
 Python workers: ``session.build_spark`` forks them from
 ``dd_ops_ocr_spark.pyworker``, which stops each task from re-reading
@@ -18,7 +18,11 @@ add those files to sys.path per task, after the daemon has started, and
 a daemon that cannot import its module fails every Python task.
 
 Resumable: re-running with the same --output continues from the ledger
-(only uncommitted buckets reprocess — see dd_ops_ocr_spark/ledger.py).
+(only uncommitted buckets reprocess — see dd_ops_ocr_spark/ledger.py);
+--buckets must then match the count the output was committed with.
+--snapshots commits the run as one Iceberg-style snapshot
+(dd_ops_ocr_spark/incremental.py) instead: a re-run extracts only the
+documents the table has not seen, and ignores --buckets.
 """
 
 from __future__ import annotations
@@ -36,21 +40,26 @@ def main(argv: list[str] | None = None) -> int:
                    help="spans parquet path, or a testdata sf dir to synthesize from")
     p.add_argument("--output", required=True)
     p.add_argument("--run-id", default=None)
-    p.add_argument("--buckets", type=int, default=64)
+    p.add_argument("--buckets", type=int, default=64,
+                   help="checkpoint buckets of the default ledger sink "
+                        "(a resume must pass the same count); the "
+                        "--snapshots sink ignores it")
     p.add_argument("--salted", action="store_true",
                    help="use the skew-salted extractor")
     p.add_argument("--snapshots", action="store_true",
-                   help="commit each bucket as an Iceberg-style snapshot "
-                        "(catalog.py) instead of plain marker files")
-    p.add_argument("--per-bucket", action="store_true",
-                   help="one job per bucket (fine-grained resume through "
-                        "a flaky stretch) instead of the default one-pass "
-                        "write of every uncommitted bucket")
+                   help="commit the run as one Iceberg-style snapshot "
+                        "(catalog.py) of the documents the table has not "
+                        "seen, instead of bucket ledger markers")
     p.add_argument("--pages-per-bucket", type=int, default=25)
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
 
+    # only stop a session this job created (same ownership rule as
+    # jobs/maintain_table.py): a caller's session outlives main()
+    prior = (
+        SparkSession.getActiveSession() or SparkSession._instantiatedSession
+    )
     spark = (
         SparkSession.builder.appName("ddops_extract")
         .config("spark.ui.showConsoleProgress", "false")
@@ -61,7 +70,8 @@ def main(argv: list[str] | None = None) -> int:
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         .getOrCreate()
     )
-    from dd_ops_ocr_spark import corpus, ledger, pipeline, sources
+    created = spark is not prior
+    from dd_ops_ocr_spark import corpus, incremental, ledger, pipeline, sources
     from dd_ops_ocr_spark.plans.salting import extract_salted
 
     if os.path.isfile(f"{args.input}/documents.parquet"):
@@ -78,15 +88,12 @@ def main(argv: list[str] | None = None) -> int:
     )
     t0 = time.monotonic()
     if args.snapshots:
-        runner = ledger.run_with_snapshots
-    elif args.per_bucket:
-        runner = ledger.run_with_ledger
+        summary = incremental.extract_incremental(
+            spark, spans, args.output, run_id, extractor=extractor)
     else:
-        runner = ledger.run_one_pass
-    summary = runner(
-        spark, spans, args.output, run_id,
-        n_buckets=args.buckets, extractor=extractor,
-    )
+        summary = ledger.run_one_pass(
+            spark, spans, args.output, run_id,
+            n_buckets=args.buckets, extractor=extractor)
     # write unconditionally: a re-run over FIXED input must clear the
     # previous run's quarantine rows (an nq>0-gated write left stale rows
     # on disk while the summary reported quarantined_docs=0), and the
@@ -97,7 +104,8 @@ def main(argv: list[str] | None = None) -> int:
         elapsed_sec=round(time.monotonic() - t0, 3), quarantined_docs=nq
     )
     print(json.dumps(summary))
-    spark.stop()
+    if created:
+        spark.stop()
     return 0
 
 

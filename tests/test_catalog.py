@@ -63,29 +63,42 @@ def test_concurrent_committers_lose_no_update(spark, table):
     assert catalog.read_table(spark, table).count() == 5
 
 
-def test_snapshot_checkpoint_crash_resume(spark, table):
-    """run_with_snapshots: crash after 2/6 buckets, resume, output equals
-    an uninterrupted run and the snapshot lineage records every bucket."""
-    from dd_ops_ocr_spark import ledger
+def test_snapshot_checkpoint_crash_resume(spark, table, monkeypatch):
+    """extract_incremental (the snapshot sink) crashes in its commit
+    window: data files staged, manifest not published. No snapshot may
+    be visible, and the rerun must commit exactly one snapshot equal to
+    an uninterrupted extraction, its manifest carrying the rerun's
+    lineage and per-file row counts that add up to the output."""
+    from dd_ops_ocr_spark import incremental
+
+    def crash(*_a, **_k):
+        raise RuntimeError("injected crash before publish")
 
     spans = corpus.build_spans_df(spark, SF_SMOKE).cache()
+    monkeypatch.setattr(catalog, "_publish", crash)
     with pytest.raises(RuntimeError, match="injected"):
-        ledger.run_with_snapshots(spark, spans, table, "runA",
-                                  n_buckets=6, fail_after=2)
-    summary = ledger.run_with_snapshots(spark, spans, table, "runB",
-                                        n_buckets=6)
-    assert summary["buckets_resumed_from"] == 2
-    assert summary["buckets_processed"] == 4
+        incremental.extract_incremental(spark, spans, table, "runA")
+    monkeypatch.undo()
+    assert catalog.current_snapshot_id(table) is None
+    assert os.listdir(os.path.join(table, "data"))  # staged, unpublished
+    with pytest.raises(FileNotFoundError):
+        catalog.read_table(spark, table)
+
+    summary = incremental.extract_incremental(spark, spans, table, "runB")
+    assert summary["operation"] == "overwrite"
 
     got = catalog.read_table(spark, table)
     want = pipeline.extract(spans)
     cols = ["doc_id", "kind", "text", "media_ref", "order"]
+    assert got.count() == want.count()
     assert got.select(cols).exceptAll(want.select(cols)).count() == 0
     assert want.select(cols).exceptAll(got.select(cols)).count() == 0
-    buckets = [s["properties"]["bucket"] for s in catalog.snapshots(table)]
-    assert sorted(buckets) == list(range(6))
-    assert sum(s["properties"]["spans_emitted"]
-               for s in catalog.snapshots(table)) == want.count()
+    (snap,) = catalog.snapshots(table)
+    assert snap["snapshot_id"] == summary["snapshot_id"]
+    assert snap["properties"]["run_id"] == "runB"
+    manifest = catalog._read_manifest(table, snap["snapshot_id"])
+    assert sum(st["rows"] for st in manifest["file_stats"].values()) \
+        == want.count()
 
 
 def test_uncommitted_files_invisible(spark, table):

@@ -23,16 +23,16 @@ def test_crash_and_resume_exact(spark, spans):
     full_dir = tempfile.mkdtemp(prefix="ledger_full_")
     crash_dir = tempfile.mkdtemp(prefix="ledger_crash_")
     try:
-        ledger.run_with_ledger(spark, spans, full_dir, "run_full",
-                               n_buckets=N_BUCKETS)
+        ledger.run_one_pass(spark, spans, full_dir, "run_full",
+                            n_buckets=N_BUCKETS)
 
         with pytest.raises(RuntimeError, match="injected failure"):
-            ledger.run_with_ledger(spark, spans, crash_dir, "run_a",
-                                   n_buckets=N_BUCKETS, fail_after=3)
+            ledger.run_one_pass(spark, spans, crash_dir, "run_a",
+                                n_buckets=N_BUCKETS, fail_after=3)
         assert len(ledger.committed_buckets(spark, crash_dir)) == 3
 
-        summary = ledger.run_with_ledger(spark, spans, crash_dir, "run_b",
-                                         n_buckets=N_BUCKETS)
+        summary = ledger.run_one_pass(spark, spans, crash_dir, "run_b",
+                                      n_buckets=N_BUCKETS)
         assert summary["buckets_resumed_from"] == 3
         assert summary["buckets_processed"] == N_BUCKETS - 3
 
@@ -47,59 +47,66 @@ def test_crash_and_resume_exact(spark, spans):
 
         led = ledger.read_ledger(spark, crash_dir).toPandas()
         assert len(led) == N_BUCKETS
-        assert set(led[led.committed_at_run == "run_a"].bucket) == set(range(3)) or \
-            len(led[led.committed_at_run == "run_a"]) == 3
+        assert set(led[led.committed_at_run == "run_a"].bucket) == {0, 1, 2}
         assert led["spans_emitted"].sum() == a.count()
     finally:
         shutil.rmtree(full_dir, ignore_errors=True)
         shutil.rmtree(crash_dir, ignore_errors=True)
 
 
-def test_one_pass_crash_then_loop_resume(spark, spans):
-    """One-pass writes all data in a single job; a crash in the marker
-    window (data written, markers partial) must resume cleanly on EITHER
-    path and end identical to an uninterrupted loop run — the two ledger
-    variants compose."""
-    full_dir = tempfile.mkdtemp(prefix="ledger_full1_")
-    op_dir = tempfile.mkdtemp(prefix="ledger_op_")
-    op2_dir = tempfile.mkdtemp(prefix="ledger_op2_")
-    try:
-        ledger.run_with_ledger(spark, spans, full_dir, "run_full",
-                               n_buckets=N_BUCKETS)
+def test_resume_with_other_bucket_count_raises(spark, spans, tmp_path):
+    """Bucket ids only name the same documents under the same N. A
+    resume with another N must be refused before it writes: read as this
+    run's buckets, another N's markers would skip the wrong documents and
+    re-extract committed ones (sf0.001, N=4 then N=8: 91,300 rows against
+    79,673, 11,627 of them duplicates). The committed N must still
+    resume to the uninterrupted result."""
+    out = tmp_path / "out"
+    full_dir, d = str(tmp_path / "full"), str(out)
 
-        # one-pass, crash after 3 markers -> resume with the bucket LOOP
-        with pytest.raises(RuntimeError, match="injected failure"):
-            ledger.run_one_pass(spark, spans, op_dir, "run_a",
-                                n_buckets=N_BUCKETS, fail_after=3)
-        assert len(ledger.committed_buckets(spark, op_dir)) == 3
-        s = ledger.run_with_ledger(spark, spans, op_dir, "run_b",
-                                   n_buckets=N_BUCKETS)
-        assert s["buckets_resumed_from"] == 3
+    def tree():  # every file under the out dir (data and ledger), mtimes
+        return {(str(p.relative_to(out)), p.stat().st_mtime_ns)
+                for p in out.rglob("*") if p.is_file()}
 
-        # loop, crash after 2 -> resume with ONE-PASS
-        with pytest.raises(RuntimeError, match="injected failure"):
-            ledger.run_with_ledger(spark, spans, op2_dir, "run_c",
-                                   n_buckets=N_BUCKETS, fail_after=2)
-        s = ledger.run_one_pass(spark, spans, op2_dir, "run_d",
-                                n_buckets=N_BUCKETS)
-        assert s["buckets_resumed_from"] == 2
-        assert s["buckets_processed"] == N_BUCKETS - 2
+    ledger.run_one_pass(spark, spans, full_dir, "run_full", n_buckets=4)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        ledger.run_one_pass(spark, spans, d, "run_a", n_buckets=4,
+                            fail_after=1)
+    before = tree()
+    assert any(f.startswith("data/") for f, _ in before)
+    with pytest.raises(ValueError, match=r"n_buckets=\[4\].*n_buckets=8"):
+        ledger.run_one_pass(spark, spans, d, "run_b", n_buckets=8)
+    assert tree() == before
+    assert ledger.committed_buckets(spark, d) == {0}
 
-        a = ledger.read_output(spark, full_dir)
-        cols = ["doc_id", "kind", "text", "media_ref", "order"]
-        for d in (op_dir, op2_dir):
-            b = ledger.read_output(spark, d)
-            assert a.count() == b.count()
-            assert (
-                a.select(cols).exceptAll(b.select(cols)).count() == 0
-                and b.select(cols).exceptAll(a.select(cols)).count() == 0
-            )
-            led = ledger.read_ledger(spark, d).toPandas()
-            assert len(led) == N_BUCKETS
-            assert led["spans_emitted"].sum() == a.count()
-    finally:
-        for d in (full_dir, op_dir, op2_dir):
-            shutil.rmtree(d, ignore_errors=True)
+    s = ledger.run_one_pass(spark, spans, d, "run_c", n_buckets=4)
+    assert (s["buckets_resumed_from"], s["buckets_processed"]) == (1, 3)
+    cols = ["doc_id", "kind", "text", "media_ref", "order"]
+    a = ledger.read_output(spark, full_dir).select(cols)
+    b = ledger.read_output(spark, d).select(cols)
+    assert a.count() == b.count()
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    led = ledger.read_ledger(spark, d).toPandas()
+    assert sorted(led.bucket) == [0, 1, 2, 3]
+    assert (led.n_buckets == 4).all()
+    assert led["spans_emitted"].sum() == a.count()
+
+
+def test_markers_without_bucket_count_still_resume(spark, spans, tmp_path):
+    """A ledger written before markers recorded N has no n_buckets
+    column. Its markers read N as unknown: the resume probe must not fail
+    on the missing column, and the resume proceeds unchecked."""
+    d = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        ledger.run_one_pass(spark, spans, d, "run_a", n_buckets=4,
+                            fail_after=1)
+    old = ledger.read_ledger(spark, d).drop("n_buckets")
+    old.write.partitionBy("commit").parquet(str(tmp_path / "old_ledger"))
+    shutil.rmtree(f"{d}/ledger")
+    shutil.move(str(tmp_path / "old_ledger"), f"{d}/ledger")
+
+    s = ledger.run_one_pass(spark, spans, d, "run_b", n_buckets=4)
+    assert (s["buckets_resumed_from"], s["buckets_processed"]) == (1, 3)
 
 
 def test_bucket_assignment_deterministic(spark, spans):
@@ -175,11 +182,12 @@ def test_hadoop_parquet_probe_ignores_hidden_ancestors(spark, tmp_path, ancestor
 
 
 def test_observed_lineage_single_pass_and_docs_invariant(spark, spans):
-    """The commit markers' metrics now come from df.observe on the
-    write pass itself. Two claims pinned here: (1) the extraction runs
-    ONCE per bucket (the old snapshot path ran it twice — once for
-    .agg().collect(), once for the write); (2) the observe-compatible
-    docs metric (rows with order == 1) equals countDistinct(doc_id)."""
+    """The commit markers' metrics come from one aggregate over the
+    written data, not from a second run of the extraction. Two claims
+    pinned here: (1) the kernel runs ONCE per output row (the commit
+    aggregate reads the written parquet, it does not re-extract); (2)
+    the marker's docs metric (rows with order == 1) equals
+    countDistinct(doc_id)."""
     from dd_ops_ocr_spark import pipeline
     from pyspark.sql import functions as F
 
@@ -197,9 +205,8 @@ def test_observed_lineage_single_pass_and_docs_invariant(spark, spans):
 
     out_dir = tempfile.mkdtemp(prefix="ledger_obs_")
     try:
-        ledger.run_with_ledger(spark, spans, out_dir, "run_obs",
-                               n_buckets=4,
-                               extractor=counting_extractor)
+        ledger.run_one_pass(spark, spans, out_dir, "run_obs",
+                            n_buckets=4, extractor=counting_extractor)
         written = spark.read.parquet(f"{out_dir}/data")
         total_rows = written.count()
         # single pass: every output row crossed the kernel exactly once
@@ -284,8 +291,7 @@ def test_one_pass_markers_match_recompute_across_resume(spark, spans, salted):
         shutil.rmtree(d, ignore_errors=True)
 
 
-@pytest.mark.parametrize("runner", ["run_one_pass", "run_with_ledger"])
-def test_marker_frames_plan_without_python_rdd(spark, spans, runner):
+def test_marker_frames_plan_without_python_rdd(spark, spans):
     """The commit path builds its marker frame in-process as an Arrow
     table (LocalTableScan). A list-built frame would plan as
     ``Scan ExistingRDD`` over a pickled PythonRDD and start Python
@@ -302,7 +308,7 @@ def test_marker_frames_plan_without_python_rdd(spark, spans, runner):
     before = plans()
     d = tempfile.mkdtemp(prefix="ledger_plan_")
     try:
-        getattr(ledger, runner)(spark, spans, d, "run_p", n_buckets=4)
+        ledger.run_one_pass(spark, spans, d, "run_p", n_buckets=4)
         ledger_plans = [p for k, p in plans().items()
                         if k not in before and f"{d}/ledger" in p]
         assert ledger_plans
@@ -311,3 +317,42 @@ def test_marker_frames_plan_without_python_rdd(spark, spans, runner):
             assert "ExistingRDD" not in p and "PythonRDD" not in p, p
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_extract_job_reruns_commit_nothing_and_keep_the_session(
+        spark, spans, tmp_path, capsys):
+    """jobs/extract_job.py in-process on both sinks, each run twice over
+    fixed input: the rerun commits nothing, every run writes the
+    quarantine, and main() leaves the caller's session running (it used
+    to stop it unconditionally)."""
+    import json
+
+    from dd_ops_ocr_spark import catalog
+    from dd_ops_ocr_spark.schema import SPANS_SCHEMA
+    from jobs.extract_job import main
+
+    src = str(tmp_path / "spans")
+    invalid = spark.createDataFrame(
+        [("bad_empty", []), ("bad_offset", [("text", "x", None, -1)])],
+        SPANS_SCHEMA)
+    spans.filter("doc_id < 'doc_000100'").unionByName(invalid) \
+        .write.parquet(src)
+
+    def run(out, run_id, *extra):
+        assert main(["--input", src, "--output", out, "--run-id", run_id,
+                     "--buckets", "4", *extra]) == 0
+        summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert summary["quarantined_docs"] == 2
+        assert spark.read.parquet(f"{out}/quarantine").count() == 2
+        return summary
+
+    led_out = str(tmp_path / "ledger_sink")
+    assert run(led_out, "a")["buckets_processed"] == 4
+    assert run(led_out, "b")["buckets_processed"] == 0
+
+    snap_out = str(tmp_path / "snapshot_sink")
+    assert run(snap_out, "a", "--snapshots")["operation"] == "overwrite"
+    assert run(snap_out, "b", "--snapshots")["operation"] == "noop"
+
+    rows = ledger.read_output(spark, led_out).count()
+    assert rows > 0 and catalog.read_table(spark, snap_out).count() == rows

@@ -129,9 +129,8 @@ def test_resume_delta_from_dirs_completes_corpus(spark, spans):
 def test_clean_stale_results(spark, spans):
     with tempfile.TemporaryDirectory() as tmp:
         out_dir = os.path.join(tmp, "out")
-        # one-pass writes ALL bucket data in one job, then markers one
-        # by one — crashing after 3 markers leaves 5 orphan data dirs
-        # (run_with_ledger's fail_after fires post-marker: no orphans)
+        # one-pass writes ALL bucket data in one job, then the markers —
+        # crashing after 3 markers leaves 5 orphan data dirs
         with pytest.raises(RuntimeError):
             ledger.run_one_pass(spark, spans, out_dir, "run_a",
                                 n_buckets=N_BUCKETS, fail_after=3)
@@ -153,8 +152,8 @@ def test_clean_stale_results(spark, spans):
         assert {int(n.split("=", 1)[1]) for n in os.listdir(data)
                 if n.startswith("bucket=")} == committed
         # cleanup is hygiene, never correctness: resume still completes
-        s = ledger.run_with_ledger(spark, spans, out_dir, "run_b",
-                                   n_buckets=N_BUCKETS)
+        s = ledger.run_one_pass(spark, spans, out_dir, "run_b",
+                                n_buckets=N_BUCKETS)
         assert s["buckets_processed"] == N_BUCKETS - len(committed)
         got = ledger.read_output(spark, out_dir).count()
         with tempfile.TemporaryDirectory() as ref_tmp:

@@ -1,6 +1,6 @@
 """Checkpointed extraction sink over a NON-local Hadoop filesystem.
 
-The deployment sink (`ledger.run_with_ledger`) claims resume-exactly
+The deployment sink (`ledger.run_one_pass`) claims resume-exactly
 semantics on "any filesystem the cluster's Hadoop conf knows". The
 sandbox has no HDFS/S3 endpoint, so this exercises the same contract
 through Hadoop's ViewFileSystem (`viewfs://`) — a real production
@@ -53,18 +53,18 @@ def test_crash_and_resume_exact_on_viewfs(spark, viewfs_root):
     out_dir = f"{viewfs_root}/extract_out"
     try:
         # uninterrupted local run = the equality reference
-        ledger.run_with_ledger(spark, spans, local_dir, "ref",
-                               n_buckets=N_BUCKETS)
+        ledger.run_one_pass(spark, spans, local_dir, "ref",
+                            n_buckets=N_BUCKETS)
 
         with pytest.raises(RuntimeError, match="injected failure"):
-            ledger.run_with_ledger(spark, spans, out_dir, "run_a",
-                                   n_buckets=N_BUCKETS, fail_after=2)
+            ledger.run_one_pass(spark, spans, out_dir, "run_a",
+                                n_buckets=N_BUCKETS, fail_after=2)
         # the committed set must be visible THROUGH the viewfs URI —
         # an os.path probe here returns set() and resume restarts from 0
         assert len(ledger.committed_buckets(spark, out_dir)) == 2
 
-        summary = ledger.run_with_ledger(spark, spans, out_dir, "run_b",
-                                         n_buckets=N_BUCKETS)
+        summary = ledger.run_one_pass(spark, spans, out_dir, "run_b",
+                                      n_buckets=N_BUCKETS)
         assert summary["buckets_resumed_from"] == 2
         assert summary["buckets_processed"] == N_BUCKETS - 2
 

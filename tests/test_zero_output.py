@@ -61,20 +61,6 @@ def test_one_pass_all_buckets_empty(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_loop_ledger_commits_empty_bucket(spark):
-    spans = corpus.build_spans_df(spark, SF_SMOKE)
-    only0 = spans.filter(ledger.bucket_col(N_BUCKETS) == 0).cache()
-    d = tempfile.mkdtemp(prefix="ledger_loopempty_")
-    try:
-        ledger.run_with_ledger(spark, only0, d, "run_a", n_buckets=N_BUCKETS)
-        assert ledger.committed_buckets(spark, d) == set(range(N_BUCKETS))
-        s2 = ledger.run_with_ledger(spark, only0, d, "run_b",
-                                    n_buckets=N_BUCKETS)
-        assert s2["buckets_processed"] == 0
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def test_incremental_zero_output_doc_counts_as_seen(spark):
     """A doc emitting zero output rows must land in the seen-doc roster:
     re-delivering it is a noop, not an endless re-extract + new snapshot."""
