@@ -22,8 +22,9 @@ actually relies on, directly over parquet files:
     (``read_table(..., snapshot_id=k)``); appends create a child
     snapshot referencing the parent (lineage).
 
-The run ledger (ledger.py) composes with this: each bucket commit can be
-a snapshot append, giving resume-partition-exactly WITH snapshot reads.
+The snapshot sink of the batch job is ``incremental.extract_incremental``:
+one atomic snapshot per run, with the processed-doc roster committed as
+an aux table in the same manifest, so a rerun extracts only unseen docs.
 
 Not a port of Iceberg — just the minimal spec-compatible behavior the
 reference's session-directory bookkeeping (step0/06_directory_manager.py)
@@ -36,6 +37,7 @@ import datetime
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 
@@ -184,20 +186,23 @@ def _write_files(df: DataFrame, table_dir: str) -> tuple[list[str], dict]:
     per-file footer stats keyed by final name (the data-skipping index,
     Iceberg's manifest-entry lower/upper bounds)."""
     stage = os.path.join(table_dir, f"_stage-{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(_spark_url(stage))
     data_dir = os.path.join(table_dir, "data")
-    os.makedirs(data_dir, exist_ok=True)
     moved, stats = [], {}
-    for name in sorted(os.listdir(stage)):
-        if not name.endswith(".parquet"):
-            continue
-        final = f"{uuid.uuid4().hex}-{name}"
-        stats[final] = _harvest_stats(os.path.join(stage, name))
-        os.rename(os.path.join(stage, name), os.path.join(data_dir, final))
-        moved.append(final)
-    for leftover in os.listdir(stage):
-        os.remove(os.path.join(stage, leftover))
-    os.rmdir(stage)
+    try:
+        df.write.mode("overwrite").parquet(_spark_url(stage))
+        os.makedirs(data_dir, exist_ok=True)
+        for name in sorted(os.listdir(stage)):
+            if not name.endswith(".parquet"):
+                continue
+            final = f"{uuid.uuid4().hex}-{name}"
+            stats[final] = _harvest_stats(os.path.join(stage, name))
+            os.rename(os.path.join(stage, name), os.path.join(data_dir, final))
+            moved.append(final)
+    except BaseException:
+        _remove_staged(table_dir, moved)  # no manifest names them yet
+        raise
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
     return moved, stats
 
 
@@ -367,7 +372,15 @@ def write_snapshot(df: DataFrame, table_dir: str, operation: str = "overwrite",
     rewrite) the parent's aux file references are carried forward
     verbatim for every key not explicitly re-supplied — otherwise
     maintenance would silently drop side tables and a later
-    expire_snapshots would reclaim their files."""
+    expire_snapshots would reclaim their files.
+
+    Staged files sit in ``data/`` unreferenced until the manifest link,
+    the commit point, and expire_snapshots never sweeps blindly. So a
+    call that raises before its link removes every file it staged (data,
+    aux and the staging dir). One that raises after the link, in the
+    pointer advance, has committed: its files stay and readers heal the
+    pointer. A killed process runs no cleanup; its staged files stay
+    unreferenced (invisible to readers, never reclaimed)."""
     table_dir = _norm_table_dir(table_dir)
     if expected_parent is not None and \
             (_max_manifest_id(table_dir) or None) != expected_parent:
@@ -376,84 +389,98 @@ def write_snapshot(df: DataFrame, table_dir: str, operation: str = "overwrite",
             f"table advanced past snapshot {expected_parent} "
             "before staging"
         )
-    files, stats = _write_files(df, table_dir)
-    aux_files = {}
-    for k, v in (aux or {}).items():
-        aux_files[k], _ = _write_files(v, table_dir)
-    while True:
-        parent = _max_manifest_id(table_dir) or None
-        if expected_parent is not None and parent != expected_parent:
-            # the table advanced while we were staging: our files were
-            # never referenced by any published manifest, so removing
-            # them is safe and prevents a permanent orphan leak (there
-            # is deliberately no blind orphan sweep to catch them later)
-            _remove_staged(
-                table_dir,
-                files + [f for fs in aux_files.values() for f in fs],
-            )
-            raise CommitConflict(
-                f"table advanced to snapshot {parent}; "
-                f"commit was derived from {expected_parent}"
-            )
-        all_files = files
-        all_stats = dict(stats)
-        all_aux = dict(aux_files)
-        sid = (parent or 0) + 1
-        all_deletes: list[str] = []
-        all_eq_deletes: list = []
-        # per-file sequence numbers (Iceberg's data sequence): equality
-        # deletes apply only to files SEQUENCED BEFORE them, which is
-        # what lets an upsert's own appended rows survive its delete
-        all_seq = {f: sid for f in files}
-        if parent is not None and operation in ("append", "compact"):
-            pm = _read_manifest(table_dir, parent)
-            if operation == "append":
-                all_files = pm["files"] + files
-                # parent files keep their stats; pre-stats parents simply
-                # contribute no entries (their files are never pruned)
-                all_stats = {**pm.get("file_stats", {}), **stats}
-                for k, pfiles in pm.get("aux", {}).items():
-                    all_aux[k] = pfiles + aux_files.get(k, [])
-                # appending data resolves nothing: the parent's delete
-                # masks still apply to the carried data files
-                all_deletes = pm.get("delete_files", [])
-                all_eq_deletes = pm.get("eq_delete_files", [])
-                all_seq = {**pm.get("file_seq", {}), **all_seq}
-            else:  # compact rewrites DATA only; aux rides along unchanged
-                for k, pfiles in pm.get("aux", {}).items():
-                    all_aux.setdefault(k, pfiles)
-                # deletes (both kinds) are PURGED by a rewrite: compact
-                # reads through read_table, which already applied them,
-                # so the new file set has no masked rows (Iceberg:
-                # rewrite removes dangling deletes)
-        manifest = {
-            "snapshot_id": sid,
-            "parent_id": parent,
-            "operation": operation,
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "files": all_files,
-            "file_stats": all_stats,
-            "aux": all_aux,
-            "delete_files": all_deletes,
-            "eq_delete_files": all_eq_deletes,
-            "file_seq": all_seq,
-            # schema rides in the manifest (like Iceberg's) so a snapshot
-            # whose data file list is EMPTY — e.g. a batch where every doc
-            # legitimately extracted to zero rows — stays readable as an
-            # empty DataFrame instead of crashing the parquet reader.
-            # Appends union it with the parent's (schema evolution):
-            # older files' missing columns read as NULL.
-            "schema": (
-                _union_schema(pm.get("schema"), df.schema)
-                if parent is not None and operation == "append"
-                else df.schema.json()
-            ),
-            "properties": properties or {},
-        }
-        try:
-            return _publish(table_dir, manifest)
-        except FileExistsError:
-            continue  # lost the race — re-read parent and retry
+    staged: list[str] = []
+    sid = None
+    try:
+        files, stats = _write_files(df, table_dir)
+        staged += files
+        aux_files = {}
+        for k, v in (aux or {}).items():
+            aux_files[k], _ = _write_files(v, table_dir)
+            staged += aux_files[k]
+        while True:
+            parent = _max_manifest_id(table_dir) or None
+            if expected_parent is not None and parent != expected_parent:
+                # the table advanced while we were staging
+                raise CommitConflict(
+                    f"table advanced to snapshot {parent}; "
+                    f"commit was derived from {expected_parent}"
+                )
+            all_files = files
+            all_stats = dict(stats)
+            all_aux = dict(aux_files)
+            sid = (parent or 0) + 1
+            all_deletes: list[str] = []
+            all_eq_deletes: list = []
+            # per-file sequence numbers (Iceberg's data sequence): equality
+            # deletes apply only to files SEQUENCED BEFORE them, which is
+            # what lets an upsert's own appended rows survive its delete
+            all_seq = {f: sid for f in files}
+            if parent is not None and operation in ("append", "compact"):
+                pm = _read_manifest(table_dir, parent)
+                if operation == "append":
+                    all_files = pm["files"] + files
+                    # parent files keep their stats; pre-stats parents simply
+                    # contribute no entries (their files are never pruned)
+                    all_stats = {**pm.get("file_stats", {}), **stats}
+                    for k, pfiles in pm.get("aux", {}).items():
+                        all_aux[k] = pfiles + aux_files.get(k, [])
+                    # appending data resolves nothing: the parent's delete
+                    # masks still apply to the carried data files
+                    all_deletes = pm.get("delete_files", [])
+                    all_eq_deletes = pm.get("eq_delete_files", [])
+                    all_seq = {**pm.get("file_seq", {}), **all_seq}
+                else:  # compact rewrites DATA only; aux rides along unchanged
+                    for k, pfiles in pm.get("aux", {}).items():
+                        all_aux.setdefault(k, pfiles)
+                    # deletes (both kinds) are PURGED by a rewrite: compact
+                    # reads through read_table, which already applied them,
+                    # so the new file set has no masked rows (Iceberg:
+                    # rewrite removes dangling deletes)
+            manifest = {
+                "snapshot_id": sid,
+                "parent_id": parent,
+                "operation": operation,
+                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+                "files": all_files,
+                "file_stats": all_stats,
+                "aux": all_aux,
+                "delete_files": all_deletes,
+                "eq_delete_files": all_eq_deletes,
+                "file_seq": all_seq,
+                # schema rides in the manifest (like Iceberg's) so a snapshot
+                # whose data file list is EMPTY — e.g. a batch where every doc
+                # legitimately extracted to zero rows — stays readable as an
+                # empty DataFrame instead of crashing the parquet reader.
+                # Appends union it with the parent's (schema evolution):
+                # older files' missing columns read as NULL.
+                "schema": (
+                    _union_schema(pm.get("schema"), df.schema)
+                    if parent is not None and operation == "append"
+                    else df.schema.json()
+                ),
+                "properties": properties or {},
+            }
+            try:
+                return _publish(table_dir, manifest)
+            except FileExistsError:
+                continue  # lost the race — re-read parent and retry
+    except BaseException:
+        if sid is None or not _lists_any(table_dir, sid, staged):
+            _remove_staged(table_dir, staged)
+        raise
+
+
+def _lists_any(table_dir: str, sid: int, names: list[str]) -> bool:
+    """Whether snapshot ``sid`` is linked and its manifest lists any of
+    ``names`` as data or aux. Staged names are uuid-prefixed, so a
+    manifest listing one is the manifest of the commit that staged it."""
+    try:
+        m = _read_manifest(table_dir, sid)
+    except FileNotFoundError:
+        return False
+    return not set(names).isdisjoint(
+        set(m["files"]).union(*m.get("aux", {}).values()))
 
 
 def _remove_staged(table_dir: str, names: list[str]) -> None:

@@ -242,7 +242,6 @@ def materialize_spans(
     out_path: str,
     n_partitions: int = 32,
     replicate: int = 1,
-    split_pages: int | None = None,
 ) -> str:
     """Write the synthetic spans table to parquet once (bench input cache).
 
@@ -251,33 +250,7 @@ def materialize_spans(
     ``plans.salting.extract_salted_pruned`` then PRUNES at the file level
     instead of re-reading 100% of the corpus to find the tail docs — the
     landing-time partition column a 100 TB deployment would carry. Plain
-    readers are unaffected (the extra column rides along).
-
-    ``split_pages`` additionally bounds ROW granularity at land time
-    (VERDICT r4 #7): documents spanning more than ``split_pages`` pages
-    are landed as CONTINUATION rows ``(doc_id, part, spans)``, each
-    holding at most ``split_pages`` consecutive pages (part = page div
-    split_pages; original relative span order preserved within a part).
-    With it, even a nested-row scan is task-bounded — no single input
-    row can carry a 100x document — at the price that doc-global
-    operators must reassemble parts (``plans.bounded`` does this with
-    two-phase aggs; see ``plans.split_landed.extract_split_landed``).
-    Small docs land unchanged as a single part=0 row."""
-    df = build_spans_df(spark, sf_dir, replicate=replicate)
-    return land_spans(
-        df, out_path, n_partitions=n_partitions, split_pages=split_pages
-    )
-
-
-def land_spans(
-    df,
-    out_path: str,
-    n_partitions: int = 32,
-    split_pages: int | None = None,
-) -> str:
-    """Land any (doc_id, spans) DataFrame in the production layout:
-    hive-partitioned by size_class, optionally with mega-docs split into
-    bounded continuation rows (see materialize_spans docstring)."""
+    readers are unaffected (the extra column rides along)."""
     from pyspark.sql import functions as F
 
     from dd_ops_ocr_spark.plans.salting import PAGES_PER_BUCKET
@@ -289,58 +262,14 @@ def land_spans(
         ) >= PAGES_PER_BUCKET,
         F.lit("big"),
     ).otherwise(F.lit("small"))
-    df = df.withColumn("size_class", size_class)
-    if split_pages is not None:
-        # split big docs only: explode with the original array position,
-        # bucket by page range, reassemble each part ordered by position
-        # (all JVM expressions). Persist the source FIRST: the small and
-        # big branches below are two consumers of the same plan, and for
-        # a synthesized corpus that plan is the Python span generation —
-        # without the persist each branch re-executes it over the full
-        # corpus, doubling the dominant landing cost (the extra shuffle
-        # was never the expensive part).
-        src = df.persist()
-        small = src.filter(F.col("size_class") == "small").withColumn(
-            "part", F.lit(0)
-        )
-        big = (
-            src.filter(F.col("size_class") == "big")
-            .select(
-                "doc_id", "size_class", F.posexplode("spans").alias("pos", "s")
-            )
-            .withColumn(
-                # integer div, matching the codebase's exact page
-                # arithmetic ('offset div STRIDE'): float true-division
-                # loses exactness once offset * ulp crosses the divisor
-                "part",
-                F.expr(f"int(s.offset div {STRIDE * split_pages})"),
-            )
-            .groupBy("doc_id", "size_class", "part")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "s"))).alias("ps")
-            )
-            .select(
-                "doc_id",
-                F.expr("transform(ps, x -> x.s)").alias("spans"),
-                "size_class",
-                "part",
-            )
-        )
-        df = small.select("doc_id", "spans", "size_class", "part").unionByName(
-            big
-        )
-        # distribute by (doc_id, part) so one mega-doc's continuation
-        # rows spread across files instead of re-concentrating
-        df = df.repartition(n_partitions, "doc_id", "part")
-    else:
-        df = df.repartition(n_partitions, "doc_id")
     (
-        df.write.mode("overwrite")
+        build_spans_df(spark, sf_dir, replicate=replicate)
+        .withColumn("size_class", size_class)
+        .repartition(n_partitions, "doc_id")
+        .write.mode("overwrite")
         .partitionBy("size_class")
         .parquet(out_path)
     )
-    if split_pages is not None:
-        src.unpersist()  # the write materialized both branches
     return out_path
 
 

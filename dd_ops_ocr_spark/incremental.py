@@ -31,14 +31,12 @@ def extract_incremental(
     spans_df: DataFrame,
     table_dir: str,
     run_id: str,
-    extractor=None,
 ) -> dict:
     """Extract the docs in ``spans_df`` that the output table has not seen,
     append them as a new snapshot, and return a summary. First run (no
     snapshot yet) processes everything with an ``overwrite`` commit."""
     from dd_ops_ocr_spark import pipeline
 
-    extractor = extractor or pipeline.extract
     try:
         # The processed-doc roster is an aux component of the snapshot
         # (committed atomically with the data), NOT inferred from output
@@ -67,7 +65,7 @@ def extract_incremental(
     # and the aux roster write; persist so discovery runs once per
     # increment, not three times over the full output table
     delta = delta.persist()
-    out = extractor(delta)
+    out = pipeline.extract(delta)
     n_docs = delta.count()
     if operation == "append" and n_docs == 0:
         delta.unpersist()

@@ -11,9 +11,10 @@ step2/04:94-118).
 Scale notes (100 TB design):
   * one row = one doc => doc never straddles partitions; ``maxPartitionBytes``
     controls task granularity at the scan.
-  * skewed multi-page docs (north_rule) are handled by the hybrid salted
-    path in ``dd_ops_ocr_spark.plans.salting`` (small docs stay here,
-    shuffle-free; tail docs get bounded-size salt buckets).
+  * skewed multi-page docs (north_rule) are served by this kernel too:
+    a task is an Arrow batch, not a document, so per-span cost stays
+    uniform (the salted paths in ``plans.salting`` lost to it on every
+    input measured, maximal 400-page docs included).
   * the kernel is Arrow compute + numpy over flat arrays — zero per-row
     Python in the hot path (input_hint mandate).
 

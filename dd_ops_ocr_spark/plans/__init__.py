@@ -1,1 +1,2 @@
-"""Physical-plan machinery: skew salting, checkpoint ledger."""
+"""Physical-plan machinery: the bounded flat-input engine, the pure-SQL
+and salted extraction plans."""

@@ -56,9 +56,10 @@ from dd_ops_ocr_spark.schema import (
 # ran, so naive per-invocation persist() pins one cached copy per call
 # in the bench/correctness drivers. Instead: REUSE the persisted pg when
 # the same input plan comes back (sameSemantics — exact, not a hash),
-# keep at most two distinct entries (a driver legitimately builds the
-# exploded-bounded and split-landed plans together before running
-# either), and evict FIFO beyond that. Lock-guarded: plan building may
+# keep at most two distinct entries (a driver may build bounded plans
+# over two flat inputs before running either, e.g. the registry query
+# over the synthesized corpus and bench.py's landed flat parquet), and
+# evict FIFO beyond that. Lock-guarded: plan building may
 # happen from concurrent driver threads.
 _PG_CACHE: list[tuple[DataFrame, DataFrame]] = []  # [(flat, pg)]
 _PG_CACHE_MAX = 2

@@ -1,8 +1,29 @@
 """Salted extraction for skewed multi-page documents (north_rule).
 
-The unit of work is a document; cost ~ pages x spans. A p99 tail doc
-(100 pages vs median 3) makes its task ~30x slower — AQE fixes shuffle
-skew but not UDF-cost skew, so the salt is ours (SURVEY §4.1).
+The salt was built for UDF-cost skew: a 100-page tail doc was expected
+to make its task far slower than the median. The whole-batch Arrow
+kernel refutes that. A paired bake-off (4-core ``local``, shared 4-vCPU
+host, noop sink, wall s / CPU s of driver + JVM + workers, min-max of 3
+rounds; output rows equal on every path) found the plain
+``pipeline.extract`` fastest on every input:
+
+  =====================================  ==========  ==========  ==========
+  input (output spans)                   plain       salted      pruned
+  =====================================  ==========  ==========  ==========
+  batch_steady seed 7 (262,079)          0.48-0.57   0.91-1.25   0.69-0.91
+                                         1.73-2.19   3.07-3.70   2.20-3.06
+  256 x 4-page + one 400-page (101,376)  0.45-0.56   0.75-0.86   0.67-0.78
+                                         0.88-1.87   1.86-2.85   1.72-2.17
+  64 x 400-page, 40 spans/page           1.21-1.54   2.01-2.31   1.86-1.97
+  (1,024,000)                            3.26-4.16   6.01-6.43   5.17-5.50
+  =====================================  ==========  ==========  ==========
+
+(``salted`` = ``extract_salted``, ``pruned`` = ``extract_salted_pruned``;
+each cell is wall over CPU.) No job routes here. The module stays
+only while the frozen benchmarks import it: ``bench.py`` times
+``extract_salted_pruned``, and ``perfbench`` imports ``extract_salted``
+and ``PAGES_PER_BUCKET``. The ``flagship_extract_salted*`` queries keep
+both kernels under the DuckDB oracle meanwhile.
 
 Design (hybrid, scale-first, NO driver-side data round-trip, NO
 broadcasts, exactly ONE extra scan and ONE small shuffle over the tail):
@@ -39,9 +60,11 @@ Semantics are identical to ``pipeline.extract`` — asserted span-for-span
 against the same oracle in tests/test_salted.py and against the DuckDB
 oracle by the driver (flagship_extract_salted).
 
-(Skew background: AQE's skew handling only rebalances shuffle blocks;
-UDF-cost skew from heavy keys needs explicit salting — cf. the skewed-join
-analyses in "CPU and GPU Hash Joins on Skewed Data", ICDE 2024, PAPERS.md.)
+(Skew background: salting pays only when one key's cost dominates a
+partition — "CPU and GPU Hash Joins on Skewed Data", ICDE 2024 — and a
+whole-batch kernel makes per-span cost uniform, so no document does —
+"Accelerating Python UDFs in Vectorized Query Execution", CIDR 2022;
+both in PAPERS.md.)
 """
 
 from __future__ import annotations
@@ -231,14 +254,15 @@ def extract_salted_pruned(spark, path: str) -> DataFrame:
             "use corpus.materialize_spans to land it, or extract_salted()"
         )
     if "part" in src.columns:
-        # a split-landed corpus (materialize_spans(split_pages=...))
-        # ALSO carries size_class, but its big docs are continuation
-        # rows — extracting each part as a whole document would compute
-        # boilerplate stats per fragment and restart the rank per part:
-        # silently wrong output, so refuse loudly
+        # a split-landed corpus (landed by older code) ALSO carries
+        # size_class, but its big docs are continuation rows — extracting
+        # each part as a whole document would compute boilerplate stats
+        # per fragment and restart the rank per part: silently wrong
+        # output, so refuse loudly
         raise ValueError(
             f"{path} is a split-landed corpus ((doc_id, part) rows); "
-            "use plans.split_landed.extract_split_landed() for it"
+            "split-landed corpora are no longer read: re-land it with "
+            "corpus.materialize_spans"
         )
     small = src.filter(F.col("size_class") == "small").select("doc_id", "spans")
     big = src.filter(F.col("size_class") == "big").select("doc_id", "spans")

@@ -63,9 +63,7 @@ def _flagship_extract_exploded_bounded(spark: SparkSession, sf_dir: str) -> Data
     return extract_exploded_bounded(flat)
 
 
-def _landed_cache(
-    spark: SparkSession, sf_dir: str, suffix: str, **land_kwargs
-) -> str:
+def _landed_cache(spark: SparkSession, sf_dir: str, suffix: str) -> str:
     """Materialize-once landing fixture under .bench_cache/: the landed
     corpus is a deterministic derivative of sf_dir, keyed by generator
     version + layout suffix (same layout bench.py lands). Build/publish
@@ -84,7 +82,7 @@ def _landed_cache(
     )
     return cached_fixture(
         path,
-        lambda tmp: corpus.materialize_spans(spark, sf_dir, tmp, **land_kwargs),
+        lambda tmp: corpus.materialize_spans(spark, sf_dir, tmp),
     )
 
 
@@ -97,27 +95,13 @@ def _flagship_extract_salted_pruned(spark: SparkSession, sf_dir: str) -> DataFra
     return extract_salted_pruned(spark, _landed_cache(spark, sf_dir, "sc"))
 
 
-def _flagship_extract_split_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The split-landed path: mega docs land as bounded continuation
-    rows (corpus.materialize_spans split_pages=16), extraction routes
-    small docs to the nested kernel and reassembles big docs with the
-    bounded flat plan (plans/split_landed.py). Same flagship oracle —
-    the landing layout must not change a single span."""
-    from dd_ops_ocr_spark.plans.split_landed import extract_split_landed
-
-    return extract_split_landed(
-        spark, _landed_cache(spark, sf_dir, "sp16", split_pages=16)
-    )
-
-
 # every execution path of the same spec is checked against the same
 # DuckDB oracle: Arrow kernel, pure-JVM SQL, salted, salted-pruned,
-# split-landed, bounded-exploded
+# bounded-exploded
 QUERIES["flagship_extract"] = _flagship_extract
 QUERIES["flagship_extract_sql"] = _flagship_extract_sql
 QUERIES["flagship_extract_salted"] = _flagship_extract_salted
 QUERIES["flagship_extract_salted_pruned"] = _flagship_extract_salted_pruned
-QUERIES["flagship_extract_split_landed"] = _flagship_extract_split_landed
 QUERIES["flagship_extract_exploded_bounded"] = _flagship_extract_exploded_bounded
 QUERIES["flagship_metrics"] = _flagship_metrics
 
@@ -140,7 +124,6 @@ def register_flagship_oracles(sf_dir: str = _SF_CORRECT) -> None:
     ORACLE_SQL["flagship_extract_salted"] = sql
     ORACLE_SQL["flagship_extract_salted_pruned"] = sql
     ORACLE_SQL["flagship_extract_exploded_bounded"] = sql
-    ORACLE_SQL["flagship_extract_split_landed"] = sql
     ORACLE_SQL["flagship_metrics"] = fixtures.metrics_oracle_sql(path)
     ORACLE_SQL["integrated_text"] = fixtures.integrated_oracle_sql(path)
     ORACLE_SQL["contract_articles"] = fixtures.contract_articles_oracle_sql(path)
@@ -414,7 +397,6 @@ _ROSTER_HEAD = [
     "funnel_stages",
     "feed_entries",
     "warc_gz_quarantine",
-    "flagship_extract_split_landed",
     "engine_dual_extract",
     "bpe_train",
     "bpe_tokenize",

@@ -4,7 +4,7 @@ Submit:
     zip -qr ddops.zip dd_ops_ocr_spark
     spark-submit --master <cluster> --py-files ddops.zip \
         jobs/extract_job.py --input <spans parquet or sf dir> \
-        --output /path/out --run-id r42 [--salted] [--buckets 64 | --snapshots]
+        --output /path/out --run-id r42 [--buckets 64 | --snapshots]
 
 Python workers: ``session.build_spark`` forks them from
 ``dd_ops_ocr_spark.pyworker``, which stops each task from re-reading
@@ -44,13 +44,10 @@ def main(argv: list[str] | None = None) -> int:
                    help="checkpoint buckets of the default ledger sink "
                         "(a resume must pass the same count); the "
                         "--snapshots sink ignores it")
-    p.add_argument("--salted", action="store_true",
-                   help="use the skew-salted extractor")
     p.add_argument("--snapshots", action="store_true",
                    help="commit the run as one Iceberg-style snapshot "
                         "(catalog.py) of the documents the table has not "
                         "seen, instead of bucket ledger markers")
-    p.add_argument("--pages-per-bucket", type=int, default=25)
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -71,8 +68,7 @@ def main(argv: list[str] | None = None) -> int:
         .getOrCreate()
     )
     created = spark is not prior
-    from dd_ops_ocr_spark import corpus, incremental, ledger, pipeline, sources
-    from dd_ops_ocr_spark.plans.salting import extract_salted
+    from dd_ops_ocr_spark import corpus, incremental, ledger, sources
 
     if os.path.isfile(f"{args.input}/documents.parquet"):
         spans = corpus.build_spans_df(spark, args.input)
@@ -81,19 +77,14 @@ def main(argv: list[str] | None = None) -> int:
     spans, quarantine = sources.split_valid(spans)
 
     run_id = args.run_id or time.strftime("%Y%m%d_%H%M%S", time.gmtime())
-    extractor = (
-        (lambda df: extract_salted(df, args.pages_per_bucket))
-        if args.salted
-        else pipeline.extract
-    )
     t0 = time.monotonic()
     if args.snapshots:
         summary = incremental.extract_incremental(
-            spark, spans, args.output, run_id, extractor=extractor)
+            spark, spans, args.output, run_id)
     else:
         summary = ledger.run_one_pass(
             spark, spans, args.output, run_id,
-            n_buckets=args.buckets, extractor=extractor)
+            n_buckets=args.buckets)
     # write unconditionally: a re-run over FIXED input must clear the
     # previous run's quarantine rows (an nq>0-gated write left stale rows
     # on disk while the summary reported quarantined_docs=0), and the

@@ -37,7 +37,6 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", required=True, help="spans parquet path")
     p.add_argument("--repeats", type=int, default=3)
-    p.add_argument("--salted", action="store_true")
     args = p.parse_args(argv)
     if args.repeats < 1:
         p.error("--repeats must be >= 1 (the summary needs one timed run)")
@@ -53,16 +52,14 @@ def main(argv: list[str] | None = None) -> int:
         .getOrCreate()
     )
     from dd_ops_ocr_spark import pipeline, sources
-    from dd_ops_ocr_spark.plans.salting import extract_salted
 
     spans = sources.read_spans(spark, args.input)
     n_docs = spans.count()
-    extractor = extract_salted if args.salted else pipeline.extract
-    extractor(spans).count()  # warmup: python workers + JIT
+    pipeline.extract(spans).count()  # warmup: python workers + JIT
     best = float("inf")
     for _ in range(args.repeats):
         t0 = time.monotonic()
-        n_spans = extractor(spans).count()
+        n_spans = pipeline.extract(spans).count()
         best = min(best, time.monotonic() - t0)
     print(json.dumps({
         "cores": spark.sparkContext.defaultParallelism,

@@ -66,9 +66,11 @@ def test_concurrent_committers_lose_no_update(spark, table):
 def test_snapshot_checkpoint_crash_resume(spark, table, monkeypatch):
     """extract_incremental (the snapshot sink) crashes in its commit
     window: data files staged, manifest not published. No snapshot may
-    be visible, and the rerun must commit exactly one snapshot equal to
-    an uninterrupted extraction, its manifest carrying the rerun's
-    lineage and per-file row counts that add up to the output."""
+    be visible, the crashed commit's staged files must be gone (nothing
+    else would ever reclaim them), and the rerun must commit exactly
+    one snapshot equal to an uninterrupted extraction, its manifest
+    carrying the rerun's lineage and per-file row counts that add up to
+    the output, with data/ holding exactly the files it lists."""
     from dd_ops_ocr_spark import incremental
 
     def crash(*_a, **_k):
@@ -80,7 +82,8 @@ def test_snapshot_checkpoint_crash_resume(spark, table, monkeypatch):
         incremental.extract_incremental(spark, spans, table, "runA")
     monkeypatch.undo()
     assert catalog.current_snapshot_id(table) is None
-    assert os.listdir(os.path.join(table, "data"))  # staged, unpublished
+    data_dir = os.path.join(table, "data")
+    assert os.listdir(data_dir) == []  # the failed commit's files removed
     with pytest.raises(FileNotFoundError):
         catalog.read_table(spark, table)
 
@@ -99,6 +102,64 @@ def test_snapshot_checkpoint_crash_resume(spark, table, monkeypatch):
     manifest = catalog._read_manifest(table, snap["snapshot_id"])
     assert sum(st["rows"] for st in manifest["file_stats"].values()) \
         == want.count()
+    # data/ holds exactly the committed data and roster files
+    assert manifest["aux"]["docids"]
+    assert sorted(os.listdir(data_dir)) == sorted(
+        manifest["files"] + manifest["aux"]["docids"])
+
+
+def test_failed_commit_before_link_removes_staged_files(spark, table):
+    """A write_snapshot that raises before its manifest is linked leaves
+    data/ as it found it: an append whose schema conflicts with the
+    table's raises after staging its data and aux files, and a df whose
+    write raises leaves no staging dir behind."""
+    df = spark.range(20).selectExpr("id", "id % 3 AS v")
+    s1 = catalog.write_snapshot(df, table, "overwrite")
+    data_dir = os.path.join(table, "data")
+    before = set(os.listdir(data_dir))
+
+    clash = spark.range(5).selectExpr("id", "cast(id as string) AS v")
+    roster = spark.range(5).selectExpr("cast(id as string) AS doc_id")
+    with pytest.raises(ValueError, match="schema evolution conflict"):
+        catalog.write_snapshot(clash, table, "append",
+                               aux={"docids": roster})
+    assert set(os.listdir(data_dir)) == before
+
+    bad = spark.range(5).selectExpr("raise_error('boom') AS v")
+    with pytest.raises(Exception, match="boom"):
+        catalog.write_snapshot(bad, table, "append")
+    assert set(os.listdir(data_dir)) == before
+    assert not [n for n in os.listdir(table) if n.startswith("_stage-")]
+    assert catalog.current_snapshot_id(table) == s1
+    assert catalog.read_table(spark, table).count() == 20
+
+
+def test_failed_pointer_advance_keeps_committed_files(
+        spark, table, monkeypatch):
+    """A commit that raises AFTER its manifest is linked, in the pointer
+    advance, has committed: every file it staged stays, and the snapshot
+    reads whole once the pointer heals."""
+    df = spark.range(20).selectExpr("id", "id % 3 AS v")
+    s1 = catalog.write_snapshot(df, table, "overwrite")
+    roster = spark.range(5).selectExpr("cast(id as string) AS doc_id")
+
+    def fail(*_a, **_k):
+        raise OSError("injected pointer-advance failure")
+
+    monkeypatch.setattr(catalog, "_advance_pointer", fail)
+    with pytest.raises(OSError, match="injected"):
+        catalog.write_snapshot(df, table, "append", aux={"docids": roster})
+    monkeypatch.undo()
+
+    assert catalog.current_snapshot_id(table) == s1  # pointer lags
+    m = catalog._read_manifest(table, s1 + 1)
+    assert m["aux"]["docids"]
+    assert sorted(os.listdir(os.path.join(table, "data"))) == sorted(
+        m["files"] + m["aux"]["docids"])
+    catalog._heal_pointer(table)
+    assert catalog.current_snapshot_id(table) == s1 + 1
+    assert catalog.read_table(spark, table).count() == 40
+    assert catalog.read_aux(spark, table, "docids").count() == 5
 
 
 def test_uncommitted_files_invisible(spark, table):

@@ -5,6 +5,7 @@ the 100-page tail docs."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 
 from dd_ops_ocr_spark import corpus, pipeline
 from dd_ops_ocr_spark.plans.salting import extract_salted
@@ -95,43 +96,19 @@ def test_salted_with_no_tail_docs(spark):
     assert g == w
 
 
-def test_split_landed_matches_plain(spark, tmp_path):
-    """Land-time mega-doc splitting (corpus.materialize_spans
-    split_pages): continuation rows must be bounded AND the split-landed
-    extraction plan must be span-for-span identical to the plain nested
-    kernel on the unsplit corpus (VERDICT r4 #7)."""
-    from pyspark.sql import functions as F
+def test_salted_pruned_refuses_split_landed_corpus(spark, tmp_path):
+    """A corpus landed split by older code ((doc_id, part) continuation
+    rows) carries size_class too. Reading each part as a whole document
+    would restart boilerplate stats and ranks per part, silently wrong
+    output, so the pruned reader refuses it and says how to re-land."""
+    from dd_ops_ocr_spark.plans.salting import extract_salted_pruned
 
-    from dd_ops_ocr_spark.plans.split_landed import extract_split_landed
-    from dd_ops_ocr_spark.schema import STRIDE
-
-    out = str(tmp_path / "split_landed")
-    corpus.materialize_spans(
-        spark, SF_SMOKE, out, n_partitions=8, split_pages=10
-    )
-    landed = spark.read.parquet(out)
-
-    # every landed row spans at most 10 pages (the bound IS the feature)
-    pages = landed.select(
-        (
-            F.expr(f"array_max(spans.offset) div {STRIDE}")
-            - F.expr(f"array_min(spans.offset) div {STRIDE}")
-            + 1
-        ).alias("row_pages"),
-        "size_class",
-    )
-    assert pages.agg(F.max("row_pages")).collect()[0][0] <= 10
-    # big docs must genuinely be split into multiple parts
-    n_parts = (
-        landed.filter(F.col("size_class") == "big")
-        .groupBy("doc_id")
-        .count()
-    )
-    assert n_parts.count() > 0, "smoke corpus has no tail docs"
-    assert n_parts.agg(F.max("count")).collect()[0][0] >= 10  # 100p / 10
-
-    got = span_tuples(extract_split_landed(spark, out).toPandas())
-    want = span_tuples(pipeline.extract(corpus.build_spans_df(spark, SF_SMOKE)).toPandas())
-    assert set(got) == set(want)
-    mismatches = [d for d in want if got[d] != want[d]]
-    assert not mismatches, f"{len(mismatches)} docs mismatch, e.g. {mismatches[:3]}"
+    path = str(tmp_path / "split_landed")
+    spark.createDataFrame(
+        [("d0", [("text", "a", None, 40)], "big", 0),
+         ("d0", [("text", "b", None, 5242920)], "big", 1)],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>, size_class string, part int",
+    ).write.partitionBy("size_class").parquet(path)
+    with pytest.raises(ValueError, match="corpus.materialize_spans"):
+        extract_salted_pruned(spark, path)
