@@ -466,21 +466,29 @@ def write_snapshot(df: DataFrame, table_dir: str, operation: str = "overwrite",
             except FileExistsError:
                 continue  # lost the race — re-read parent and retry
     except BaseException:
-        if sid is None or not _lists_any(table_dir, sid, staged):
-            _remove_staged(table_dir, staged)
+        _drop_unless_linked(table_dir, sid, staged)
         raise
 
 
-def _lists_any(table_dir: str, sid: int, names: list[str]) -> bool:
-    """Whether snapshot ``sid`` is linked and its manifest lists any of
-    ``names`` as data or aux. Staged names are uuid-prefixed, so a
-    manifest listing one is the manifest of the commit that staged it."""
-    try:
-        m = _read_manifest(table_dir, sid)
-    except FileNotFoundError:
-        return False
-    return not set(names).isdisjoint(
-        set(m["files"]).union(*m.get("aux", {}).values()))
+def _drop_unless_linked(table_dir: str, sid: int | None,
+                        names: list[str]) -> None:
+    """Cleanup for a commit that raised: remove the files it staged
+    unless snapshot ``sid`` is linked and its manifest lists any of them
+    (data, aux, delete or key files). Staged names are uuid-prefixed, so
+    a manifest listing one is the manifest of the commit that staged it,
+    and that commit stands even if its pointer advance failed."""
+    if sid is not None:
+        try:
+            m = _read_manifest(table_dir, sid)
+        except FileNotFoundError:
+            pass
+        else:
+            listed = set(m["files"]).union(
+                *m.get("aux", {}).values(), m.get("delete_files", []),
+                (e[0] for e in m.get("eq_delete_files", [])))
+            if not listed.isdisjoint(names):
+                return
+    _remove_staged(table_dir, names)
 
 
 def _remove_staged(table_dir: str, names: list[str]) -> None:
@@ -824,14 +832,17 @@ def delete_where(spark: SparkSession, table_dir: str, condition) -> int:
             "schema": m["schema"],
             "properties": {"deleted_rows": n},
         }
-        if current_snapshot_id(table_dir) != base:
-            _remove_staged(table_dir, new_files)
-            continue  # table advanced while we scanned — recompute
         try:
-            return _publish(table_dir, manifest)
+            if current_snapshot_id(table_dir) == base:
+                return _publish(table_dir, manifest)
         except FileExistsError:
-            _remove_staged(table_dir, new_files)
-            continue  # lost the claim race — recompute against new base
+            pass  # lost the claim race
+        except BaseException:
+            _drop_unless_linked(table_dir, base + 1, new_files)
+            raise
+        # the table advanced while we scanned, or another committer won
+        # the claim: recompute against the new base
+        _remove_staged(table_dir, new_files)
     raise CommitConflict(
         f"delete_where on {table_dir} lost 16 consecutive commit races"
     )
@@ -858,60 +869,70 @@ def upsert(spark: SparkSession, table_dir: str, df: DataFrame,
     sequence BELOW this commit, so the mask still applies to them.
 
     Upserting into an empty/nonexistent table degrades to a plain
-    first snapshot. Returns the committed snapshot id."""
+    first snapshot. Returns the committed snapshot id. A call that
+    raises removes the data and key files it staged, by
+    ``write_snapshot``'s rule: unless its linked manifest lists them."""
     table_dir = _norm_table_dir(table_dir)
-    files, stats = _write_files(df, table_dir)
-    # the delete-key file derives from the JUST-STAGED parquet, not
-    # from df again — df may be an arbitrarily expensive plan (a CDC
-    # sink passes a groupBy/max_by per epoch) and executing it twice
-    # doubles every epoch's cost; the staged files are tiny local reads
-    staged = spark.read.parquet(*[
-        _spark_url(os.path.join(table_dir, "data", f)) for f in files
-    ])
-    key_files, _ = _write_files(staged.select(*keys).distinct().coalesce(1),
-                                table_dir)
-    while True:
-        parent = _max_manifest_id(table_dir) or None
-        sid = (parent or 0) + 1
-        if parent is None:
-            manifest = {
-                "snapshot_id": sid, "parent_id": None,
-                "operation": "upsert",
-                "committed_at": time.strftime(
-                    "%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                "files": files, "file_stats": stats, "aux": {},
-                "delete_files": [], "eq_delete_files": [],
-                "file_seq": {f: sid for f in files},
-                "schema": df.schema.json(), "properties": {},
-            }
-        else:
-            pm = _read_manifest(table_dir, parent)
-            manifest = {
-                "snapshot_id": sid, "parent_id": parent,
-                "operation": "upsert",
-                "committed_at": time.strftime(
-                    "%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                "files": pm["files"] + files,
-                "file_stats": {**pm.get("file_stats", {}), **stats},
-                "aux": pm.get("aux", {}),
-                "delete_files": pm.get("delete_files", []),
-                "eq_delete_files": pm.get("eq_delete_files", [])
-                + [[key_files[0], list(keys), sid]],
-                "file_seq": {**pm.get("file_seq", {}),
-                             **{f: sid for f in files}},
-                "schema": _union_schema(pm.get("schema"), df.schema),
-                "properties": {},
-            }
-        try:
-            out = _publish(table_dir, manifest)
-        except FileExistsError:
-            continue  # lost the claim — re-read parent and re-stitch
-        if parent is None:
-            # first snapshot: the staged key file ended up unreferenced
-            # (nothing earlier to delete from) — reclaim it AFTER the
-            # publish succeeded, so a lost claim can still use it
-            _remove_staged(table_dir, key_files)
-        return out
+    staged: list[str] = []
+    sid = None
+    try:
+        files, stats = _write_files(df, table_dir)
+        staged += files
+        # the delete-key file derives from the JUST-STAGED parquet, not
+        # from df again — df may be an arbitrarily expensive plan (a CDC
+        # sink passes a groupBy/max_by per epoch) and executing it twice
+        # doubles every epoch's cost; the staged files are tiny local reads
+        written = spark.read.parquet(*[
+            _spark_url(os.path.join(table_dir, "data", f)) for f in files
+        ])
+        key_files, _ = _write_files(
+            written.select(*keys).distinct().coalesce(1), table_dir)
+        staged += key_files
+        while True:
+            parent = _max_manifest_id(table_dir) or None
+            sid = (parent or 0) + 1
+            if parent is None:
+                manifest = {
+                    "snapshot_id": sid, "parent_id": None,
+                    "operation": "upsert",
+                    "committed_at": time.strftime(
+                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+                    "files": files, "file_stats": stats, "aux": {},
+                    "delete_files": [], "eq_delete_files": [],
+                    "file_seq": {f: sid for f in files},
+                    "schema": df.schema.json(), "properties": {},
+                }
+            else:
+                pm = _read_manifest(table_dir, parent)
+                manifest = {
+                    "snapshot_id": sid, "parent_id": parent,
+                    "operation": "upsert",
+                    "committed_at": time.strftime(
+                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+                    "files": pm["files"] + files,
+                    "file_stats": {**pm.get("file_stats", {}), **stats},
+                    "aux": pm.get("aux", {}),
+                    "delete_files": pm.get("delete_files", []),
+                    "eq_delete_files": pm.get("eq_delete_files", [])
+                    + [[key_files[0], list(keys), sid]],
+                    "file_seq": {**pm.get("file_seq", {}),
+                                 **{f: sid for f in files}},
+                    "schema": _union_schema(pm.get("schema"), df.schema),
+                    "properties": {},
+                }
+            try:
+                out = _publish(table_dir, manifest)
+            except FileExistsError:
+                continue  # lost the claim — re-read parent and re-stitch
+            if parent is None:
+                # first snapshot: the staged key file ended up unreferenced
+                # (nothing earlier to delete from) — reclaim it AFTER the
+                # publish succeeded, so a lost claim can still use it
+                _remove_staged(table_dir, key_files)
+            return out
+    except BaseException:
+        _drop_unless_linked(table_dir, sid, staged)
+        raise
 
 
 def expire_snapshots(table_dir: str, keep_last: int = 1) -> dict:

@@ -4,8 +4,11 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from dd_ops_ocr_spark.native import localfs
 
 
 def build_spark(
@@ -25,6 +28,11 @@ def build_spark(
     not re-read an unchanged ``pyspark.zip`` on every task. The package
     must therefore be importable where workers start: the driver's
     working directory (local mode) or the executors' ``PYTHONPATH``.
+
+    ``file://`` paths go through ``native/NioLocalFileSystem.java``,
+    which sets permissions with ``java.nio`` where the stock local
+    FileSystem forks ``chmod`` for every file and directory it creates;
+    see ``local_fs_conf`` for when it is left out.
     """
     if cores is None:
         cores = os.cpu_count() or 8
@@ -55,11 +63,32 @@ def build_spark(
         .config("spark.python.daemon.module", "dd_ops_ocr_spark.pyworker")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra or {}).items():
+    for k, v in {**(extra or {}), **local_fs_conf(extra)}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_fs_conf(extra: dict[str, str] | None = None) -> dict[str, str]:
+    """Session settings that make ``file://`` the fork-free
+    ``native.localfs.CLASS``: its jar on ``spark.driver.extraClassPath``
+    (ahead of any classpath ``extra`` sets) and ``spark.hadoop.fs.file.impl``.
+
+    Empty, so the session keeps Hadoop's stock local FileSystem, when the
+    jar cannot be built, or when a JVM is already running (a stopped
+    session keeps its JVM) and cannot load the class: a classpath setting
+    only reaches a JVM at launch, and an ``fs.file.impl`` it cannot load
+    would fail every local read and write."""
+    jar = localfs.jar()
+    jvm = SparkContext._jvm
+    if jar is None or (jvm is not None and not localfs.loads_in(jvm)):
+        return {}
+    cp = (extra or {}).get("spark.driver.extraClassPath")
+    return {
+        "spark.driver.extraClassPath": os.pathsep.join(filter(None, [jar, cp])),
+        "spark.hadoop.fs.file.impl": localfs.CLASS,
+    }
 
 
 def local_frame(

@@ -17,6 +17,20 @@ spark.executorEnv.PYTHONPATH). --py-files alone is not enough: workers
 add those files to sys.path per task, after the daemon has started, and
 a daemon that cannot import its module fails every Python task.
 
+Local outputs: ``session.build_spark`` sessions write file:// paths
+through ``native/NioLocalFileSystem.java``, which sets permissions with
+java.nio where Hadoop's stock local FileSystem forks one ``chmod`` per
+file and directory (Spark's Hadoop has no libhadoop). This job keeps the
+stock FileSystem. To opt in, build the jar once with
+    python -c "from dd_ops_ocr_spark.native import localfs; print(localfs.jar())"
+and, under --master local[N], add
+    --conf spark.driver.extraClassPath=<jar> \
+    --conf spark.hadoop.fs.file.impl=ddops.fs.NioLocalFileSystem
+On a cluster, also ship it with --jars <jar> and name it in
+spark.executor.extraClassPath. Set fs.file.impl only where every JVM has
+the jar on its classpath: a JVM that cannot load the class fails every
+file:// read and write.
+
 Resumable: re-running with the same --output continues from the ledger
 (only uncommitted buckets reprocess — see dd_ops_ocr_spark/ledger.py);
 --buckets must then match the count the output was committed with.

@@ -162,6 +162,71 @@ def test_failed_pointer_advance_keeps_committed_files(
     assert catalog.read_aux(spark, table, "docids").count() == 5
 
 
+def _fail(*_a, **_k):
+    raise OSError("injected commit failure")
+
+
+def test_failed_upsert_removes_staged_files(spark, table, monkeypatch):
+    """An upsert that raises before its manifest is linked removes its
+    staged data and key files: on a schema clash (raised after staging)
+    and on a publish failure other than a lost claim. One that raises
+    after the link, in the pointer advance, keeps them."""
+    df = spark.range(20).selectExpr("id", "id % 3 AS v")
+    s1 = catalog.write_snapshot(df, table, "overwrite")
+    data_dir = os.path.join(table, "data")
+    before = set(os.listdir(data_dir))
+
+    clash = spark.range(5).selectExpr("id", "cast(id as string) AS v")
+    with pytest.raises(ValueError, match="schema evolution conflict"):
+        catalog.upsert(spark, table, clash, keys=["id"])
+    assert set(os.listdir(data_dir)) == before
+
+    new = spark.range(5).selectExpr("id", "id * 10 AS v")
+    monkeypatch.setattr(catalog, "_publish", _fail)
+    with pytest.raises(OSError, match="injected"):
+        catalog.upsert(spark, table, new, keys=["id"])
+    assert set(os.listdir(data_dir)) == before
+    assert catalog.current_snapshot_id(table) == s1
+
+    monkeypatch.undo()
+    monkeypatch.setattr(catalog, "_advance_pointer", _fail)
+    with pytest.raises(OSError, match="injected"):
+        catalog.upsert(spark, table, new, keys=["id"])
+    monkeypatch.undo()
+    m = catalog._read_manifest(table, s1 + 1)
+    added = set(os.listdir(data_dir)) - before
+    assert added == set(m["files"][len(before):]) | {m["eq_delete_files"][0][0]}
+    catalog._heal_pointer(table)
+    assert catalog.read_table(spark, table).filter("v >= 10").count() == 4
+
+
+def test_failed_delete_where_removes_staged_files(spark, table, monkeypatch):
+    """delete_where keeps the same rule: a publish that fails for any
+    reason but a lost claim removes the staged delete file, and a
+    failed pointer advance after the link keeps it."""
+    s1 = catalog.write_snapshot(spark.range(20), table, "overwrite")
+    data_dir = os.path.join(table, "data")
+    before = set(os.listdir(data_dir))
+
+    monkeypatch.setattr(catalog, "_publish", _fail)
+    with pytest.raises(OSError, match="injected"):
+        catalog.delete_where(spark, table, "id < 5")
+    assert set(os.listdir(data_dir)) == before
+    assert catalog.current_snapshot_id(table) == s1
+
+    monkeypatch.undo()
+    heal = catalog._advance_pointer  # delete_where heals (sid 0) first
+    monkeypatch.setattr(catalog, "_advance_pointer",
+                        lambda d, sid: heal(d, sid) if sid == 0 else _fail())
+    with pytest.raises(OSError, match="injected"):
+        catalog.delete_where(spark, table, "id < 5")
+    monkeypatch.undo()
+    m = catalog._read_manifest(table, s1 + 1)
+    assert set(os.listdir(data_dir)) - before == set(m["delete_files"])
+    catalog._heal_pointer(table)
+    assert catalog.read_table(spark, table).count() == 15
+
+
 def test_uncommitted_files_invisible(spark, table):
     out = pipeline.extract(corpus.build_spans_df(spark, SF_SMOKE)).limit(100)
     catalog.write_snapshot(out, table, "overwrite")
