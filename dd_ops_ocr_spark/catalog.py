@@ -17,7 +17,7 @@ actually relies on, directly over parquet files:
     the catalog pointer (``_current``) is a one-line file advanced
     monotonically with atomic renames. A crash mid-write leaves only
     unreferenced files (staged data, orphan ``.tmp-*``), never a torn
-    manifest.
+    manifest; ``expire_snapshots`` sweeps them once they are old.
   * **time travel** — every snapshot remains readable by id
     (``read_table(..., snapshot_id=k)``); appends create a child
     snapshot referencing the parent (lineage).
@@ -68,8 +68,6 @@ def _norm_table_dir(table_dir: str) -> str:
     local name): a scheme is only letters/digits/+.- followed by ``:/``.
     A ``file://host/...`` URI with a real (non-localhost) authority is
     refused: that names a remote host, not this machine's POSIX tree."""
-    import re
-
     m = re.match(r"^([A-Za-z][A-Za-z0-9+.\-]*):(?=/)", table_dir)
     if m is None:
         return table_dir
@@ -180,11 +178,14 @@ def _harvest_stats(path: str) -> dict:
     return {"rows": md.num_rows, "columns": cols}
 
 
-def _write_files(df: DataFrame, table_dir: str) -> tuple[list[str], dict]:
+def _write_files(df: DataFrame, table_dir: str,
+                 staged: list[str]) -> tuple[list[str], dict]:
     """Write df to a unique staging dir; return the data-file names after
     moving them into data/ (names are unique, moves are renames), plus
     per-file footer stats keyed by final name (the data-skipping index,
-    Iceberg's manifest-entry lower/upper bounds)."""
+    Iceberg's manifest-entry lower/upper bounds). Each name joins
+    ``staged`` as it lands, so the commit that owns ``staged`` removes
+    it if that commit fails (``_commit``)."""
     stage = os.path.join(table_dir, f"_stage-{uuid.uuid4().hex}")
     data_dir = os.path.join(table_dir, "data")
     moved, stats = [], {}
@@ -197,28 +198,25 @@ def _write_files(df: DataFrame, table_dir: str) -> tuple[list[str], dict]:
             final = f"{uuid.uuid4().hex}-{name}"
             stats[final] = _harvest_stats(os.path.join(stage, name))
             os.rename(os.path.join(stage, name), os.path.join(data_dir, final))
+            staged.append(final)
             moved.append(final)
-    except BaseException:
-        _remove_staged(table_dir, moved)  # no manifest names them yet
-        raise
     finally:
         shutil.rmtree(stage, ignore_errors=True)
     return moved, stats
 
 
-def _max_manifest_id(table_dir: str) -> int:
-    meta = os.path.join(table_dir, "metadata")
-    try:
-        names = os.listdir(meta)
-    except FileNotFoundError:
-        return 0
+def _snapshot_ids(table_dir: str) -> list[int]:
     # strip 'snap-' / '.json' rather than a fixed-width slice: the id is
     # zero-padded to 6 digits but grows past that at sid >= 1,000,000.
-    ids = [
-        int(n[5:-5]) for n in names
-        if n.startswith("snap-") and n.endswith(".json")
-    ]
-    return max(ids, default=0)
+    return [int(n[5:-5]) for n in os.listdir(os.path.join(table_dir, "metadata"))
+            if n.startswith("snap-") and n.endswith(".json")]
+
+
+def _max_manifest_id(table_dir: str) -> int:
+    try:
+        return max(_snapshot_ids(table_dir), default=0)
+    except FileNotFoundError:
+        return 0
 
 
 def _publish(table_dir: str, manifest: dict) -> int:
@@ -257,12 +255,12 @@ def _publish(table_dir: str, manifest: dict) -> int:
 def _heal_pointer(table_dir: str) -> None:
     """Catch ``_current`` up to the newest complete manifest. A
     committer can crash in the window between manifest link (the
-    commit point) and pointer advance (publication); ``write_snapshot``
-    and ``upsert`` self-heal because they allocate from
-    ``_max_manifest_id``, but loops that base their CAS on
-    ``current_snapshot_id`` (``delete_where``, ``compact``) would
-    spin 16x against the stale base and raise CommitConflict — so they
-    heal first. No-op (one listdir) when the pointer is current."""
+    commit point) and pointer advance (publication). Every claim
+    allocates from ``_max_manifest_id`` and so never waits on the
+    pointer, but ``compact`` and ``delete_where`` read their base
+    through ``current_snapshot_id``: they heal first, so the base they
+    derive from is the one their CAS compares against. No-op (one
+    listdir) when the pointer is current."""
     _advance_pointer(table_dir, 0)
 
 
@@ -346,15 +344,186 @@ class CommitConflict(Exception):
     re-read (Iceberg's validation failure on replace operations)."""
 
 
+def _listed(m: dict) -> set[str]:
+    """Every ``data/`` file manifest ``m`` references: data, aux,
+    positional-delete and equality-delete key files."""
+    return set(m["files"]).union(
+        *m.get("aux", {}).values(), m.get("delete_files", []),
+        (e[0] for e in m.get("eq_delete_files", [])))
+
+
+def _carry(pm: dict, parent: int | None, operation: str,
+           properties: dict | None) -> dict:
+    """The one manifest base: the snapshot after ``parent`` (manifest
+    ``pm``, ``{}`` for a first snapshot) carries every parent field
+    forward under fresh lineage, commit time and properties. An
+    operation's rule (``_RULES``) then changes only its own fields."""
+    return {
+        "snapshot_id": (parent or 0) + 1,
+        "parent_id": parent,
+        "operation": operation,
+        "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        "files": pm.get("files", []),
+        # parent files keep their stats; pre-stats parents simply
+        # contribute no entries (their files are never pruned)
+        "file_stats": pm.get("file_stats", {}),
+        "aux": pm.get("aux", {}),
+        "delete_files": pm.get("delete_files", []),
+        "eq_delete_files": pm.get("eq_delete_files", []),
+        # per-file sequence numbers (Iceberg's data sequence): equality
+        # deletes apply only to files SEQUENCED BEFORE them, which is
+        # what lets an upsert's own appended rows survive its delete
+        "file_seq": pm.get("file_seq", {}),
+        # schema rides in the manifest (like Iceberg's) so a snapshot
+        # whose data file list is EMPTY — e.g. a batch where every doc
+        # legitimately extracted to zero rows — stays readable as an
+        # empty DataFrame instead of crashing the parquet reader.
+        "schema": pm.get("schema"),
+        "properties": properties or {},
+    }
+
+
+def _overwrite(m: dict, d: dict) -> None:
+    sid = m["snapshot_id"]
+    m.update(files=d["files"], file_stats=d["stats"], aux=d["aux"],
+             delete_files=[], eq_delete_files=[],
+             file_seq={f: sid for f in d["files"]},
+             schema=d["schema"].json())
+
+
+def _compact(m: dict, d: dict) -> None:
+    # a rewrite of DATA only: deletes (both kinds) are PURGED, since
+    # compact reads through read_table, which already applied them
+    # (Iceberg: rewrite removes dangling deletes); aux rides along
+    _overwrite(m, {**d, "aux": {**m["aux"], **d["aux"]}})
+
+
+def _append(m: dict, d: dict) -> None:
+    # appending resolves nothing: the parent's delete masks still apply
+    # to the carried files; the schema becomes parent ∪ new (evolution)
+    sid = m["snapshot_id"]
+    m["files"] = m["files"] + d["files"]
+    m["file_stats"] = {**m["file_stats"], **d["stats"]}
+    m["file_seq"] = {**m["file_seq"], **{f: sid for f in d["files"]}}
+    m["aux"] = {k: m["aux"].get(k, []) + d["aux"].get(k, [])
+                for k in {**m["aux"], **d["aux"]}}
+    m["schema"] = _union_schema(m["schema"], d["schema"])
+
+
+def _upsert(m: dict, d: dict) -> None:
+    # a first snapshot has nothing to mask: its key file goes unlisted,
+    # and _commit removes it once the publish has succeeded
+    _append(m, d)
+    if m["parent_id"] is not None:
+        m["eq_delete_files"] = m["eq_delete_files"] + [
+            [d["key_file"], d["keys"], m["snapshot_id"]]]
+
+
+def _delete(m: dict, d: dict) -> None:
+    m["delete_files"] = m["delete_files"] + d["delete_files"]
+
+
+_RULES = {"overwrite": _overwrite, "append": _append, "compact": _compact,
+          "upsert": _upsert, "delete": _delete}
+
+
+def _commit(table_dir: str, operation: str, stage,
+            expected_parent: int | None = None) -> int | None:
+    """The snapshot transaction, and the only caller of ``_publish``.
+
+    ``stage(put)`` writes the new files through ``put(df) -> (names,
+    footer stats)`` and returns the delta that ``_RULES[operation]``
+    applies over the parent's manifest, or None for nothing to commit
+    (then None is returned). The claim's parent is always
+    ``_max_manifest_id``, so a lagging pointer never blocks a commit; a
+    lost claim (``FileExistsError``) re-reads the parent and retries.
+    ``expected_parent`` makes the commit compare-and-swap: it raises
+    :class:`CommitConflict` once the table has moved past that id,
+    checked before staging and again at every claim. However the call
+    ends, a staged file stays only if this commit's linked manifest
+    lists it (``_drop_unless_linked``)."""
+    rule = _RULES[operation]
+    if expected_parent is not None and \
+            (_max_manifest_id(table_dir) or None) != expected_parent:
+        # fast-fail BEFORE staging: a stale caller costs no data writes
+        raise CommitConflict(
+            f"table advanced past snapshot {expected_parent} before staging")
+    staged: list[str] = []
+    sid = None
+    try:
+        delta = stage(lambda df: _write_files(df, table_dir, staged))
+        while delta is not None:
+            parent = _max_manifest_id(table_dir) or None
+            if expected_parent is not None and parent != expected_parent:
+                # the table advanced while we were staging
+                raise CommitConflict(
+                    f"table advanced to snapshot {parent}; "
+                    f"commit was derived from {expected_parent}"
+                )
+            pm = _read_manifest(table_dir, parent) if parent else {}
+            m = _carry(pm, parent, operation, delta.get("properties"))
+            rule(m, delta)
+            sid = m["snapshot_id"]
+            try:
+                return _publish(table_dir, m)
+            except FileExistsError:
+                continue  # lost the race — re-read parent and retry
+        return None
+    finally:
+        _drop_unless_linked(table_dir, sid, staged)
+
+
+def _drop_unless_linked(table_dir: str, sid: int | None,
+                        names: list[str]) -> None:
+    """Remove the staged files ``names`` that snapshot ``sid``'s linked
+    manifest does not list (all of them when ``sid`` is None or not
+    linked). Staged names are uuid-prefixed, so a manifest listing one
+    is the manifest of the commit that staged it, and that commit
+    stands even if its pointer advance failed."""
+    listed: set[str] = set()
+    if sid is not None:
+        try:
+            listed = _listed(_read_manifest(table_dir, sid))
+        except FileNotFoundError:
+            pass
+    for n in set(names) - listed:
+        try:
+            os.remove(os.path.join(table_dir, "data", n))
+        except FileNotFoundError:
+            continue  # already gone — nothing staged to reclaim
+
+
+_CAS_ATTEMPTS = 16
+
+
+def _rederive(table_dir: str, what: str, attempt):
+    """The read → derive → commit loop of ``compact`` and
+    ``delete_where``: ``attempt(base)`` derives its output from
+    snapshot ``base`` and commits it with ``expected_parent=base``. On
+    :class:`CommitConflict` another commit landed mid-derive, and the
+    whole attempt reruns against the new current, never re-publishing
+    a stale derivation."""
+    for _ in range(_CAS_ATTEMPTS):
+        _heal_pointer(table_dir)
+        try:
+            return attempt(current_snapshot_id(table_dir))
+        except CommitConflict:
+            continue
+    raise CommitConflict(f"{what} on {table_dir} lost {_CAS_ATTEMPTS} "
+                         "consecutive commit races")
+
+
 def write_snapshot(df: DataFrame, table_dir: str, operation: str = "overwrite",
                    properties: dict | None = None,
                    aux: dict[str, DataFrame] | None = None,
                    expected_parent: int | None = None) -> int:
     """Commit df as a new snapshot. ``overwrite`` starts a new file set;
-    ``append`` unions the parent snapshot's files. Concurrent committers
-    are safe: a snapshot id is claimed by exclusive manifest creation,
-    and the loser retries against the re-read parent (so no commit is
-    ever silently discarded).
+    ``append`` unions the parent snapshot's files; ``compact`` replaces
+    the data files and keeps the rest (see ``_compact``). Any other
+    ``operation`` raises ValueError before anything is staged.
+    Concurrent committers are safe: a snapshot id is claimed by
+    exclusive manifest creation, and the loser retries against the
+    re-read parent (so no commit is ever silently discarded).
 
     ``expected_parent`` makes the commit compare-and-swap: it only
     publishes while the table's latest snapshot is exactly that id, and
@@ -375,132 +544,26 @@ def write_snapshot(df: DataFrame, table_dir: str, operation: str = "overwrite",
     expire_snapshots would reclaim their files.
 
     Staged files sit in ``data/`` unreferenced until the manifest link,
-    the commit point, and expire_snapshots never sweeps blindly. So a
-    call that raises before its link removes every file it staged (data,
-    aux and the staging dir). One that raises after the link, in the
-    pointer advance, has committed: its files stay and readers heal the
-    pointer. A killed process runs no cleanup; its staged files stay
-    unreferenced (invisible to readers, never reclaimed)."""
-    table_dir = _norm_table_dir(table_dir)
-    if expected_parent is not None and \
-            (_max_manifest_id(table_dir) or None) != expected_parent:
-        # fast-fail BEFORE staging: a stale caller costs no data writes
-        raise CommitConflict(
-            f"table advanced past snapshot {expected_parent} "
-            "before staging"
+    the commit point. So a call that raises before its link removes
+    every file it staged (data, aux and the staging dir). One that
+    raises after the link, in the pointer advance, has committed: its
+    files stay and readers heal the pointer. A killed process runs no
+    cleanup; ``expire_snapshots`` reclaims its staged files once they
+    are older than ``_ORPHAN_AGE_S``."""
+    if operation not in ("overwrite", "append", "compact"):
+        raise ValueError(
+            f"write_snapshot operation {operation!r}: expected "
+            "'overwrite', 'append' or 'compact'"
         )
-    staged: list[str] = []
-    sid = None
-    try:
-        files, stats = _write_files(df, table_dir)
-        staged += files
-        aux_files = {}
-        for k, v in (aux or {}).items():
-            aux_files[k], _ = _write_files(v, table_dir)
-            staged += aux_files[k]
-        while True:
-            parent = _max_manifest_id(table_dir) or None
-            if expected_parent is not None and parent != expected_parent:
-                # the table advanced while we were staging
-                raise CommitConflict(
-                    f"table advanced to snapshot {parent}; "
-                    f"commit was derived from {expected_parent}"
-                )
-            all_files = files
-            all_stats = dict(stats)
-            all_aux = dict(aux_files)
-            sid = (parent or 0) + 1
-            all_deletes: list[str] = []
-            all_eq_deletes: list = []
-            # per-file sequence numbers (Iceberg's data sequence): equality
-            # deletes apply only to files SEQUENCED BEFORE them, which is
-            # what lets an upsert's own appended rows survive its delete
-            all_seq = {f: sid for f in files}
-            if parent is not None and operation in ("append", "compact"):
-                pm = _read_manifest(table_dir, parent)
-                if operation == "append":
-                    all_files = pm["files"] + files
-                    # parent files keep their stats; pre-stats parents simply
-                    # contribute no entries (their files are never pruned)
-                    all_stats = {**pm.get("file_stats", {}), **stats}
-                    for k, pfiles in pm.get("aux", {}).items():
-                        all_aux[k] = pfiles + aux_files.get(k, [])
-                    # appending data resolves nothing: the parent's delete
-                    # masks still apply to the carried data files
-                    all_deletes = pm.get("delete_files", [])
-                    all_eq_deletes = pm.get("eq_delete_files", [])
-                    all_seq = {**pm.get("file_seq", {}), **all_seq}
-                else:  # compact rewrites DATA only; aux rides along unchanged
-                    for k, pfiles in pm.get("aux", {}).items():
-                        all_aux.setdefault(k, pfiles)
-                    # deletes (both kinds) are PURGED by a rewrite: compact
-                    # reads through read_table, which already applied them,
-                    # so the new file set has no masked rows (Iceberg:
-                    # rewrite removes dangling deletes)
-            manifest = {
-                "snapshot_id": sid,
-                "parent_id": parent,
-                "operation": operation,
-                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                "files": all_files,
-                "file_stats": all_stats,
-                "aux": all_aux,
-                "delete_files": all_deletes,
-                "eq_delete_files": all_eq_deletes,
-                "file_seq": all_seq,
-                # schema rides in the manifest (like Iceberg's) so a snapshot
-                # whose data file list is EMPTY — e.g. a batch where every doc
-                # legitimately extracted to zero rows — stays readable as an
-                # empty DataFrame instead of crashing the parquet reader.
-                # Appends union it with the parent's (schema evolution):
-                # older files' missing columns read as NULL.
-                "schema": (
-                    _union_schema(pm.get("schema"), df.schema)
-                    if parent is not None and operation == "append"
-                    else df.schema.json()
-                ),
-                "properties": properties or {},
-            }
-            try:
-                return _publish(table_dir, manifest)
-            except FileExistsError:
-                continue  # lost the race — re-read parent and retry
-    except BaseException:
-        _drop_unless_linked(table_dir, sid, staged)
-        raise
+    table_dir = _norm_table_dir(table_dir)
 
+    def stage(put):
+        files, stats = put(df)  # data first, then aux
+        return {"files": files, "stats": stats, "schema": df.schema,
+                "aux": {k: put(v)[0] for k, v in (aux or {}).items()},
+                "properties": properties}
 
-def _drop_unless_linked(table_dir: str, sid: int | None,
-                        names: list[str]) -> None:
-    """Cleanup for a commit that raised: remove the files it staged
-    unless snapshot ``sid`` is linked and its manifest lists any of them
-    (data, aux, delete or key files). Staged names are uuid-prefixed, so
-    a manifest listing one is the manifest of the commit that staged it,
-    and that commit stands even if its pointer advance failed."""
-    if sid is not None:
-        try:
-            m = _read_manifest(table_dir, sid)
-        except FileNotFoundError:
-            pass
-        else:
-            listed = set(m["files"]).union(
-                *m.get("aux", {}).values(), m.get("delete_files", []),
-                (e[0] for e in m.get("eq_delete_files", [])))
-            if not listed.isdisjoint(names):
-                return
-    _remove_staged(table_dir, names)
-
-
-def _remove_staged(table_dir: str, names: list[str]) -> None:
-    """Best-effort removal of data files this call staged but never
-    published. Only ever invoked for files whose manifest was NOT
-    committed, so nothing can reference them."""
-    data_dir = os.path.join(table_dir, "data")
-    for n in names:
-        try:
-            os.remove(os.path.join(data_dir, n))
-        except FileNotFoundError:
-            continue  # already gone — nothing staged to reclaim
+    return _commit(table_dir, operation, stage, expected_parent)
 
 
 _OPS = {
@@ -739,24 +802,19 @@ def compact(spark: SparkSession, table_dir: str, num_files: int = 1,
     concurrent append's rows, then let ``expire_snapshots`` reclaim
     them)."""
     table_dir = _norm_table_dir(table_dir)
-    for _ in range(16):
-        _heal_pointer(table_dir)
-        base = current_snapshot_id(table_dir)
+
+    def attempt(base):
         df = read_table(spark, table_dir, snapshot_id=base)
         if sort_by:
             df = df.repartitionByRange(
                 num_files, *sort_by).sortWithinPartitions(*sort_by)
         else:
             df = df.coalesce(num_files)
-        try:
-            return write_snapshot(
-                df, table_dir, operation="compact", expected_parent=base
-            )
-        except CommitConflict:
-            continue  # someone committed mid-rewrite — recompact the new state
-    raise CommitConflict(
-        f"compaction of {table_dir} lost 16 consecutive commit races"
-    )
+        return write_snapshot(
+            df, table_dir, operation="compact", expected_parent=base
+        )
+
+    return _rederive(table_dir, "compact", attempt)
 
 
 def delete_where(spark: SparkSession, table_dir: str, condition) -> int:
@@ -784,9 +842,8 @@ def delete_where(spark: SparkSession, table_dir: str, condition) -> int:
     is returned. Returns the committed (or current) snapshot id."""
     table_dir = _norm_table_dir(table_dir)
     cond = F.expr(condition) if isinstance(condition, str) else condition
-    for _ in range(16):
-        _heal_pointer(table_dir)
-        base = current_snapshot_id(table_dir)
+
+    def attempt(base):
         if base is None:
             raise FileNotFoundError(f"no committed snapshot in {table_dir}")
         m = _read_manifest(table_dir, base)
@@ -807,45 +864,22 @@ def delete_where(spark: SparkSession, table_dir: str, condition) -> int:
             F.col("__cat_file").alias("file"),
             F.col("__cat_pos").alias("pos"),
         )
-        existing = m.get("delete_files", [])
-        # single find scan: write the positions, then read the count off
-        # the staged files' parquet footers (a .count() here would run
-        # the whole table scan a second time)
-        new_files, new_stats = _write_files(hits.coalesce(1), table_dir)
-        n = sum(new_stats[f]["rows"] for f in new_files)
-        if n == 0:
-            _remove_staged(table_dir, new_files)
-            return base  # everything already masked (or no match)
-        manifest = {
-            "snapshot_id": base + 1,
-            "parent_id": base,
-            "operation": "delete",
-            "committed_at": time.strftime(
-                "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-            ),
-            "files": m["files"],
-            "file_stats": m.get("file_stats", {}),
-            "aux": m.get("aux", {}),
-            "delete_files": existing + new_files,
-            "eq_delete_files": m.get("eq_delete_files", []),
-            "file_seq": m.get("file_seq", {}),
-            "schema": m["schema"],
-            "properties": {"deleted_rows": n},
-        }
-        try:
-            if current_snapshot_id(table_dir) == base:
-                return _publish(table_dir, manifest)
-        except FileExistsError:
-            pass  # lost the claim race
-        except BaseException:
-            _drop_unless_linked(table_dir, base + 1, new_files)
-            raise
-        # the table advanced while we scanned, or another committer won
-        # the claim: recompute against the new base
-        _remove_staged(table_dir, new_files)
-    raise CommitConflict(
-        f"delete_where on {table_dir} lost 16 consecutive commit races"
-    )
+
+        def stage(put):
+            # single find scan: write the positions, then read the count
+            # off the staged files' parquet footers (a .count() here
+            # would run the whole table scan a second time)
+            files, stats = put(hits.coalesce(1))
+            n = sum(stats[f]["rows"] for f in files)
+            if n == 0:
+                return None  # everything already masked (or no match)
+            return {"delete_files": files,
+                    "properties": {"deleted_rows": n}}
+
+        sid = _commit(table_dir, "delete", stage, expected_parent=base)
+        return base if sid is None else sid
+
+    return _rederive(table_dir, "delete_where", attempt)
 
 
 def upsert(spark: SparkSession, table_dir: str, df: DataFrame,
@@ -873,11 +907,9 @@ def upsert(spark: SparkSession, table_dir: str, df: DataFrame,
     raises removes the data and key files it staged, by
     ``write_snapshot``'s rule: unless its linked manifest lists them."""
     table_dir = _norm_table_dir(table_dir)
-    staged: list[str] = []
-    sid = None
-    try:
-        files, stats = _write_files(df, table_dir)
-        staged += files
+
+    def stage(put):
+        files, stats = put(df)
         # the delete-key file derives from the JUST-STAGED parquet, not
         # from df again — df may be an arbitrarily expensive plan (a CDC
         # sink passes a groupBy/max_by per epoch) and executing it twice
@@ -885,113 +917,76 @@ def upsert(spark: SparkSession, table_dir: str, df: DataFrame,
         written = spark.read.parquet(*[
             _spark_url(os.path.join(table_dir, "data", f)) for f in files
         ])
-        key_files, _ = _write_files(
-            written.select(*keys).distinct().coalesce(1), table_dir)
-        staged += key_files
-        while True:
-            parent = _max_manifest_id(table_dir) or None
-            sid = (parent or 0) + 1
-            if parent is None:
-                manifest = {
-                    "snapshot_id": sid, "parent_id": None,
-                    "operation": "upsert",
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                    "files": files, "file_stats": stats, "aux": {},
-                    "delete_files": [], "eq_delete_files": [],
-                    "file_seq": {f: sid for f in files},
-                    "schema": df.schema.json(), "properties": {},
-                }
-            else:
-                pm = _read_manifest(table_dir, parent)
-                manifest = {
-                    "snapshot_id": sid, "parent_id": parent,
-                    "operation": "upsert",
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                    "files": pm["files"] + files,
-                    "file_stats": {**pm.get("file_stats", {}), **stats},
-                    "aux": pm.get("aux", {}),
-                    "delete_files": pm.get("delete_files", []),
-                    "eq_delete_files": pm.get("eq_delete_files", [])
-                    + [[key_files[0], list(keys), sid]],
-                    "file_seq": {**pm.get("file_seq", {}),
-                                 **{f: sid for f in files}},
-                    "schema": _union_schema(pm.get("schema"), df.schema),
-                    "properties": {},
-                }
-            try:
-                out = _publish(table_dir, manifest)
-            except FileExistsError:
-                continue  # lost the claim — re-read parent and re-stitch
-            if parent is None:
-                # first snapshot: the staged key file ended up unreferenced
-                # (nothing earlier to delete from) — reclaim it AFTER the
-                # publish succeeded, so a lost claim can still use it
-                _remove_staged(table_dir, key_files)
-            return out
-    except BaseException:
-        _drop_unless_linked(table_dir, sid, staged)
-        raise
+        key_files, _ = put(written.select(*keys).distinct().coalesce(1))
+        return {"files": files, "stats": stats, "schema": df.schema,
+                "aux": {}, "key_file": key_files[0], "keys": list(keys)}
+
+    return _commit(table_dir, "upsert", stage)
+
+
+# Iceberg's remove_orphan_files default ``older_than``. A data/ file no
+# manifest lists is either a killed committer's or a live one's, staged
+# and not yet linked; a live committer stages and links within one run,
+# so its files (and its _stage-* dir and metadata tmp files) are younger.
+_ORPHAN_AGE_S = 3 * 24 * 3600
 
 
 def expire_snapshots(table_dir: str, keep_last: int = 1) -> dict:
-    """Drop all but the newest ``keep_last`` snapshots and delete the
-    data files no surviving snapshot references (Iceberg's
-    expire_snapshots + orphan-file sweep). Returns counts. The current
-    pointer is never expired (keep_last is clamped to >= 1); surviving
-    manifests may carry a dangling parent_id, which readers never
-    follow."""
+    """Drop all but the newest ``keep_last`` snapshots, then reclaim
+    files (Iceberg's expire_snapshots + remove_orphan_files). Returns
+    counts: ``deleted_files`` are files the expired manifests
+    referenced and no surviving one does; ``orphan_files`` are what
+    killed committers left — files in ``data/`` that no surviving
+    manifest lists, ``_stage-*`` dirs and ``metadata/*.tmp-*`` files —
+    swept only once older than ``_ORPHAN_AGE_S``, so a concurrent
+    committer's staged files are never touched. The current pointer is
+    never expired (keep_last is clamped to >= 1); surviving manifests
+    may carry a dangling parent_id, which readers never follow."""
     table_dir = _norm_table_dir(table_dir)
-    keep_last = max(1, keep_last)
     all_snaps = snapshots(table_dir)
-    if not all_snaps:
-        return {"expired_snapshots": 0, "deleted_files": 0}
-    keep = {m["snapshot_id"] for m in all_snaps[-keep_last:]}
+    keep = {m["snapshot_id"] for m in all_snaps[-max(1, keep_last):]}
     # the pointer can lag behind max id only transiently; be safe anyway
-    cur = current_snapshot_id(table_dir)
-    if cur is not None:
-        keep.add(cur)
-    kept_refs: set[str] = set()
-    dead_refs: set[str] = set()
-    for m in all_snaps:
-        refs = kept_refs if m["snapshot_id"] in keep else dead_refs
-        refs.update(m["files"])
-        refs.update(m.get("delete_files", []))
-        refs.update(e[0] for e in m.get("eq_delete_files", []))
-        for files in m.get("aux", {}).values():
-            refs.update(files)
+    keep.add(current_snapshot_id(table_dir))
+    live: set[str] = set()
+    dead: set[str] = set()
     expired = 0
     for m in all_snaps:
         if m["snapshot_id"] in keep:
+            live |= _listed(m)
             continue
+        dead |= _listed(m)
         os.remove(_manifest_path(table_dir, m["snapshot_id"]))
         expired += 1
-    # delete only files the EXPIRED manifests referenced and no kept one
-    # does — never a blind orphan sweep of data/, which would race a
-    # concurrent writer whose files land in data/ before its manifest
-    # commit (Iceberg separates these too: expire vs remove_orphan_files)
-    deleted = 0
     data_dir = os.path.join(table_dir, "data")
-    for name in dead_refs - kept_refs:
+    deleted = 0
+    for name in dead - live:
         path = os.path.join(data_dir, name)
         if os.path.exists(path):
             os.remove(path)
             deleted += 1
-    return {"expired_snapshots": expired, "deleted_files": deleted}
+    meta = os.path.join(table_dir, "metadata")
+    left = [os.path.join(data_dir, n) for n in (
+        os.listdir(data_dir) if os.path.isdir(data_dir) else ()
+    ) if n not in live]
+    left += [os.path.join(table_dir, n) for n in os.listdir(table_dir)
+             if n.startswith("_stage-")]
+    left += [os.path.join(meta, n) for n in os.listdir(meta) if ".tmp-" in n]
+    cutoff = time.time() - _ORPHAN_AGE_S
+    orphans = 0
+    for path in left:
+        try:
+            if os.lstat(path).st_mtime < cutoff:
+                (shutil.rmtree if os.path.isdir(path) else os.remove)(path)
+                orphans += 1
+        except FileNotFoundError:
+            continue  # a concurrent sweep got there first
+    return {"expired_snapshots": expired, "deleted_files": deleted,
+            "orphan_files": orphans}
 
 
 def snapshots(table_dir: str) -> list[dict]:
     """Snapshot lineage, oldest first."""
     table_dir = _norm_table_dir(table_dir)
-    meta = os.path.join(table_dir, "metadata")
-    names = [
-        n for n in os.listdir(meta)
-        if n.startswith("snap-") and n.endswith(".json")
-    ]
-    out = []
     # numeric sort — lexicographic breaks once ids outgrow the 6-digit pad
-    for name in sorted(names, key=lambda n: int(n[5:-5])):
-        with open(os.path.join(meta, name)) as f:
-            out.append(json.load(f))
-    return out
+    return [_read_manifest(table_dir, sid)
+            for sid in sorted(_snapshot_ids(table_dir))]

@@ -18,8 +18,11 @@ What it does, in order:
      ``compact`` snapshot — CAS-protected, so a concurrent ingest commit
      is never dropped (catalog.compact retries on CommitConflict);
   3. expires all but the newest --keep-snapshots snapshots, deleting
-     only data files referenced exclusively by expired manifests (an
-     in-flight committer's staged files are never touched).
+     the data files referenced exclusively by expired manifests, and
+     sweeps what killed committers left (unlisted data files, staging
+     dirs, tmp manifests) once older than catalog._ORPHAN_AGE_S, 3 days:
+     an in-flight committer's staged files are younger than the bound
+     and are never touched.
 
 Prints one JSON line with the actions taken, mirroring bench.py's
 one-line contract.
