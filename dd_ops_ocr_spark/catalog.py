@@ -425,6 +425,9 @@ def _delete(m: dict, d: dict) -> None:
 
 _RULES = {"overwrite": _overwrite, "append": _append, "compact": _compact,
           "upsert": _upsert, "delete": _delete}
+# upsert and delete stage key / delete files, not a frame: they have
+# their own entry points, and write_snapshot takes every other rule
+_WRITE_OPS = _RULES.keys() - {"upsert", "delete"}
 
 
 def _commit(table_dir: str, operation: str, stage,
@@ -441,7 +444,7 @@ def _commit(table_dir: str, operation: str, stage,
     :class:`CommitConflict` once the table has moved past that id,
     checked before staging and again at every claim. However the call
     ends, a staged file stays only if this commit's linked manifest
-    lists it (``_drop_unless_linked``)."""
+    lists it."""
     rule = _RULES[operation]
     if expected_parent is not None and \
             (_max_manifest_id(table_dir) or None) != expected_parent:
@@ -449,7 +452,7 @@ def _commit(table_dir: str, operation: str, stage,
         raise CommitConflict(
             f"table advanced past snapshot {expected_parent} before staging")
     staged: list[str] = []
-    sid = None
+    m = None  # the manifest being claimed; linked once _publish returns
     try:
         delta = stage(lambda df: _write_files(df, table_dir, staged))
         while delta is not None:
@@ -458,35 +461,36 @@ def _commit(table_dir: str, operation: str, stage,
                 # the table advanced while we were staging
                 raise CommitConflict(
                     f"table advanced to snapshot {parent}; "
-                    f"commit was derived from {expected_parent}"
-                )
+                    f"commit was derived from {expected_parent}")
             pm = _read_manifest(table_dir, parent) if parent else {}
             m = _carry(pm, parent, operation, delta.get("properties"))
             rule(m, delta)
-            sid = m["snapshot_id"]
             try:
-                return _publish(table_dir, m)
+                _publish(table_dir, m)
+                break
             except FileExistsError:
                 continue  # lost the race — re-read parent and retry
-        return None
-    finally:
-        _drop_unless_linked(table_dir, sid, staged)
-
-
-def _drop_unless_linked(table_dir: str, sid: int | None,
-                        names: list[str]) -> None:
-    """Remove the staged files ``names`` that snapshot ``sid``'s linked
-    manifest does not list (all of them when ``sid`` is None or not
-    linked). Staged names are uuid-prefixed, so a manifest listing one
-    is the manifest of the commit that staged it, and that commit
-    stands even if its pointer advance failed."""
-    listed: set[str] = set()
-    if sid is not None:
+    except BaseException:
+        # a raise after the link (in the pointer advance) has committed:
+        # keep what our linked manifest lists. Staged names are
+        # uuid-prefixed, so no other commit's manifest lists them.
         try:
-            listed = _listed(_read_manifest(table_dir, sid))
+            m = m and _read_manifest(table_dir, m["snapshot_id"])
         except FileNotFoundError:
-            pass
-    for n in set(names) - listed:
+            m = None
+        _drop_unlisted(table_dir, staged, m)
+        raise
+    # committed, or nothing to commit (m is None): judge by the manifest
+    # in hand. Re-read, it may already be gone — expired once a later
+    # snapshot carried our files forward — and they would be dropped.
+    _drop_unlisted(table_dir, staged, m)
+    return m and m["snapshot_id"]
+
+
+def _drop_unlisted(table_dir: str, names: list[str], m: dict | None) -> None:
+    """Remove the staged files ``names`` that manifest ``m`` (None: no
+    manifest) does not list."""
+    for n in set(names) - (_listed(m) if m else set()):
         try:
             os.remove(os.path.join(table_dir, "data", n))
         except FileNotFoundError:
@@ -550,11 +554,9 @@ def write_snapshot(df: DataFrame, table_dir: str, operation: str = "overwrite",
     files stay and readers heal the pointer. A killed process runs no
     cleanup; ``expire_snapshots`` reclaims its staged files once they
     are older than ``_ORPHAN_AGE_S``."""
-    if operation not in ("overwrite", "append", "compact"):
-        raise ValueError(
-            f"write_snapshot operation {operation!r}: expected "
-            "'overwrite', 'append' or 'compact'"
-        )
+    if operation not in _WRITE_OPS:
+        raise ValueError(f"write_snapshot operation {operation!r}: "
+                         f"expected one of {sorted(_WRITE_OPS)}")
     table_dir = _norm_table_dir(table_dir)
 
     def stage(put):

@@ -197,6 +197,34 @@ def test_failed_commit_step_leaves_only_linked_files(
             assert [m["snapshot_id"] for m in catalog.snapshots(table)] == [s1]
 
 
+def test_commit_keeps_files_once_its_manifest_is_expired(
+        spark, table, monkeypatch):
+    """Between a commit's link and its return, a rival can link the next
+    snapshot (carrying this one's files forward) and expire_snapshots can
+    remove this commit's manifest. The committer must keep its staged
+    files: the live snapshot references them."""
+    catalog.write_snapshot(
+        spark.createDataFrame(_BEFORE, "id long, v long"), table, "overwrite",
+        aux={"docids": _roster(spark)})
+    real = catalog._publish
+
+    def publish(table_dir, manifest):
+        sid = real(table_dir, manifest)
+        real(table_dir, {**manifest, "snapshot_id": sid + 1,
+                         "parent_id": sid, "operation": "append"})
+        catalog.expire_snapshots(table_dir, keep_last=1)
+        assert not os.path.exists(catalog._manifest_path(table_dir, sid))
+        return sid
+
+    monkeypatch.setattr(catalog, "_publish", publish)
+    _append(spark, table)
+    monkeypatch.undo()
+
+    _assert_only_linked_files(table)
+    assert _rows(spark, table) == sorted(_BEFORE + _NEW)
+    assert catalog.read_aux(spark, table, "docids").count() == 6
+
+
 # ------------------------------------------------------------ orphan sweep
 
 _KILLED_COMMITTER = r"""
