@@ -15,8 +15,8 @@ The jar is built like ``jpegshim.c``: ``javac`` against
 classpath together at launch, so a new source gets a new jar name
 instead of a rebuild over a path a running JVM may hold open.
 ``session.build_spark`` wires the jar in (``spark.driver.extraClassPath``
-plus ``spark.hadoop.fs.file.impl``) only when it will load; a cluster job
-opts in by shipping the jar (see ``jobs/extract_job.py``).
+plus ``spark.hadoop.fs.file.impl``) only when it will load; a
+``spark-submit`` launch or a cluster opts in as ``session.py`` says.
 """
 
 from __future__ import annotations

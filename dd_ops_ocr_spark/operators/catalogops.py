@@ -25,14 +25,32 @@ sf under .bench_cache with the same atomic tmp+rename protocol as
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-# bump to invalidate cached fixture tables when the layout changes
-_FIXTURE_VERSION = 1
+# the code that builds the cached fixture tables: a change to either
+# names new tables, so no query reads a table the old code committed
+_SOURCES = (
+    os.path.join(os.path.dirname(os.path.dirname(__file__)), "catalog.py"),
+    __file__,
+)
 
 _LO, _HI = "1996-01-01", "1997-01-01"
+
+
+def _fixture_path(kind: str, sf_dir: str) -> str:
+    """``.bench_cache/catalog_<kind>_<sf>_<digest of _SOURCES>``."""
+    from dd_ops_ocr_spark.fixture_cache import bench_cache_dir
+
+    h = hashlib.sha1()
+    for src in _SOURCES:
+        with open(src, "rb") as f:
+            h.update(f.read())
+    name = os.path.basename(sf_dir.rstrip("/"))
+    return os.path.join(
+        bench_cache_dir(), f"catalog_{kind}_{name}_{h.hexdigest()[:12]}")
 
 
 def _fixture_table(spark: SparkSession, sf_dir: str) -> str:
@@ -42,11 +60,9 @@ def _fixture_table(spark: SparkSession, sf_dir: str) -> str:
     Build/publish protocol shared with registry._landed_cache
     (fixture_cache.cached_fixture)."""
     from dd_ops_ocr_spark import catalog
-    from dd_ops_ocr_spark.fixture_cache import bench_cache_dir, cached_fixture
+    from dd_ops_ocr_spark.fixture_cache import cached_fixture
 
-    name = os.path.basename(sf_dir.rstrip("/"))
-    cache = bench_cache_dir()
-    path = os.path.join(cache, f"catalog_orders_{name}_v{_FIXTURE_VERSION}")
+    path = _fixture_path("orders", sf_dir)
 
     def build(tmp: str) -> None:
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -122,11 +138,9 @@ def _delete_fixture(spark: SparkSession, sf_dir: str) -> str:
     delete committed on top (catalog.delete_where): data files
     untouched, a delete snapshot masks doc_id % 7 = 3."""
     from dd_ops_ocr_spark import catalog
-    from dd_ops_ocr_spark.fixture_cache import bench_cache_dir, cached_fixture
+    from dd_ops_ocr_spark.fixture_cache import cached_fixture
 
-    name = os.path.basename(sf_dir.rstrip("/"))
-    cache = bench_cache_dir()
-    path = os.path.join(cache, f"catalog_deldocs_{name}_v{_FIXTURE_VERSION}")
+    path = _fixture_path("deldocs", sf_dir)
 
     def build(tmp: str) -> None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -165,11 +179,9 @@ def _upsert_fixture(spark: SparkSession, sf_dir: str) -> str:
     committed on top: docs with doc_id % 11 = 5 get n_chars doubled
     (same key, new value), plus three brand-new doc ids."""
     from dd_ops_ocr_spark import catalog
-    from dd_ops_ocr_spark.fixture_cache import bench_cache_dir, cached_fixture
+    from dd_ops_ocr_spark.fixture_cache import cached_fixture
 
-    name = os.path.basename(sf_dir.rstrip("/"))
-    cache = bench_cache_dir()
-    path = os.path.join(cache, f"catalog_upsdocs_{name}_v{_FIXTURE_VERSION}")
+    path = _fixture_path("upsdocs", sf_dir)
 
     def build(tmp: str) -> None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -220,11 +232,9 @@ def _evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
     append whose rows carry an extra ``note`` column — the manifest
     schema unions, pre-evolution files read note as NULL."""
     from dd_ops_ocr_spark import catalog
-    from dd_ops_ocr_spark.fixture_cache import bench_cache_dir, cached_fixture
+    from dd_ops_ocr_spark.fixture_cache import cached_fixture
 
-    name = os.path.basename(sf_dir.rstrip("/"))
-    cache = bench_cache_dir()
-    path = os.path.join(cache, f"catalog_evodocs_{name}_v{_FIXTURE_VERSION}")
+    path = _fixture_path("evodocs", sf_dir)
 
     def build(tmp: str) -> None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(

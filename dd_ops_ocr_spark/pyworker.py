@@ -28,8 +28,9 @@ The daemon forks every worker, so the method and one primed read of each
 archive are inherited by all of them. (``spark.python.worker.module``
 cannot carry this: ``pyspark.daemon`` only loads worker modules whose name
 starts with ``pyspark``.) The daemon must be importable where Python
-workers start: the package has to be on the executors' ``PYTHONPATH`` or
-in their working directory, not only shipped per task with ``--py-files``.
+workers start, not only shipped per task with ``--py-files``: on a
+``local*`` master ``build_spark`` puts the package's import root on the
+workers' ``PYTHONPATH``, and ``session.py`` says what a cluster needs.
 """
 
 from __future__ import annotations

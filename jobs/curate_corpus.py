@@ -8,31 +8,6 @@ Submit:
         jobs/curate_corpus.py --input <dir with documents.parquet> \
         --output /path/out [--report-topk 50]
 
-Python workers: ``session.build_spark`` forks them from
-``dd_ops_ocr_spark.pyworker``, which stops each task from re-reading
-pyspark.zip's directory (0.16-0.27 CPU-s a task). This job builds its own
-session and keeps the stock daemon. To use the library's, add
-    --conf spark.python.daemon.module=dd_ops_ocr_spark.pyworker
-only where the package is importable when a worker starts: installed on
-every executor or on their PYTHONPATH (e.g. through
-spark.executorEnv.PYTHONPATH). --py-files alone is not enough: workers
-add those files to sys.path per task, after the daemon has started, and
-a daemon that cannot import its module fails every Python task.
-
-Local outputs: ``session.build_spark`` sessions write file:// paths
-through ``native/NioLocalFileSystem.java``, which sets permissions with
-java.nio where Hadoop's stock local FileSystem forks one ``chmod`` per
-file and directory (Spark's Hadoop has no libhadoop). This job keeps the
-stock FileSystem. To opt in, build the jar once with
-    python -c "from dd_ops_ocr_spark.native import localfs; print(localfs.jar())"
-and, under --master local[N], add
-    --conf spark.driver.extraClassPath=<jar> \
-    --conf spark.hadoop.fs.file.impl=ddops.fs.NioLocalFileSystem
-On a cluster, also ship it with --jars <jar> and name it in
-spark.executor.extraClassPath. Set fs.file.impl only where every JVM has
-the jar on its classpath: a JVM that cannot load the class fails every
-file:// read and write.
-
 Runs the composed curation chain (quality filter -> exact-dedup keep ->
 benchmark decontamination -> stratified downsampling -> sequence
 packing; operators/textstats.q_corpus_curriculum) and writes:
@@ -63,29 +38,16 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--report-topk", type=int, default=50)
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    # getActiveSession is thread-local; _instantiatedSession is the
-    # process-global — check both so a host application's session on
-    # another thread is never stopped out from under it (same ownership
-    # rule as jobs/maintain_table.py)
-    prior = (
-        SparkSession.getActiveSession() or SparkSession._instantiatedSession
-    )
-    spark = (
-        SparkSession.builder.appName("ddops_curate")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-    created = spark is not prior
     from dd_ops_ocr_spark.operators.textstats import (
         q_corpus_curriculum,
         q_topk_ngrams,
     )
+    from dd_ops_ocr_spark.session import job_session
 
     t0 = time.monotonic()
-    try:
+    with job_session("ddops_curate") as spark:
         # the query emits the pack bucket — partition by it directly
         q_corpus_curriculum(spark, args.input).write.mode(
             "overwrite"
@@ -108,9 +70,6 @@ def main(argv: list[str] | None = None) -> int:
             ).count(),
             "elapsed_sec": round(time.monotonic() - t0, 3),
         }
-    finally:
-        if created:  # pytest calls main() against the shared session
-            spark.stop()
     print(json.dumps(summary))
     return 0
 

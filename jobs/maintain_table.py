@@ -26,20 +26,6 @@ What it does, in order:
 
 Prints one JSON line with the actions taken, mirroring bench.py's
 one-line contract.
-
-Local outputs: ``session.build_spark`` sessions write file:// paths
-through ``native/NioLocalFileSystem.java``, which sets permissions with
-java.nio where Hadoop's stock local FileSystem forks one ``chmod`` per
-file and directory (Spark's Hadoop has no libhadoop). This job keeps the
-stock FileSystem. To opt in, build the jar once with
-    python -c "from dd_ops_ocr_spark.native import localfs; print(localfs.jar())"
-and, under --master local[N], add
-    --conf spark.driver.extraClassPath=<jar> \
-    --conf spark.hadoop.fs.file.impl=ddops.fs.NioLocalFileSystem
-On a cluster, also ship it with --jars <jar> and name it in
-spark.executor.extraClassPath. Set fs.file.impl only where every JVM has
-the jar on its classpath: a JVM that cannot load the class fails every
-file:// read and write.
 """
 
 from __future__ import annotations
@@ -88,31 +74,14 @@ def main(argv: list[str] | None = None) -> int:
             "from_files": n_files, "to_files": args.target_files,
         }
         if not args.dry_run:
-            from pyspark.sql import SparkSession
+            from dd_ops_ocr_spark.session import job_session
 
-            # Only stop a session this job itself created. Ownership is
-            # decided by comparing getOrCreate's result to the process-
-            # global session captured beforehand — getActiveSession()
-            # alone is thread-local and misses a caller's session when
-            # this runs on a worker thread, which would stop the host
-            # application's SparkContext out from under it.
-            prior = (
-                SparkSession.getActiveSession()
-                or SparkSession._instantiatedSession
-            )
-            spark = (
-                SparkSession.builder.appName("maintain_table").getOrCreate()
-            )
-            created = spark is not prior
-            try:
-                sort_by = args.sort_by.split(",") if args.sort_by else None
+            sort_by = args.sort_by.split(",") if args.sort_by else None
+            with job_session("maintain_table") as spark:
                 new_sid = catalog.compact(
                     spark, args.table, num_files=args.target_files,
                     sort_by=sort_by,
                 )
-            finally:
-                if created:
-                    spark.stop()
             report["compact"]["snapshot_id"] = new_sid
     else:
         report["compact"] = None

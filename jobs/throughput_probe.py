@@ -12,17 +12,6 @@ BENCH.md are reproducible from the command line:
       spark-submit --master local[$N] --py-files ddops.zip \
         jobs/throughput_probe.py --input <spans parquet> --repeats 3
     done
-
-Python workers: ``session.build_spark`` forks them from
-``dd_ops_ocr_spark.pyworker``, which stops each task from re-reading
-pyspark.zip's directory (0.16-0.27 CPU-s a task). This job builds its own
-session and keeps the stock daemon. To use the library's, add
-    --conf spark.python.daemon.module=dd_ops_ocr_spark.pyworker
-only where the package is importable when a worker starts: installed on
-every executor or on their PYTHONPATH (e.g. through
-spark.executorEnv.PYTHONPATH). --py-files alone is not enough: workers
-add those files to sys.path per task, after the daemon has started, and
-a daemon that cannot import its module fails every Python task.
 """
 
 from __future__ import annotations
@@ -41,34 +30,26 @@ def main(argv: list[str] | None = None) -> int:
     if args.repeats < 1:
         p.error("--repeats must be >= 1 (the summary needs one timed run)")
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.appName("ddops_probe")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .getOrCreate()
-    )
     from dd_ops_ocr_spark import pipeline, sources
+    from dd_ops_ocr_spark.session import job_session
 
-    spans = sources.read_spans(spark, args.input)
-    n_docs = spans.count()
-    pipeline.extract(spans).count()  # warmup: python workers + JIT
-    best = float("inf")
-    for _ in range(args.repeats):
-        t0 = time.monotonic()
-        n_spans = pipeline.extract(spans).count()
-        best = min(best, time.monotonic() - t0)
+    with job_session("ddops_probe") as spark:
+        spans = sources.read_spans(spark, args.input)
+        n_docs = spans.count()
+        pipeline.extract(spans).count()  # warmup: python workers + JIT
+        best = float("inf")
+        for _ in range(args.repeats):
+            t0 = time.monotonic()
+            n_spans = pipeline.extract(spans).count()
+            best = min(best, time.monotonic() - t0)
+        cores = spark.sparkContext.defaultParallelism
     print(json.dumps({
-        "cores": spark.sparkContext.defaultParallelism,
+        "cores": cores,
         "n_docs": n_docs,
         "n_spans_out": n_spans,
         "best_sec": round(best, 3),
         "docs_per_sec": round(n_docs / best, 2),
     }))
-    spark.stop()
     return 0
 
 

@@ -665,3 +665,28 @@ def test_lagging_pointer_heals_in_cas_loops(spark, table):
     s5 = catalog.compact(spark, table, num_files=1)
     assert s5 == s3 + 2
     assert catalog.read_table(spark, table).count() == 5
+
+
+def test_catalog_fixture_tables_are_named_by_their_builders_source(
+        tmp_path, monkeypatch):
+    """The ``catalog_*`` oracle queries cache their tables under a digest
+    of catalog.py and catalogops.py: an edit to either names new tables,
+    so no query reads a table that older commit code built."""
+    from dd_ops_ocr_spark.operators import catalogops
+
+    assert os.path.samefile(catalogops._SOURCES[0], catalog.__file__)
+    assert os.path.samefile(catalogops._SOURCES[1], catalogops.__file__)
+    copies = []
+    for src in catalogops._SOURCES:
+        copies.append(tmp_path / os.path.basename(src))
+        shutil.copyfile(src, copies[-1])
+    monkeypatch.setattr(catalogops, "_SOURCES", tuple(map(str, copies)))
+    paths = {catalogops._fixture_path("orders", "/data/sf0.01/")}
+    assert catalogops._fixture_path("orders", "/data/sf0.01") in paths
+    for copy in copies:
+        with open(copy, "a") as f:
+            f.write("# edited\n")
+        paths.add(catalogops._fixture_path("orders", "/data/sf0.01"))
+    assert len(paths) == 3
+    assert all(os.path.basename(p).startswith("catalog_orders_sf0.01_")
+               for p in paths)

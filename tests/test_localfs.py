@@ -13,6 +13,7 @@ import stat
 import subprocess
 import sys
 import textwrap
+from pathlib import Path
 
 import pytest
 
@@ -155,8 +156,16 @@ _CHILD = textwrap.dedent("""
 """)
 
 
-def _run_child(tmp_path, mode: str) -> tuple[dict, list[str]]:
-    """Run _CHILD with a ``chmod`` first on PATH that logs each call."""
+def spark_submit() -> str:
+    import pyspark
+
+    home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    return os.path.join(home, "bin", "spark-submit")
+
+
+def chmod_logged(tmp_path) -> tuple[dict, Path]:
+    """(an environment whose PATH starts with a ``chmod`` that logs each
+    call, the log file)."""
     real = shutil.which("chmod")
     bindir = tmp_path / "bin"
     bindir.mkdir()
@@ -166,10 +175,26 @@ def _run_child(tmp_path, mode: str) -> tuple[dict, list[str]]:
     wrapper.chmod(0o755)
     env = dict(os.environ)
     env["PATH"] = f"{bindir}{os.pathsep}{env['PATH']}"
+    return env, log
+
+
+def _run_child(tmp_path, mode: str,
+               submit: list[str] | None = None) -> tuple[dict, list[str]]:
+    """Run _CHILD with a ``chmod`` first on PATH that logs each call:
+    through ``python -c``, or, given ``submit`` (its extra arguments),
+    through ``spark-submit --master local[2]``, which launches the JVM
+    before _CHILD runs."""
+    env, log = chmod_logged(tmp_path)
     env["PYTHONPATH"] = os.pathsep.join(
         [ROOT] + [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p])
+    cmd = [sys.executable, "-c", _CHILD]
+    if submit is not None:
+        env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+        (tmp_path / "child.py").write_text(_CHILD)
+        cmd = [spark_submit(), "--master", "local[2]", *submit,
+               str(tmp_path / "child.py")]
     proc = subprocess.run(
-        [sys.executable, "-c", _CHILD, mode, str(tmp_path / "out")],
+        [*cmd, mode, str(tmp_path / "out")],
         cwd=ROOT, env=env, capture_output=True, text=True, timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
     report = json.loads(proc.stdout.strip().splitlines()[-1])
@@ -195,3 +220,24 @@ def test_failed_build_keeps_stock_fs_and_round_trips(tmp_path):
     assert "_niofs" not in (report["classpath"] or "")
     assert report["rows"] == 200
     assert calls
+
+
+def test_spark_submit_without_the_jar_keeps_stock_fs(tmp_path):
+    """Under spark-submit the JVM runs before ``build_spark``, and without
+    the jar on its launch classpath it cannot load the class: the session
+    must keep the stock FileSystem (it used to set ``fs.file.impl``
+    anyway, and every write failed with ClassNotFoundException)."""
+    report, calls = _run_child(tmp_path, "default", submit=[])
+    assert report["raw"] == "org.apache.hadoop.fs.RawLocalFileSystem"
+    assert report["fs_impl"] is None
+    assert report["rows"] == 200
+    assert calls
+
+
+@needs_jar
+def test_spark_submit_with_the_jar_forks_no_chmod(tmp_path):
+    report, calls = _run_child(
+        tmp_path, "default", submit=["--driver-class-path", localfs.jar()])
+    assert report["raw"] == localfs.CLASS + "$Raw"
+    assert report["rows"] == 200
+    assert calls == []
