@@ -231,11 +231,10 @@ def _publish(table_dir: str, manifest: dict) -> int:
     ``_max_manifest_id()+1`` and every commit loop READS the parent
     manifest it finds there, so with open-then-write a committer that
     crashed (or was merely slow) mid-``json.dump`` would leave a torn
-    ``snap-*.json`` that permanently fails every later commit, read of
-    that id, and the change feed's dense snapshot walk. With
-    link-publish a crash before the link leaves only an orphan
-    ``*.tmp-*`` (never matched by ``_max_manifest_id``'s ``.json``
-    filter) and the id is simply reused."""
+    ``snap-*.json`` that permanently fails every later commit and read
+    of that id. With link-publish a crash before the link leaves only an
+    orphan ``*.tmp-*`` (never matched by ``_max_manifest_id``'s
+    ``.json`` filter) and the id is simply reused."""
     os.makedirs(os.path.join(table_dir, "metadata"), exist_ok=True)
     sid = manifest["snapshot_id"]
     final = _manifest_path(table_dir, sid)

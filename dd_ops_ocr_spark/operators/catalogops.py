@@ -25,8 +25,10 @@ sf under .bench_cache with the same atomic tmp+rename protocol as
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -53,6 +55,22 @@ def _fixture_path(kind: str, sf_dir: str) -> str:
         bench_cache_dir(), f"catalog_{kind}_{name}_{h.hexdigest()[:12]}")
 
 
+def _cached_table(kind: str, sf_dir: str, build) -> str:
+    """``fixture_cache.cached_fixture`` at ``_fixture_path(kind, sf_dir)``.
+    Then it removes the dirs that older code built for the same table
+    under another digest: nothing reads them again."""
+    from dd_ops_ocr_spark.fixture_cache import cached_fixture
+
+    path = cached_fixture(_fixture_path(kind, sf_dir), build)
+    stem = path[:path.rindex("_") + 1]
+    for old in glob.glob(glob.escape(stem) + "*"):
+        # a digest (or a pre-digest ``v1``); ``._building_`` dirs are
+        # cached_fixture's, and another sf's name adds an ``_``
+        if old != path and old[len(stem):].isalnum():
+            shutil.rmtree(old, ignore_errors=True)
+    return path
+
+
 def _fixture_table(spark: SparkSession, sf_dir: str) -> str:
     """Build-once catalog table over orders: snapshot 1 = overwrite,
     8 files range-clustered by o_orderdate (tight footer bounds =
@@ -60,9 +78,6 @@ def _fixture_table(spark: SparkSession, sf_dir: str) -> str:
     Build/publish protocol shared with registry._landed_cache
     (fixture_cache.cached_fixture)."""
     from dd_ops_ocr_spark import catalog
-    from dd_ops_ocr_spark.fixture_cache import cached_fixture
-
-    path = _fixture_path("orders", sf_dir)
 
     def build(tmp: str) -> None:
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -72,7 +87,7 @@ def _fixture_table(spark: SparkSession, sf_dir: str) -> str:
         catalog.write_snapshot(clustered, tmp, operation="overwrite")
         catalog.compact(spark, tmp, num_files=2, sort_by=["o_orderdate"])
 
-    return cached_fixture(path, build)
+    return _cached_table("orders", sf_dir, build)
 
 
 def _year_agg(df: DataFrame) -> DataFrame:
@@ -138,9 +153,6 @@ def _delete_fixture(spark: SparkSession, sf_dir: str) -> str:
     delete committed on top (catalog.delete_where): data files
     untouched, a delete snapshot masks doc_id % 7 = 3."""
     from dd_ops_ocr_spark import catalog
-    from dd_ops_ocr_spark.fixture_cache import cached_fixture
-
-    path = _fixture_path("deldocs", sf_dir)
 
     def build(tmp: str) -> None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -149,7 +161,7 @@ def _delete_fixture(spark: SparkSession, sf_dir: str) -> str:
         )
         catalog.delete_where(spark, tmp, "doc_id % 7 = 3")
 
-    return cached_fixture(path, build)
+    return _cached_table("deldocs", sf_dir, build)
 
 
 def q_catalog_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,9 +191,6 @@ def _upsert_fixture(spark: SparkSession, sf_dir: str) -> str:
     committed on top: docs with doc_id % 11 = 5 get n_chars doubled
     (same key, new value), plus three brand-new doc ids."""
     from dd_ops_ocr_spark import catalog
-    from dd_ops_ocr_spark.fixture_cache import cached_fixture
-
-    path = _fixture_path("upsdocs", sf_dir)
 
     def build(tmp: str) -> None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -198,7 +207,7 @@ def _upsert_fixture(spark: SparkSession, sf_dir: str) -> str:
         ))
         catalog.upsert(spark, tmp, changes, keys=["doc_id"])
 
-    return cached_fixture(path, build)
+    return _cached_table("upsdocs", sf_dir, build)
 
 
 def q_catalog_upsert_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -232,9 +241,6 @@ def _evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
     append whose rows carry an extra ``note`` column — the manifest
     schema unions, pre-evolution files read note as NULL."""
     from dd_ops_ocr_spark import catalog
-    from dd_ops_ocr_spark.fixture_cache import cached_fixture
-
-    path = _fixture_path("evodocs", sf_dir)
 
     def build(tmp: str) -> None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -249,7 +255,7 @@ def _evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
         )
         catalog.write_snapshot(evolved, tmp, operation="append")
 
-    return cached_fixture(path, build)
+    return _cached_table("evodocs", sf_dir, build)
 
 
 def q_catalog_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,9 +15,8 @@ resample -> re-encode -> average-hash):
 plus pure-python **PNG** (operators/png.py, incl. Adam7) and lossless
 **WebP/VP8L** (operators/webp.py). Format tails that DO still need an
 external codec (lossy VP8, video containers beyond the MJPEG/delta AVI
-codecs, 16-bit PNG) raise NotImplementedError at ``decode_image``; the
-deterministic-fake fallback (``fake_decode_batch``) remains for
-plumbing tests.
+codecs, 16-bit PNG) raise NotImplementedError at ``decode_image``, and
+``media_metadata_quarantined`` routes such payloads to its quarantine.
 """
 
 from __future__ import annotations
@@ -257,18 +256,6 @@ def ahash64_batch(cells) -> np.ndarray:
 
 
 # ------------------------------------------------------ payload synthesis
-
-def synth_payload(media_ref: str, n_bytes: int = 64) -> bytes:
-    """Deterministic fake binary payload derived from the ref string
-    (opaque bytes — used by the frame-sampling fallback and tests)."""
-    seed = mix64(int.from_bytes(media_ref.encode()[:8].ljust(8, b"\0"), "little"))
-    out = bytearray()
-    h = seed
-    while len(out) < n_bytes:
-        h = mix64(h)
-        out += h.to_bytes(8, "little")
-    return bytes(out[:n_bytes])
-
 
 def synth_geometry(media_ref: str) -> tuple[int, int]:
     """Deterministic (w, h) for a synthetic payload, derived via md5 so
@@ -550,29 +537,6 @@ def real_decode_batch(payloads: pd.Series) -> pd.DataFrame:
             "width": np.asarray([im.shape[1] for im in imgs], dtype=np.int32),
             "height": np.asarray([im.shape[0] for im in imgs], dtype=np.int32),
             "phash": ahash64_batch([ahash64_cells(im) for im in imgs]),
-        }
-    )
-
-
-def fake_decode_batch(payloads: pd.Series) -> pd.DataFrame:
-    """DETERMINISTIC FAKE decoder (vectorized): metadata derived from the
-    payload bytes, for payloads in formats this container cannot decode.
-    Mirrors the return shape of ``real_decode_batch``."""
-    n = len(payloads)
-    n_bytes = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=n)
-    head = np.fromiter(
-        (int.from_bytes(p[:8], "little") if len(p) >= 8 else 0 for p in payloads),
-        dtype=np.uint64,
-        count=n,
-    )
-    fmts = np.array(["jpeg", "png", "webp"], dtype=object)
-    return pd.DataFrame(
-        {
-            "n_bytes": n_bytes,
-            "format": fmts[(head % 3).astype(np.int64)],
-            "width": (256 + (head >> 8) % 1792).astype(np.int32),
-            "height": (256 + (head >> 24) % 2304).astype(np.int32),
-            "phash": (head >> 1).astype(np.int64),
         }
     )
 

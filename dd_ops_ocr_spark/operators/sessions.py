@@ -2,9 +2,8 @@
 tables.
 
 * ``sessionize``: gap-based sessions per user (a new session starts
-  when the time since the previous event exceeds ``gap``) — the BATCH
-  twin of the streaming `F.session_window` job (streaming/jobs.py:329),
-  so the two surfaces can be parity-checked offline. Classic
+  when the time since the previous event exceeds ``gap``), the shape
+  Spark's streaming ``F.session_window`` computes online. Classic
   gaps-and-islands: lag per (user, ts), boundary flag, running sum —
   one user shuffle, two co-partitioned window passes, one groupBy.
   Session ids are deterministic (user_id, session_idx).

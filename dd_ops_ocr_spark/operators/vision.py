@@ -10,12 +10,14 @@ the same preprocessing on ACTUAL pixels, decoded by the native codecs
   * adaptive binarization — integral-image local-mean threshold, the
     pure-numpy equivalent of the reference's cv2 image-cleanup pass
     (reference: src/modules/step2/03_dewarping_engine.py:111-228)
-  * deskew estimate — projection-profile variance maximization over an
-    angle sweep (the classic document-skew estimator; the reference
-    fits minAreaRect angles, same objective)
   * region detection — row-profile gap segmentation into horizontal
     bands with per-band column extents (the reference's
-    contour-bounding-box pass, step5/01 region detection)
+    contour-bounding-box pass, step5/01 region detection), drawn by the
+    debug overlay
+  * 2x super-resolution and the debug overlay (K13, K14)
+
+The skew and region judgments themselves run over span geometry
+(queries ``deskew_estimate`` and ``contour_regions``).
 
 All math is integer/fixed-point (deterministic across platforms); pixel
 outputs are pytest-verified against constructed images with known
@@ -68,43 +70,6 @@ def binarize_adaptive_px(
     # g < mean - c  <=>  g*area < s - c*area   (integer, no division)
     ink = g * area < s - c * area
     return np.where(ink, 0, 255).astype(np.uint8)
-
-
-def _shear_rows(ink: np.ndarray, slope_num: int, slope_den: int) -> np.ndarray:
-    """Row profile of ink under a horizontal shear of slope num/den
-    (integer shear = rotation small-angle approximation, exact and fast):
-    each ink pixel (y, x) contributes to profile row y - x*slope.
-    Fully vectorized (one nonzero + one bincount)."""
-    h, w = ink.shape
-    shift = (np.arange(w, dtype=np.int64) * slope_num) // slope_den
-    ys, xs = np.nonzero(ink)
-    idx = ys - shift[xs]
-    idx -= idx.min() if len(idx) else 0
-    size = h + int(np.abs(shift).max()) + 1
-    return np.bincount(idx, minlength=size).astype(np.int64)
-
-
-def deskew_estimate_px(
-    img: np.ndarray, max_angle_deg: float = 5.0, steps: int = 21
-) -> float:
-    """Estimate document skew by maximizing the variance of the sheared
-    row projection profile (sharp line gaps <=> high variance). Returns
-    degrees; positive = text rises left-to-right. Deterministic: integer
-    shears, ties break toward the smaller |angle|."""
-    ink = binarize_adaptive_px(img) == 0
-    h, w = ink.shape
-    if not ink.any() or w < 2:
-        return 0.0
-    angles = np.linspace(-max_angle_deg, max_angle_deg, steps)
-    best = (None, 0.0)
-    den = 1024
-    for a in sorted(angles, key=lambda v: (abs(v), v)):
-        num = int(round(np.tan(np.radians(a)) * den))
-        prof = _shear_rows(ink, num, den)
-        v = float(((prof - prof.mean()) ** 2).mean())
-        if best[0] is None or v > best[0] + 1e-9:
-            best = (v, float(a))
-    return best[1]
 
 
 def regions_px(img: np.ndarray, min_gap: int = 2) -> list[dict]:
@@ -183,59 +148,7 @@ def media_binarize(media_df: DataFrame, block: int = 8, c: int = 2) -> DataFrame
     )
 
 
-def media_deskew(media_df: DataFrame) -> DataFrame:
-    from dd_ops_ocr_spark.operators.multimodal import decode_image
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            angles = [
-                deskew_estimate_px(decode_image(p)) for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"].to_numpy(),
-                    "angle_deg": np.asarray(angles, dtype=np.float64),
-                }
-            )
-
-    return media_df.mapInPandas(
-        run, schema="media_ref string, angle_deg double"
-    )
-
-
-def media_regions(media_df: DataFrame, min_gap: int = 2) -> DataFrame:
-    """One row per detected region (posexplode-style one-to-many)."""
-    from dd_ops_ocr_spark.operators.multimodal import decode_image
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, idxs, y0s, y1s, x0s, x1s, inks = [], [], [], [], [], [], []
-            for r, p in zip(pdf["media_ref"], pdf["payload"]):
-                for i, reg in enumerate(regions_px(decode_image(p), min_gap)):
-                    refs.append(r)
-                    idxs.append(i)
-                    y0s.append(reg["y0"])
-                    y1s.append(reg["y1"])
-                    x0s.append(reg["x0"])
-                    x1s.append(reg["x1"])
-                    inks.append(reg["ink"])
-            yield pd.DataFrame(
-                {
-                    "media_ref": np.asarray(refs, dtype=object),
-                    "region_idx": np.asarray(idxs, dtype=np.int32),
-                    "y0": np.asarray(y0s, dtype=np.int32),
-                    "y1": np.asarray(y1s, dtype=np.int32),
-                    "x0": np.asarray(x0s, dtype=np.int32),
-                    "x1": np.asarray(x1s, dtype=np.int32),
-                    "ink_px": np.asarray(inks, dtype=np.int64),
-                }
-            )
-
-    return media_df.mapInPandas(
-        run,
-        schema="media_ref string, region_idx int, y0 int, y1 int, x0 int,"
-               " x1 int, ink_px long",
-    )
 
 
 def upscale_2x_px(img: np.ndarray) -> np.ndarray:

@@ -125,15 +125,27 @@ def job_session(
     """``build_spark(app, extra=extra)`` for a job's ``main``; on exit it
     stops the session only if this call created it, so a caller's session
     (a test's, or a host application's on another thread) outlives the
-    job. ``getActiveSession`` is thread-local, so the process-global
-    ``_instantiatedSession`` is checked too."""
+    job. A caller's session also gets back every modifiable setting the
+    job changed on it, and loses the ones the job added: ``getOrCreate``
+    applies ``build_spark``'s settings to a running session and never
+    restores them. ``getActiveSession`` is thread-local, so the
+    process-global ``_instantiatedSession`` is checked too."""
     prior = SparkSession.getActiveSession() or SparkSession._instantiatedSession
+    before = prior.conf.getAll if prior is not None else {}
     spark = build_spark(app, extra=extra)
     try:
         yield spark
     finally:
         if spark is not prior:
             spark.stop()
+        else:
+            for key, value in spark.conf.getAll.items():
+                if before.get(key) == value or not spark.conf.isModifiable(key):
+                    continue
+                if key in before:
+                    spark.conf.set(key, before[key])
+                else:
+                    spark.conf.unset(key)
 
 
 def _running_jvm():

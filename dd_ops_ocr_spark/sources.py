@@ -1,4 +1,4 @@
-"""Sources and sinks (SURVEY §2.1).
+"""Sources (SURVEY §2.1).
 
 The reference opens PDFs from disk, rejects corrupt/empty ones
 (S1, step1/01_pdf_reader.py:145-186), and writes per-session directories.
@@ -7,10 +7,9 @@ to a quarantine output instead of aborting the job (X1 warn-and-continue
 becomes row-level quarantine).
 
 At scale both outputs come from ONE pass: the validity flag is a cheap
-column, and Catalyst prunes the scan to (doc_id, spans) either way.
-Iceberg-table variants are gated behind an import-try (no Iceberg jars in
-this sandbox); plain parquet + the run ledger (ledger.py) stand in for
-snapshot isolation.
+column, and Catalyst prunes the scan to (doc_id, spans) either way. The
+sinks are the run ledger (ledger.py) and the snapshot catalog
+(catalog.py).
 """
 
 from __future__ import annotations
@@ -26,39 +25,16 @@ def read_spans(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(SPANS_SCHEMA).parquet(path)
 
 
-def read_spans_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    """Same table from a JSON-lines landing format (one doc per line,
-    ``{"doc_id": ..., "spans": [{kind,text,media_ref,offset}, ...]}``) —
-    the shape an upstream ingestion service typically drops. Declared
-    schema (no inference scan); a malformed line surfaces as a null-id
-    row (PERMISSIVE mode with an explicit corrupt-record column — without
-    one Spark silently drops unparseable lines) and lands in quarantine
-    via ``split_valid`` instead of failing the job (S1
-    warn-and-continue)."""
-    from pyspark.sql import types as T
-
-    with_corrupt = T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in SPANS_SCHEMA.fields]
-        + [T.StructField("_corrupt_record", T.StringType(), True)]
-    )
-    return (
-        spark.read.schema(with_corrupt)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-        .drop("_corrupt_record")
-    )
-
-
 def invalid_reason() -> F.Column:
     """The single validity predicate for span documents, as a reason
     column: NULL means valid; otherwise one of ``null_doc_id`` /
     ``null_spans`` / ``empty_spans`` / ``bad_offset`` (first failing
-    rule wins). ``split_valid`` and the streaming DLQ both derive from
-    this expression so the batch and streaming quarantine rules cannot
-    drift. Every WHEN branch is null-safe (the bad_offset predicate maps
-    a null element offset to true, not null), so the chain is NULL
-    exactly when the doc passes all rules."""
+    rule wins). ``split_valid`` derives from this expression, and the
+    batch job and ``streaming.jobs.stream_extract`` both quarantine
+    through ``split_valid``, so their rules cannot drift. Every WHEN
+    branch is null-safe (the bad_offset predicate maps a null element
+    offset to true, not null), so the chain is NULL exactly when the doc
+    passes all rules."""
     return (
         F.when(F.col("doc_id").isNull(), "null_doc_id")
         .when(F.col("spans").isNull(), "null_spans")
@@ -78,7 +54,7 @@ def split_valid(
     """(valid, quarantine): a doc is invalid when it has no spans, a null
     doc_id, or any span whose offset is negative (corrupt geometry) —
     the reference's corrupt-PDF rejection, row-level. The rules live in
-    ``invalid_reason`` (shared with the streaming DLQ).
+    ``invalid_reason``.
 
     ``with_reason=True`` keeps the already-computed classification on
     the quarantine side as a ``reason`` column (no second evaluation,
@@ -100,66 +76,6 @@ def split_valid(
     return valid, quarantine
 
 
-def write_output(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Final span-sequence sink, partitioned by a doc_id hash bucket so a
-    downstream reader can prune (S9's result sink, keyed not file-named)."""
-    out = df.withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(64)))
-    out.write.mode(mode).partitionBy("bucket").parquet(path)
-
-
-def read_dimension_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    **options: str,
-) -> DataFrame:
-    """S12's real connector shape: the reference reads its Risk dimension
-    from Postgres (reference: src/api/main.py:93-146). This is the
-    deployment reader — `spark.read.jdbc` with bounded parallel partitions
-    when a numeric split column is given (without one, a JDBC read is a
-    SINGLE task hammering the database; never do that for a big table).
-    The sandbox ships no JDBC driver jar, so absence surfaces as a clear
-    NotImplementedError and the in-repo queries use the broadcast
-    dimension stand-in (operators/integrate.read_risk_dim) instead."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    if partition_column is not None:
-        if lower_bound is None or upper_bound is None:
-            raise ValueError("partitioned JDBC read needs lower/upper bounds")
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", str(num_partitions))
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-        )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    try:
-        return reader.load()
-    except Exception as exc:  # pragma: no cover - environment-dependent
-        raise NotImplementedError(
-            "no JDBC driver on the classpath in this environment; pass "
-            "--jars <driver.jar> at spark-submit, or use the broadcast "
-            "dimension stand-in (operators.integrate.read_risk_dim)"
-        ) from exc
-
-
-def try_iceberg_writer(df: DataFrame, table: str):
-    """Iceberg append when the runtime has the catalog; otherwise a clear
-    error — the sandbox has no Iceberg jars (stub per environment note)."""
-    try:
-        return df.writeTo(table).append()
-    except Exception as exc:  # pragma: no cover - environment-dependent
-        raise NotImplementedError(
-            "Iceberg catalog not available in this environment; use "
-            "ledger.run_one_pass() (the default sink) for snapshot-style "
-            "commits"
-        ) from exc
-
-
 def q_doc_validity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver query for the quarantine boundary itself (F1-class rules;
     reference: step1/01_pdf_reader.py's corrupt-PDF rejection): plant
@@ -169,7 +85,8 @@ def q_doc_validity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything else stays valid) — then run the REAL ``split_valid`` and
     emit (src_id, reason, valid). The oracle restates only the planting
     rule, so a misrouted class (e.g. empty spans slipping through as
-    valid, the exact defect the streaming DLQ once had) hash-mismatches.
+    valid, the exact defect the streaming quarantine once had)
+    hash-mismatches.
     """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     nib = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)

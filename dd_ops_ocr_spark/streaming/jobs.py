@@ -31,8 +31,20 @@ def stream_extract(
     per-microbatch extraction -> parquet sink, exactly-once per epoch via
     checkpointed source offsets + dynamic overwrite of the epoch
     partition (foreachBatch is at-least-once; the overwrite makes the
-    replayed epoch idempotent)."""
-    from dd_ops_ocr_spark import pipeline
+    replayed epoch idempotent).
+
+    Each micro-batch is split by ``sources.split_valid``, the batch
+    job's quarantine rule: a malformed document must neither stall the
+    stream nor vanish. Invalid docs go to ``{out_dir}/_quarantine`` with
+    their ``reason`` and original ``spans`` (epoch-partitioned the same
+    way, so a replayed bad doc overwrites its row); Spark's file index
+    skips ``_``-prefixed dirs, so ``spark.read.parquet(out_dir)`` reads
+    only extracted rows. The split precedes the valid side's dedup,
+    because ``dropDuplicates`` treats null doc_ids as equal and would
+    collapse distinct null-id docs into one quarantine row. The
+    reference acks and records a failed message instead of NACK-looping
+    it (api/main.py:453-650)."""
+    from dd_ops_ocr_spark import pipeline, sources
 
     src = (
         spark.readStream.schema(SPANS_SCHEMA)
@@ -41,15 +53,15 @@ def stream_extract(
     )
 
     def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        deduped = batch_df.dropDuplicates(["doc_id"])
-        out = pipeline.extract(deduped)
-        (
-            out.withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(out_dir)
-        )
+        batch_df.persist()  # both sinks read the split: one source scan
+        try:
+            valid, invalid = sources.split_valid(batch_df, with_reason=True)
+            _write_epoch(invalid.select("doc_id", "reason", "spans"),
+                         epoch_id, f"{out_dir}/_quarantine")
+            _write_epoch(pipeline.extract(valid.dropDuplicates(["doc_id"])),
+                         epoch_id, out_dir)
+        finally:
+            batch_df.unpersist()
 
     writer = (
         src.writeStream.outputMode("append")
@@ -59,6 +71,17 @@ def stream_extract(
     if trigger_once:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _write_epoch(df: DataFrame, epoch_id: int, path: str) -> None:
+    """Replace ``path``'s ``epoch=<epoch_id>`` partition with ``df``."""
+    (
+        df.withColumn("epoch", F.lit(epoch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch")
+        .parquet(path)
+    )
 
 
 def stream_dedup_stateful(spark: SparkSession, input_dir: str):
@@ -101,232 +124,6 @@ def stream_dedup_stateful(spark: SparkSession, input_dir: str):
         stateStructType="admitted int",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-ASSEMBLE_TIMEOUT_MS = 60_000  # incomplete-doc eviction on a live stream
-
-
-def _assemble(key, pdfs, state):
-    """Keyed state update for stream_assemble_docs (module-level so the
-    eviction branch is unit-testable without wall-clock coupling)."""
-    import pandas as pd
-
-    doc_id = key[0]
-    if state.hasTimedOut:
-        # continuous-stream eviction path: emit what arrived, flagged
-        offs, txts, n_total = state.get
-        state.remove()
-        order = sorted(range(len(offs)), key=lambda i: offs[i])
-        return iter([pd.DataFrame({
-            "doc_id": [doc_id],
-            "n_spans": [len(offs)],
-            "complete": [False],
-            "text": ["\n\n".join(txts[i] for i in order)],
-        })])
-    offs = []
-    txts = []
-    n_total = None
-    if state.exists:
-        offs, txts, n_total = state.get
-        offs, txts = list(offs), list(txts)
-    # Insert-if-absent keyed by offset: PubSub-style delivery is
-    # at-least-once, so a re-delivered span must not count twice toward
-    # n_total (it would emit complete=True with a duplicated span and a
-    # genuinely-missing one).
-    seen = set(offs)
-    for pdf in pdfs:
-        for o, t, nt in zip(pdf["offset"], pdf["text"], pdf["n_total"]):
-            o = int(o)
-            if o not in seen:
-                seen.add(o)
-                offs.append(o)
-                txts.append(str(t))
-            n_total = int(nt)
-    if n_total is not None and len(offs) >= n_total:
-        state.remove()  # emitted exactly once; re-deliveries restart
-        order = sorted(range(len(offs)), key=lambda i: offs[i])
-        return iter([pd.DataFrame({
-            "doc_id": [doc_id],
-            "n_spans": [len(offs)],
-            "complete": [True],
-            "text": ["\n\n".join(txts[i] for i in order)],
-        })])
-    state.update((offs, txts, n_total))
-    state.setTimeoutDuration(ASSEMBLE_TIMEOUT_MS)
-    return iter(())
-
-
-def stream_assemble_docs(spark: SparkSession, input_dir: str):
-    """Custom stateful ASSEMBLY operator (applyInPandasWithState with
-    accumulating state): span events for one document arrive across
-    micro-batches (the reference's pages land as separate PubSub pushes
-    and are assembled per session dir, api/main.py:453-650); keyed state
-    accumulates (offset, text) pairs until the declared span count is
-    reached, then emits the assembled document EXACTLY ONCE — reading
-    order by offset, the flagship's "\n\n" intra-doc separator — and
-    clears the key's state. Incomplete documents stay in state across
-    batches (and would evict via the configured processing-time timeout
-    on a continuous stream).
-
-    Input schema: (doc_id string, n_total int, offset int, text string)
-    — one row per span event.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    src = (
-        spark.readStream.schema(
-            "doc_id string, n_total int, offset int, text string"
-        )
-        .option("maxFilesPerTrigger", 1)  # force multi-batch processing
-        .parquet(input_dir)
-    )
-
-    return src.groupBy("doc_id").applyInPandasWithState(
-        _assemble,
-        outputStructType=(
-            "doc_id string, n_spans long, complete boolean, text string"
-        ),
-        stateStructType=(
-            "offs array<int>, txts array<string>, n_total int"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-ASSEMBLE_EVENT_GAP_MS = 300_000       # evict incomplete docs this far past WM
-ASSEMBLE_TOMBSTONE_MS = 600_000       # remember emitted docs this far past WM
-
-
-def _assemble_event(key, pdfs, state):
-    """EVENT-TIME twin of _assemble (module-level so every branch is
-    unit-testable against a state stub).
-
-    Differences from the processing-time variant, both driven by the
-    reference's PubSub path re-delivering pages arbitrarily late
-    (api/main.py:496-501):
-
-    * eviction is watermark-relative (setTimeoutTimestamp), so a stalled
-      executor clock can't evict a doc whose pages are still in flight;
-    * after the complete doc is emitted, the key keeps an ``emitted``
-      TOMBSTONE until the watermark passes its retention window — a late
-      re-delivered span finds the tombstone and is dropped instead of
-      re-opening the doc and emitting a duplicate (exactly-once emit per
-      doc_id survives at-least-once delivery).
-
-    Timeout semantics: emitted=False -> partial emit (complete=False,
-    the same flag the processing-time variant uses) AND the key is
-    tombstoned — a span still in flight must find the tombstone, not
-    re-open the doc and emit a second row; emitted=True -> drop the
-    tombstone silently (retention elapsed).
-
-    Timeouts anchor to the watermark; ONLY while it is uninitialized
-    (first micro-batch, getCurrentWatermarkMs() == 0) they fall back to
-    the newest event ts in the batch — a raw-watermark anchor there
-    would stamp epoch-1970 timeouts that expire the instant the
-    watermark initializes, prematurely dropping batch-1 tombstones and
-    partial-emitting batch-1 docs whose pages are still in flight. A
-    live watermark is never overridden by event time, so a producer
-    with a skewed-forward clock cannot extend its doc's eviction.
-    """
-    import pandas as pd
-
-    doc_id = key[0]
-    if state.hasTimedOut:
-        emitted, offs, txts, n_total = state.get
-        if emitted:
-            state.remove()  # tombstone retention elapsed
-            return iter(())
-        # partial emit + tombstone (NOT remove): late spans of an
-        # evicted doc must be dropped, not re-accumulated
-        wm = state.getCurrentWatermarkMs()
-        state.update((True, [], [], n_total))
-        state.setTimeoutTimestamp(wm + ASSEMBLE_TOMBSTONE_MS)
-        order = sorted(range(len(offs)), key=lambda i: offs[i])
-        return iter([pd.DataFrame({
-            "doc_id": [doc_id],
-            "n_spans": [len(offs)],
-            "complete": [False],
-            "text": ["\n\n".join(txts[i] for i in order)],
-        })])
-    emitted, offs, txts, n_total = False, [], [], None
-    if state.exists:
-        emitted, offs, txts, n_total = state.get
-        offs, txts = list(offs), list(txts)
-    seen = set(offs)
-    wm = state.getCurrentWatermarkMs()
-    uninitialized = wm == 0
-    for pdf in pdfs:
-        if uninitialized and "ts" in pdf.columns and len(pdf):
-            # ONLY while the watermark is uninitialized (first micro-
-            # batch): fall back to the newest event ts so timeouts are
-            # not stamped near epoch 1970. Once the watermark is live it
-            # stays the sole anchor — event-time anchoring on every
-            # batch would let one skewed-forward producer clock push a
-            # doc's eviction arbitrarily far out.
-            newest = pd.Timestamp(pdf["ts"].max())
-            wm = max(wm, int(newest.value // 1_000_000))
-        for o, t, nt in zip(pdf["offset"], pdf["text"], pdf["n_total"]):
-            n_total = int(nt)
-            o = int(o)
-            if not emitted and o not in seen:
-                seen.add(o)
-                offs.append(o)
-                txts.append(str(t))
-    if emitted:  # late re-delivery: refresh the tombstone, emit nothing
-        state.update((True, [], [], n_total))
-        state.setTimeoutTimestamp(wm + ASSEMBLE_TOMBSTONE_MS)
-        return iter(())
-    if n_total is not None and len(offs) >= n_total:
-        state.update((True, [], [], n_total))  # tombstone replaces spans
-        state.setTimeoutTimestamp(wm + ASSEMBLE_TOMBSTONE_MS)
-        order = sorted(range(len(offs)), key=lambda i: offs[i])
-        return iter([pd.DataFrame({
-            "doc_id": [doc_id],
-            "n_spans": [len(offs)],
-            "complete": [True],
-            "text": ["\n\n".join(txts[i] for i in order)],
-        })])
-    state.update((False, offs, txts, n_total))
-    state.setTimeoutTimestamp(wm + ASSEMBLE_EVENT_GAP_MS)
-    return iter(())
-
-
-def stream_assemble_docs_event_time(
-    spark: SparkSession, input_dir: str, watermark: str = "10 seconds"
-):
-    """Event-time variant of stream_assemble_docs: span events carry an
-    event timestamp; incomplete docs evict relative to the WATERMARK
-    (not the executor clock) and emitted docs leave a tombstone so late
-    re-deliveries can't duplicate (see _assemble_event).
-
-    Input schema: (doc_id string, n_total int, offset int, text string,
-    ts timestamp) — one row per span event.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    src = (
-        spark.readStream.schema(
-            "doc_id string, n_total int, offset int, text string, "
-            "ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-        .withWatermark("ts", watermark)
-    )
-
-    return src.groupBy("doc_id").applyInPandasWithState(
-        _assemble_event,
-        outputStructType=(
-            "doc_id string, n_spans long, complete boolean, text string"
-        ),
-        stateStructType=(
-            "emitted boolean, offs array<int>, txts array<string>, "
-            "n_total int"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -406,365 +203,6 @@ def stream_upsert_sink(
             if not latest.head(1):
                 return  # nothing strictly newer — no snapshot churn
         catalog.upsert(spark, table_dir, latest, keys=keys)
-
-    writer = (
-        src.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(handle_batch)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-ASSEMBLE_TWS_GAP_MS = 15_000  # incomplete-doc eviction gap past the watermark
-
-
-def _make_assemble_processor():
-    """Factory for the transformWithState doc assembler (deferred
-    import keeps module import light and the processor picklable)."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class AssembleDocProcessor(StatefulProcessor):
-        """The event-time doc assembler on Spark 4's transformWithState
-        API — the same semantics as `_assemble_event` (assemble spans
-        until n_total arrive, emit once, evict stragglers relative to
-        the watermark, tombstone against late re-delivery) but with the
-        state model the API makes explicit instead of hand-packed
-        tuples:
-
-        * MapState(offset -> text): insert-if-absent IS the per-offset
-          re-delivery dedup (the hand-rolled version packs arrays and
-          dedups in Python);
-        * ValueState n_total;
-        * ValueState emitted = the tombstone, with a TTL so it
-          self-expires instead of living forever (TTL is
-          processing-time based in this API);
-        * a real event-time timer per doc for eviction, re-armed on
-          every arrival, cancelled on emission.
-        """
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._spans = handle.getMapState(
-                "spans", "offset int", "text string"
-            )
-            self._total = handle.getValueState("n_total", "n_total int")
-            self._emitted = handle.getValueState(
-                "emitted", "emitted boolean",
-                ttlDurationMs=3_600_000,
-            )
-
-        def _emit(self, doc_id: str, complete: bool):
-            pairs = sorted(
-                (k[0], v[0]) for k, v in self._spans.iterator()
-            )
-            out = pd.DataFrame({
-                "doc_id": [doc_id],
-                "n_spans": [len(pairs)],
-                "complete": [complete],
-                "text": ["\n\n".join(t for _o, t in pairs)],
-            })
-            self._spans.clear()
-            self._total.clear()
-            self._emitted.update((True,))
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            return iter([out])
-
-        def handleInputRows(self, key, rows, timerValues):
-            doc_id = key[0]
-            if self._emitted.exists():
-                return iter(())  # tombstone: late re-delivery, drop
-            max_ts_ms = 0
-            for pdf in rows:
-                for off, txt, nt, ts in zip(
-                    pdf["offset"], pdf["text"], pdf["n_total"], pdf["ts"]
-                ):
-                    o = int(off)
-                    if not self._spans.containsKey((o,)):
-                        self._spans.updateValue((o,), (str(txt),))
-                    self._total.update((int(nt),))
-                    max_ts_ms = max(
-                        max_ts_ms, int(pd.Timestamp(ts).value // 10**6)
-                    )
-            total = self._total.get()
-            n_have = sum(1 for _ in self._spans.keys())
-            if total is not None and n_have >= total[0]:
-                return self._emit(doc_id, True)
-            # arm/refresh eviction relative to the watermark; while the
-            # watermark is uninitialized (first micro-batch) anchor to
-            # the newest event ts seen, same rationale as
-            # _assemble_event: a 0-anchored timer would fire the moment
-            # the watermark initializes
-            wm = timerValues.getCurrentWatermarkInMs()
-            anchor = wm if wm > 0 else max_ts_ms
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(anchor + ASSEMBLE_TWS_GAP_MS)
-            return iter(())
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            if self._emitted.exists():
-                return iter(())  # stale timer after emission
-            n_have = sum(1 for _ in self._spans.keys())
-            if n_have == 0:
-                self._total.clear()
-                return iter(())
-            return self._emit(key[0], False)
-
-        def close(self) -> None:
-            pass
-
-    return AssembleDocProcessor()
-
-
-def stream_assemble_docs_tws(
-    spark: SparkSession, input_dir: str, watermark: str = "10 seconds"
-):
-    """`stream_assemble_docs_event_time` re-expressed on Spark 4's
-    transformWithStateInPandas (see _make_assemble_processor for the
-    state model). Requires the RocksDB state store provider — which is
-    what a 10^12-doc run uses anyway (state > executor heap)."""
-    src = (
-        spark.readStream.schema(
-            "doc_id string, n_total int, offset int, text string, "
-            "ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-        .withWatermark("ts", watermark)
-    )
-    return src.groupBy("doc_id").transformWithStateInPandas(
-        statefulProcessor=_make_assemble_processor(),
-        outputStructType=(
-            "doc_id string, n_spans long, complete boolean, text string"
-        ),
-        outputMode="Append",
-        timeMode="EventTime",
-    )
-
-
-def stream_dedup_within_watermark(
-    spark: SparkSession, input_dir: str, watermark: str = "10 seconds"
-):
-    """Built-in twin of `stream_dedup_stateful` for the span-EVENT
-    shape: ``dropDuplicatesWithinWatermark`` on (doc_id, offset) —
-    Spark's own bounded-state streaming dedup instead of a custom
-    applyInPandasWithState operator.
-
-    The state story is the reason to prefer it at scale: the custom
-    admission guard keeps one state row per doc_id FOREVER (exactly
-    right for "admit each doc once ever", but state grows with the
-    corpus); dropDuplicatesWithinWatermark expires dedup keys once the
-    watermark passes their event time, so state is bounded by the
-    re-delivery horizon, which is the actual shape of PubSub
-    at-least-once duplicates (reference: api/main.py:496-501 retries
-    arrive near the original, not weeks later). Re-deliveries carry
-    the SAME event ts, so after state expiry the watermark filter
-    itself rejects them as late — the no-duplicate guarantee holds
-    both before and after expiry.
-
-    Input schema: (doc_id string, n_total int, offset int, text
-    string, ts timestamp) — one row per span event, as in
-    `stream_assemble_docs_event_time`."""
-    src = (
-        spark.readStream.schema(
-            "doc_id string, n_total int, offset int, text string, "
-            "ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-        .withWatermark("ts", watermark)
-    )
-    return src.dropDuplicatesWithinWatermark(["doc_id", "offset"])
-
-
-def stream_sessionize(
-    spark: SparkSession, input_dir: str, schema, gap: str = "30 minutes"
-):
-    """Event-time SESSION windows per user (`F.session_window` — the
-    built-in dynamic-gap windowing, Spark-first rather than a hand-rolled
-    applyInPandasWithState timeout loop): a session closes after ``gap``
-    of user inactivity past the watermark. The streaming twin of the
-    batch `sessionize` query (operators/textops.py), which computes the
-    same sessions with a lag-window gap test — the two agree on closed
-    sessions."""
-    src = spark.readStream.schema(schema).parquet(input_dir)
-    src = src.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        src.withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", gap).alias("session"), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("session.start").alias("session_start"),
-            F.col("session.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def stream_static_enrich(
-    spark: SparkSession, input_dir: str, schema, dim: DataFrame
-):
-    """Stream-static join — the streaming twin of the batch dimension
-    enrich (J5): every micro-batch hash-joins against the BATCH
-    dimension DataFrame, broadcast to the executors per batch. The
-    static side is re-planned each micro-batch, so a dimension that is
-    itself a table (not a cached DataFrame) picks up updates between
-    batches — the slowly-changing-dim behavior PubSub consumers
-    usually bolt on by hand. No watermark needed: the static side
-    never ages."""
-    src = spark.readStream.schema(schema).parquet(input_dir)
-    return src.join(F.broadcast(dim), "event_type").select(
-        "event_id", "user_id", "event_type", "weight"
-    )
-
-
-def stream_stream_match(
-    spark: SparkSession, input_dir: str, schema,
-    horizon: str = "1 hour", late: str = "30 minutes",
-):
-    """Watermarked stream-stream INNER join: each click matched to the
-    SAME user's purchases within ``horizon`` after it — the funnel
-    pairing computed online. Both sides carry event-time watermarks
-    and the join condition carries the time bound, which is what lets
-    the engine EXPIRE buffered state: a click older than
-    watermark - horizon can never match a future purchase and is
-    dropped from the state store (unbounded state otherwise — the
-    stream-stream-join failure mode at 10^12 events). Matches emit as
-    they arrive (inner join), exactly once per (click, purchase)
-    pair."""
-    clicks = (
-        spark.readStream.schema(schema).parquet(input_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").cast("timestamp").alias("c_ts"),
-        )
-        .withWatermark("c_ts", late)
-    )
-    buys = (
-        spark.readStream.schema(schema).parquet(input_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("buy_id"),
-            F.col("user_id").alias("b_user"),
-            F.col("ts").cast("timestamp").alias("b_ts"),
-        )
-        .withWatermark("b_ts", late)
-    )
-    return clicks.join(
-        buys,
-        (F.col("c_user") == F.col("b_user"))
-        & (F.col("b_ts") > F.col("c_ts"))
-        & (F.col("b_ts") <= F.col("c_ts") + F.expr(f"INTERVAL {horizon}")),
-    ).select("click_id", "buy_id", F.col("c_user").alias("user_id"))
-
-
-def stream_event_metrics(spark: SparkSession, input_dir: str, schema):
-    """Watermarked windowed aggregation over an event stream (the metrics
-    side-channel; reference writes OcrPageCount rows per request,
-    api/main.py:190-234). 5-minute tumbling windows, 10-minute watermark
-    for late data."""
-    src = spark.readStream.schema(schema).parquet(input_dir)
-    # parquet timestamps may load as TIMESTAMP_NTZ, which watermarks reject
-    src = src.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        src.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "5 minutes"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-    )
-
-
-def stream_extract_with_dlq(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    dlq_dir: str,
-    trigger_once: bool = True,
-):
-    """stream_extract with a dead-letter queue — the streaming face of
-    the engine's warn-and-continue posture (sources.py quarantines
-    corrupt batch rows; operators/multimodal.py quarantines corrupt
-    payloads): a malformed document in one micro-batch must never stall
-    the stream, and must never silently vanish either.
-
-    Each micro-batch splits into valid docs (extracted to ``out_dir``)
-    and invalid docs (routed to ``dlq_dir`` with a ``reason`` column and
-    the original ``spans`` payload for triage/replay). The validity
-    rules are ``sources.invalid_reason()`` — the SAME expression the
-    batch path's ``split_valid`` uses, so the two quarantine boundaries
-    cannot drift (null doc_id, null/empty spans array, span with null or
-    negative offset). BOTH sinks are epoch-partitioned with dynamic
-    overwrite, so a replayed micro-batch rewrites exactly its own
-    epoch partition on each side — the DLQ inherits the same
-    exactly-once-per-epoch convergence as the main output (a redelivered
-    bad doc updates its DLQ row instead of appending a duplicate).
-
-    The reference's equivalent is the per-message try/except around the
-    extraction call in the push webhook (api/main.py:453-650) that acks
-    the message and records the failure rather than NACK-looping a
-    poison document forever.
-    """
-    from dd_ops_ocr_spark import pipeline, sources
-
-    src = (
-        spark.readStream.schema(SPANS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_dir)
-    )
-
-    def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # Flag BEFORE deduplicating: dropDuplicates treats NULL doc_ids
-        # as equal, so deduping first would collapse every corrupt
-        # null-id doc in the batch into one DLQ row. Only the valid side
-        # dedupes (redelivery idempotence); the DLQ keeps every
-        # malformed arrival, payload included.
-        flagged = (
-            batch_df.withColumn("dlq_reason", sources.invalid_reason())
-            .persist()  # both sinks consume the split — one source scan
-        )
-        try:
-            (
-                flagged.filter(F.col("dlq_reason").isNotNull())
-                .select(
-                    "doc_id",
-                    F.col("dlq_reason").alias("reason"),
-                    "spans",
-                    F.lit(epoch_id).alias("epoch"),
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch")
-                .parquet(dlq_dir)
-            )
-            out = pipeline.extract(
-                flagged.filter(F.col("dlq_reason").isNull())
-                .drop("dlq_reason")
-                .dropDuplicates(["doc_id"])
-            )
-            (
-                out.withColumn("epoch", F.lit(epoch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch")
-                .parquet(out_dir)
-            )
-        finally:
-            flagged.unpersist()
 
     writer = (
         src.writeStream.outputMode("append")

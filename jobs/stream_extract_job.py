@@ -13,11 +13,17 @@ currently in the landing dir, then exit — the cron-driven deployment
 shape, and also how CI verifies it. --continuous leaves the query
 running (the long-lived service shape).
 
+Malformed docs (null doc_id, null or empty spans, a null or negative
+span offset) go to <output>/_quarantine with a reason column and their
+spans, as extract_job.py quarantines them; readers of <output> skip the
+_-prefixed dir.
+
 Exactly-once: source offsets live in --checkpoint; each micro-batch
-dynamically overwrites only its own epoch=<id> output partition, so a
-replayed batch converges instead of appending (see streaming/jobs.py).
-Re-running the drained job is a no-op (offsets already committed) —
-the streaming twin of extract_job.py's ledger resume.
+dynamically overwrites only its own epoch=<id> partition of both sinks,
+so a replayed batch converges instead of appending (see
+streaming/jobs.py). Re-running the drained job is a no-op (offsets
+already committed) — the streaming twin of extract_job.py's ledger
+resume.
 """
 
 from __future__ import annotations

@@ -690,3 +690,30 @@ def test_catalog_fixture_tables_are_named_by_their_builders_source(
     assert len(paths) == 3
     assert all(os.path.basename(p).startswith("catalog_orders_sf0.01_")
                for p in paths)
+
+
+def test_catalog_fixture_build_removes_superseded_tables(
+        tmp_path, monkeypatch):
+    """Publishing a ``catalog_*`` fixture table removes the same table's
+    dirs under other digests, and keeps the current table, other
+    tables, other sfs' tables and in-flight build dirs."""
+    from dd_ops_ocr_spark import fixture_cache
+    from dd_ops_ocr_spark.operators import catalogops
+
+    monkeypatch.setattr(fixture_cache, "bench_cache_dir", lambda: str(tmp_path))
+    current = os.path.basename(catalogops._fixture_path("orders", "/d/sf0.01"))
+    stale = ["catalog_orders_sf0.01_000000000000", "catalog_orders_sf0.01_v1"]
+    kept = ["catalog_deldocs_sf0.01_000000000000",
+            "catalog_orders_sf0.1_000000000000",
+            "catalog_orders_sf0.01_000000000000._building_1_ab"]
+    for name in stale + kept:
+        (tmp_path / name).mkdir()
+
+    built = []
+    path = catalogops._cached_table(
+        "orders", "/d/sf0.01", lambda tmp: built.append(os.mkdir(tmp)))
+    assert built and os.path.basename(path) == current
+    assert sorted(os.listdir(tmp_path)) == sorted(kept + [current])
+    # a cache hit does not rebuild and keeps the current table
+    catalogops._cached_table("orders", "/d/sf0.01", built.append)
+    assert len(built) == 1 and os.path.isdir(path)

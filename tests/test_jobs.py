@@ -32,10 +32,42 @@ def test_stream_extract_job_drains_and_keeps_the_session(spark, tmp_path, capsys
     corpus.build_spans_df(spark, SF_SMOKE).limit(300).coalesce(2) \
         .write.parquet(land)
     landed = spark.read.parquet(land).count()
+    key = "spark.sql.streaming.numRecentProgressUpdates"  # the job raises it
+    caller_value = spark.conf.get(key)
     assert main(["--input", land, "--output", str(tmp_path / "out"),
                  "--checkpoint", str(tmp_path / "ckpt")]) == 0
     assert _summary(capsys.readouterr().out)["num_input_rows"] == landed > 0
     assert spark.range(3).count() == 3  # the caller's session still runs
+    assert spark.conf.get(key) == caller_value  # and keeps its settings
+
+
+def test_stream_extract_job_quarantines_a_poison_doc(spark, tmp_path, capsys):
+    """A doc with a negative offset must not stall the drain: it lands in
+    ``<output>/_quarantine`` and the valid doc extracts as in batch."""
+    from jobs.stream_extract_job import main
+
+    valid = corpus.build_spans_df(spark, SF_SMOKE).limit(1).cache()
+    poison = spark.createDataFrame(
+        [("poison", [("text", "x", None, -3)])], SPANS_SCHEMA)
+    land, out = str(tmp_path / "land"), str(tmp_path / "out")
+    valid.unionByName(poison).coalesce(1).write.parquet(land)
+    args = ["--input", land, "--output", out,
+            "--checkpoint", str(tmp_path / "ckpt")]
+
+    assert main(args) == 0
+    cols = ["doc_id", "kind", "text", "media_ref", "order"]
+    got = spark.read.parquet(out).select(cols)
+    want = pipeline.extract(valid).select(cols)
+    assert got.exceptAll(want).count() == 0 == want.exceptAll(got).count()
+    quarantined = spark.read.parquet(f"{out}/_quarantine").collect()
+    assert [(r.doc_id, r.reason) for r in quarantined] == [
+        ("poison", "bad_offset")]
+
+    n_out = got.count()
+    assert main(args) == 0  # the drained job reruns as a no-op
+    assert _summary(capsys.readouterr().out)["num_input_rows"] == 0
+    assert spark.read.parquet(out).count() == n_out
+    assert spark.read.parquet(f"{out}/_quarantine").count() == 1
 
 
 def test_throughput_probe_counts_the_extraction_and_keeps_the_session(

@@ -25,66 +25,6 @@ def test_split_valid_quarantines_corrupt_rows(spark):
     assert quarantine.count() == 3
 
 
-def test_write_output_partitions_prunable(spark, tmp_path):
-    from dd_ops_ocr_spark import pipeline
-
-    df = corpus.build_spans_df(spark, SF_SMOKE).limit(50)
-    out = pipeline.extract(df)
-    path = str(tmp_path / "out")
-    sources.write_output(out, path)
-    back = spark.read.parquet(path)
-    assert back.count() == out.count()
-    # partition pruning: one bucket reads a subset of files
-    one = back.filter("bucket = 3")
-    assert one.count() < back.count()
-
-
-def test_jsonl_source_roundtrips_and_quarantines(spark, tmp_path):
-    """JSONL landing format: parse with the declared schema, extraction
-    output equals the parquet path's; malformed lines become quarantine
-    rows, not job failures."""
-    import json
-
-    from dd_ops_ocr_spark import pipeline
-
-    df = corpus.build_spans_df(spark, SF_SMOKE).limit(30)
-    rows = [
-        json.dumps({"doc_id": r["doc_id"],
-                    "spans": [s.asDict() for s in r["spans"]]})
-        for r in df.collect()
-    ]
-    land = tmp_path / "land"
-    land.mkdir()
-    (land / "docs.jsonl").write_text(
-        "\n".join(rows + ['{"this is": not json', '{"doc_id": "no_spans"}'])
-    )
-
-    got = sources.read_spans_jsonl(spark, str(land))
-    valid, quarantine = sources.split_valid(got)
-    assert quarantine.count() == 2  # the corrupt line + the span-less doc
-    a = pipeline.extract(valid)
-    b = pipeline.extract(df)
-    cols = ["doc_id", "kind", "text", "media_ref", "order"]
-    assert a.count() == b.count()
-    assert a.select(cols).exceptAll(b.select(cols)).count() == 0
-
-
-def test_read_dimension_jdbc_gates_cleanly(spark):
-    """No JDBC driver in this sandbox: the reader must surface a clear
-    NotImplementedError (not a raw ClassNotFound) and validate its
-    partitioned-read contract before touching the classpath."""
-    import pytest
-
-    from dd_ops_ocr_spark.sources import read_dimension_jdbc
-
-    with pytest.raises(ValueError, match="bounds"):
-        read_dimension_jdbc(
-            spark, "jdbc:postgresql://db/x", "risk", partition_column="id"
-        )
-    with pytest.raises(NotImplementedError, match="JDBC driver"):
-        read_dimension_jdbc(spark, "jdbc:postgresql://db/x", "risk")
-
-
 def test_invalid_reason_matches_referee_property(spark):
     """Property: for generated docs covering every validity class (and
     combinations — a null-offset span inside an otherwise-fine doc, a

@@ -7,7 +7,7 @@ import shutil
 import tempfile
 
 from dd_ops_ocr_spark import corpus, pipeline
-from dd_ops_ocr_spark.streaming.jobs import stream_extract, stream_event_metrics
+from dd_ops_ocr_spark.streaming.jobs import stream_extract
 from tests.conftest import SF_SMOKE
 
 
@@ -106,512 +106,24 @@ def test_stream_dedup_stateful_across_batches(spark):
         shutil.rmtree(land, ignore_errors=True)
 
 
-def test_stream_sessionize_matches_batch(spark):
-    """Streaming session windows (F.session_window) must agree with the
-    batch lag-window sessionization on the same events: same number of
-    sessions per user, same per-session event counts."""
-    from dd_ops_ocr_spark.operators.textops import q_sessionize
-    from dd_ops_ocr_spark.streaming.jobs import stream_sessionize
-
-    land = tempfile.mkdtemp(prefix="stream_sess_")
-    try:
-        ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        ev.coalesce(1).write.mode("overwrite").parquet(f"{land}/in")
-        agg = stream_sessionize(spark, f"{land}/in", ev.schema)
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("sess_stream")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = spark.sql(
-            "select user_id, n_events from sess_stream"
-        ).toPandas()
-        want = q_sessionize(spark, SF_SMOKE).toPandas()
-
-        def sig(df):
-            return {
-                int(u): sorted(g["n_events"].tolist())
-                for u, g in df.groupby("user_id")
-            }
-
-        assert sig(got) == sig(want)
-    finally:
-        shutil.rmtree(land, ignore_errors=True)
-
-
-def test_stream_event_metrics_watermark(spark):
-    land = tempfile.mkdtemp(prefix="stream_ev_")
-    try:
-        ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        ev.coalesce(1).write.mode("overwrite").parquet(f"{land}/in")
-        agg = stream_event_metrics(spark, f"{land}/in", ev.schema)
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("ev_metrics")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = spark.sql(
-            "select count(*) as n, sum(n) as total from ev_metrics"
-        ).collect()[0]
-        assert got["n"] > 0
-        assert got["total"] == ev.count()
-    finally:
-        shutil.rmtree(land, ignore_errors=True)
-
-
-def test_stream_assemble_docs_across_batches(spark):
-    """Stateful assembly: a doc whose spans straddle micro-batches must
-    come out assembled (reading order, flagship separator) exactly once
-    with complete=True; a doc still missing spans must stay in keyed
-    state (not emitted) while the timeout is far away. The eviction
-    branch itself is unit-tested below — wall-clock timeouts cannot be
-    asserted deterministically on a host with multi-second stall
-    windows (BENCH.md)."""
-    import os
-    import time as _time
-
-    from dd_ops_ocr_spark.streaming import jobs as sjobs
-    from dd_ops_ocr_spark.streaming.jobs import stream_assemble_docs
-
-    land = tempfile.mkdtemp(prefix="stream_asm_land_")
-    ckpt = tempfile.mkdtemp(prefix="stream_asm_ckpt_")
-    schema = "doc_id string, n_total int, offset int, text string"
-
-    def write_file(name, rows, mtime):
-        df = spark.createDataFrame(rows, schema).coalesce(1)
-        tmp = f"{land}/_tmp_{name}"
-        df.write.mode("overwrite").parquet(tmp)
-        import glob
-        import shutil as sh
-
-        part = glob.glob(f"{tmp}/part-*.parquet")[0]
-        dst = f"{land}/{name}.parquet"
-        sh.copy(part, dst)
-        sh.rmtree(tmp)
-        os.utime(dst, (mtime, mtime))
-
-    old_timeout = sjobs.ASSEMBLE_TIMEOUT_MS
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    q = None
-    try:
-        t0 = _time.time() - 100
-        # file 1: doc_a partial (2 of 3, out of order), doc_b complete
-        write_file("f1", [("doc_a", 3, 20, "a-third"),
-                          ("doc_a", 3, 0, "a-first"),
-                          ("doc_b", 1, 0, "b-only")], t0)
-        # file 2: doc_c forever incomplete (2 of 5)
-        write_file("f2", [("doc_c", 5, 0, "c0"), ("doc_c", 5, 10, "c1")],
-                   t0 + 10)
-        # file 3: doc_a's last span arrives two batches later
-        write_file("f3", [("doc_a", 3, 10, "a-second")], t0 + 20)
-
-        # timeout far beyond the test horizon: no wall-clock coupling
-        sjobs.ASSEMBLE_TIMEOUT_MS = 3_600_000
-        # 3-key stream: fewer state-store partitions = faster batches
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        q = (
-            stream_assemble_docs(spark, land)
-            .writeStream.format("memory").queryName("asm")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        # poll: both completable docs must land; then stop the query (it
-        # would otherwise idle out the 1h timeout of doc_c's state)
-        deadline = _time.time() + 240
-        while _time.time() < deadline:
-            if spark.sql("select count(*) c from asm").collect()[0]["c"] >= 2:
-                break
-            _time.sleep(2)
-        got = spark.sql("select * from asm").toPandas()
-        got = got.sort_values("doc_id").reset_index(drop=True)
-        assert list(got["doc_id"]) == ["doc_a", "doc_b"], got
-        a = got[got["doc_id"] == "doc_a"].iloc[0]
-        assert bool(a["complete"]) and int(a["n_spans"]) == 3
-        assert a["text"] == "a-first\n\na-second\n\na-third"
-        b = got[got["doc_id"] == "doc_b"].iloc[0]
-        assert bool(b["complete"]) and int(b["n_spans"]) == 1
-        assert b["text"] == "b-only"
-    finally:
-        sjobs.ASSEMBLE_TIMEOUT_MS = old_timeout
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        if q is not None:
-            try:
-                q.stop()
-            except Exception:
-                pass
-        for d in (land, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
-
-
-def test_stream_assemble_eviction_branch():
-    """The processing-time-timeout eviction path, unit-tested against a
-    state stub: emit what arrived flagged incomplete, in offset order,
-    and clear the state."""
-    from dd_ops_ocr_spark.streaming.jobs import _assemble
-
-    class StubState:
-        def __init__(self, value):
-            self.hasTimedOut = True
-            self.exists = True
-            self.get = value
-            self.removed = False
-
-        def remove(self):
-            self.removed = True
-
-        def update(self, v):
-            raise AssertionError("eviction must not update state")
-
-        def setTimeoutDuration(self, ms):
-            raise AssertionError("eviction must not re-arm the timeout")
-
-    st = StubState(([20, 0], ["late", "early"], 5))
-    out = list(_assemble(("doc_x",), iter(()), st))
-    assert len(out) == 1 and st.removed
-    row = out[0].iloc[0]
-    assert row["doc_id"] == "doc_x"
-    assert int(row["n_spans"]) == 2
-    assert not bool(row["complete"])
-    assert row["text"] == "early\n\nlate"
-
-
-def test_stream_assemble_redelivery_idempotent():
-    """At-least-once delivery (the reference's PubSub pushes): a span
-    re-delivered before completion must not count twice toward n_total —
-    ADVICE r4: duplicate offsets made len(offs) reach n_total with a span
-    still missing, emitting complete=True with duplicated text."""
-    import pandas as pd
-
-    from dd_ops_ocr_spark.streaming.jobs import _assemble
-
-    class StubState:
-        def __init__(self):
-            self.hasTimedOut = False
-            self.exists = False
-            self.get = None
-            self.removed = False
-
-        def remove(self):
-            self.removed = True
-
-        def update(self, v):
-            self.exists = True
-            self.get = v
-
-        def setTimeoutDuration(self, ms):
-            pass
-
-    st = StubState()
-    batch1 = pd.DataFrame(
-        {"offset": [0, 1, 1], "text": ["a", "b", "b"], "n_total": [3, 3, 3]}
-    )
-    out = list(_assemble(("d1",), iter([batch1]), st))
-    # 2 distinct of 3 spans: must NOT emit despite 3 arrived rows
-    assert out == [] and st.exists and not st.removed
-
-    # re-deliver offset 0 alongside the genuinely-missing offset 2
-    batch2 = pd.DataFrame(
-        {"offset": [0, 2], "text": ["a", "c"], "n_total": [3, 3]}
-    )
-    out = list(_assemble(("d1",), iter([batch2]), st))
-    assert len(out) == 1 and st.removed
-    row = out[0].iloc[0]
-    assert int(row["n_spans"]) == 3
-    assert bool(row["complete"])
-    assert row["text"] == "a\n\nb\n\nc"
-
-
-class _EventStubState:
-    """GroupState stub for _assemble_event branch tests."""
-
-    def __init__(self, value=None, timed_out=False, watermark_ms=1_000_000):
-        self.hasTimedOut = timed_out
-        self.exists = value is not None
-        self.get = value
-        self.removed = False
-        self.timeout_ts = None
-        self._wm = watermark_ms
-
-    def remove(self):
-        self.removed = True
-
-    def update(self, v):
-        self.exists = True
-        self.get = v
-
-    def setTimeoutTimestamp(self, ts):
-        self.timeout_ts = ts
-
-    def getCurrentWatermarkMs(self):
-        return self._wm
-
-
-def test_assemble_event_complete_leaves_tombstone():
-    """Completing a doc emits once and REPLACES the span state with an
-    emitted tombstone (watermark-relative retention), instead of
-    removing the key."""
-    import pandas as pd
-
-    from dd_ops_ocr_spark.streaming.jobs import (
-        ASSEMBLE_TOMBSTONE_MS,
-        _assemble_event,
-    )
-
-    st = _EventStubState()
-    batch = pd.DataFrame(
-        {"offset": [10, 0], "text": ["b", "a"], "n_total": [2, 2]}
-    )
-    out = list(_assemble_event(("d",), iter([batch]), st))
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert bool(row["complete"]) and row["text"] == "a\n\nb"
-    emitted, offs, txts, n_total = st.get
-    assert emitted is True and offs == [] and txts == []
-    assert st.timeout_ts == 1_000_000 + ASSEMBLE_TOMBSTONE_MS
-
-
-def test_assemble_event_late_redelivery_no_duplicate():
-    """A span arriving AFTER the doc emitted finds the tombstone: no
-    second emission, tombstone retention refreshed — the exactly-once
-    guarantee under at-least-once delivery (VERDICT r4 #5)."""
-    import pandas as pd
-
-    from dd_ops_ocr_spark.streaming.jobs import _assemble_event
-
-    st = _EventStubState(value=(True, [], [], 2), watermark_ms=2_000_000)
-    late = pd.DataFrame({"offset": [0], "text": ["a"], "n_total": [2]})
-    out = list(_assemble_event(("d",), iter([late]), st))
-    assert out == []
-    emitted, offs, txts, _ = st.get
-    assert emitted is True and offs == []
-    assert st.timeout_ts > 2_000_000  # retention refreshed, not dropped
-
-
-def test_assemble_event_timeout_branches():
-    """Watermark timeout: incomplete doc -> partial emit (complete=False)
-    + a tombstone (NOT removal — a span still in flight must not re-open
-    the doc and emit a second row); tombstone -> silent drop."""
-    from dd_ops_ocr_spark.streaming.jobs import (
-        ASSEMBLE_TOMBSTONE_MS,
-        _assemble_event,
-    )
-
-    st = _EventStubState(value=(False, [5, 0], ["late", "early"], 9),
-                         timed_out=True)
-    out = list(_assemble_event(("d",), iter(()), st))
-    assert len(out) == 1 and not st.removed
-    row = out[0].iloc[0]
-    assert not bool(row["complete"]) and row["text"] == "early\n\nlate"
-    emitted, offs, _txts, _ = st.get
-    assert emitted is True and offs == []  # tombstone installed
-    assert st.timeout_ts == 1_000_000 + ASSEMBLE_TOMBSTONE_MS
-    # a late span after the partial emit hits the tombstone: no 2nd row
-    import pandas as pd
-
-    st.hasTimedOut = False
-    late = pd.DataFrame({"offset": [7], "text": ["x"], "n_total": [9]})
-    assert list(_assemble_event(("d",), iter([late]), st)) == []
-
-    st2 = _EventStubState(value=(True, [], [], 9), timed_out=True)
-    assert list(_assemble_event(("d",), iter(()), st2)) == []
-    assert st2.removed
-
-
-def test_assemble_event_first_batch_watermark_zero():
-    """During the FIRST micro-batch the watermark is still 0: timeouts
-    must anchor to the newest event timestamp in the batch, not epoch
-    1970 (which would expire the moment the watermark initializes)."""
-    import pandas as pd
-
-    from dd_ops_ocr_spark.streaming.jobs import (
-        ASSEMBLE_EVENT_GAP_MS,
-        ASSEMBLE_TOMBSTONE_MS,
-        _assemble_event,
-    )
-
-    ts = pd.Timestamp("2026-01-01T12:00:00")
-    ts_ms = ts.value // 1_000_000
-    # incomplete doc in batch 1
-    st = _EventStubState(watermark_ms=0)
-    batch = pd.DataFrame(
-        {"offset": [0], "text": ["a"], "n_total": [2], "ts": [ts]}
-    )
-    assert list(_assemble_event(("d",), iter([batch]), st)) == []
-    assert st.timeout_ts == ts_ms + ASSEMBLE_EVENT_GAP_MS
-    # complete doc in batch 1: tombstone anchored the same way
-    st2 = _EventStubState(watermark_ms=0)
-    batch2 = pd.DataFrame(
-        {"offset": [0, 10], "text": ["a", "b"], "n_total": [2, 2],
-         "ts": [ts, ts]}
-    )
-    out = list(_assemble_event(("d",), iter([batch2]), st2))
-    assert len(out) == 1
-    assert st2.timeout_ts == ts_ms + ASSEMBLE_TOMBSTONE_MS
-
-
-def test_stream_assemble_event_time_late_span(spark):
-    """End-to-end under Spark: doc completes in batch 2; batch 3
-    re-delivers an old span with a LATE event timestamp — the memory
-    sink must hold exactly one row for the doc (no duplicate emission)."""
-    import datetime
-    import glob
-    import os
-    import shutil as sh
-    import time as _time
-
-    from dd_ops_ocr_spark.streaming.jobs import stream_assemble_docs_event_time
-
-    land = tempfile.mkdtemp(prefix="stream_evt_land_")
-    ckpt = tempfile.mkdtemp(prefix="stream_evt_ckpt_")
-    schema = "doc_id string, n_total int, offset int, text string, ts timestamp"
-    base = datetime.datetime(2026, 1, 1, 12, 0, 0)
-
-    def write_file(name, rows, mtime):
-        df = spark.createDataFrame(rows, schema).coalesce(1)
-        tmp = f"{land}/_tmp_{name}"
-        df.write.mode("overwrite").parquet(tmp)
-        part = glob.glob(f"{tmp}/part-*.parquet")[0]
-        dst = f"{land}/{name}.parquet"
-        sh.copy(part, dst)
-        sh.rmtree(tmp)
-        os.utime(dst, (mtime, mtime))
-
-    def ts(sec):
-        return base + datetime.timedelta(seconds=sec)
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    q = None
-    try:
-        t0 = _time.time() - 100
-        write_file("f1", [("doc_a", 3, 0, "a0", ts(0)),
-                          ("doc_a", 3, 20, "a2", ts(1))], t0)
-        write_file("f2", [("doc_a", 3, 10, "a1", ts(30))], t0 + 10)
-        # batch 3: late duplicate of offset 0 (event time far behind)
-        # plus a watermark-advancing row from another incomplete doc
-        write_file("f3", [("doc_a", 3, 0, "a0", ts(2)),
-                          ("doc_w", 9, 0, "w0", ts(120))], t0 + 20)
-
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        q = (
-            stream_assemble_docs_event_time(spark, land)
-            .writeStream.format("memory").queryName("asm_evt")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(240)
-        got = spark.sql(
-            "select * from asm_evt where doc_id = 'doc_a'"
-        ).toPandas()
-        assert len(got) == 1, got  # exactly once despite re-delivery
-        row = got.iloc[0]
-        assert bool(row["complete"]) and int(row["n_spans"]) == 3
-        assert row["text"] == "a0\n\na1\n\na2"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        if q is not None:
-            try:
-                q.stop()
-            except Exception:
-                pass
-        for d in (land, ckpt):
-            sh.rmtree(d, ignore_errors=True)
-
-
-def test_stream_assemble_rocksdb_state_store(spark):
-    """Large-state evidence: the assembler's keyed state at 10^12-doc
-    scale exceeds executor heaps, so production runs use the RocksDB
-    state store (spilling state to local disk, incremental checkpoints).
-    This runs the same event-time assembler under
-    RocksDBStateStoreProvider and asserts identical behavior — the
-    operator is state-backend-agnostic."""
-    import datetime
-    import glob
-    import os
-    import shutil as sh
-
-    from dd_ops_ocr_spark.streaming.jobs import stream_assemble_docs_event_time
-
-    land = tempfile.mkdtemp(prefix="stream_rdb_land_")
-    ckpt = tempfile.mkdtemp(prefix="stream_rdb_ckpt_")
-    schema = "doc_id string, n_total int, offset int, text string, ts timestamp"
-    base = datetime.datetime(2026, 1, 1, 12, 0, 0)
-
-    def write_file(name, rows):
-        df = spark.createDataFrame(rows, schema).coalesce(1)
-        tmp = f"{land}/_tmp_{name}"
-        df.write.mode("overwrite").parquet(tmp)
-        part = glob.glob(f"{tmp}/part-*.parquet")[0]
-        sh.copy(part, f"{land}/{name}.parquet")
-        sh.rmtree(tmp)
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    q = None
-    try:
-        write_file("f1", [("doc_r", 2, 10, "second", base),
-                          ("doc_r", 2, 0, "first", base)])
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        q = (
-            stream_assemble_docs_event_time(spark, land)
-            .writeStream.format("memory").queryName("asm_rdb")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(240)
-        got = spark.sql("select * from asm_rdb").toPandas()
-        assert len(got) == 1
-        row = got.iloc[0]
-        assert bool(row["complete"]) and row["text"] == "first\n\nsecond"
-        # the checkpoint proves which backend ran: RocksDB state dirs
-        # materialize under state/<op>/<part>/ with .zip/.changelog files
-        state_files = glob.glob(f"{ckpt}/state/**/*", recursive=True)
-        assert any(".zip" in f or "rocksdb" in f.lower() for f in state_files), \
-            state_files[:10]
-    finally:
-        if old_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old_provider)
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        if q is not None:
-            try:
-                q.stop()
-            except Exception:
-                pass
-        for d in (land, ckpt):
-            sh.rmtree(d, ignore_errors=True)
-
-
 def test_stream_extract_dlq_routes_malformed_docs(spark):
-    """The DLQ split: malformed docs (null spans, negative offset) land
-    in dlq_dir with a reason; valid docs extract exactly as the batch
-    path would; a replay (fresh checkpoint, same epoch ids) converges on
-    BOTH sinks instead of appending duplicates."""
+    """The dead-letter split: malformed docs (null spans, negative
+    offset) land in ``{out_dir}/_quarantine`` with a reason; valid docs
+    extract exactly as the batch path would; a replay (fresh checkpoint,
+    same epoch ids) converges on BOTH sinks instead of appending
+    duplicates."""
     import glob
     import shutil as sh
 
     from pyspark.sql import Row, functions as F
 
     from dd_ops_ocr_spark.schema import SPANS_SCHEMA
-    from dd_ops_ocr_spark.streaming.jobs import stream_extract_with_dlq
 
     land = tempfile.mkdtemp(prefix="stream_dlq_land_")
     ckpt1 = tempfile.mkdtemp(prefix="stream_dlq_ck1_")
     ckpt2 = tempfile.mkdtemp(prefix="stream_dlq_ck2_")
     out = tempfile.mkdtemp(prefix="stream_dlq_out_")
-    dlq = tempfile.mkdtemp(prefix="stream_dlq_dlq_")
+    dlq = f"{out}/_quarantine"
     try:
         spans = corpus.build_spans_df(spark, SF_SMOKE).limit(40).cache()
         # SPANS_SCHEMA declares spans non-nullable, but parquet READ does
@@ -658,7 +170,7 @@ def test_stream_extract_dlq_routes_malformed_docs(spark):
             sh.copy(f, f"{land}/file_{i}.parquet")
         sh.rmtree(f"{land}/d")
 
-        stream_extract_with_dlq(spark, land, ckpt1, out, dlq).awaitTermination(120)
+        stream_extract(spark, land, ckpt1, out).awaitTermination(120)
 
         got_dlq = spark.read.parquet(dlq)
         dlq_rows = got_dlq.collect()
@@ -690,402 +202,12 @@ def test_stream_extract_dlq_routes_malformed_docs(spark):
         n_first = got.count()  # before replay invalidates got's file index
 
         # replay: same landing files, fresh checkpoint -> same epoch ids
-        stream_extract_with_dlq(spark, land, ckpt2, out, dlq).awaitTermination(120)
+        stream_extract(spark, land, ckpt2, out).awaitTermination(120)
         assert spark.read.parquet(dlq).count() == 5  # overwrote, not appended
         assert spark.read.parquet(out).count() == n_first
     finally:
-        for d in (land, ckpt1, ckpt2, out, dlq):
+        for d in (land, ckpt1, ckpt2, out):
             shutil.rmtree(d, ignore_errors=True)
-
-
-def test_stream_static_enrich_matches_batch_join(spark):
-    """Per-micro-batch broadcast join against a batch dimension must
-    equal the batch join row for row."""
-    from dd_ops_ocr_spark.streaming.jobs import stream_static_enrich
-
-    land = tempfile.mkdtemp(prefix="stream_enrich_")
-    try:
-        ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        ev.coalesce(2).write.mode("overwrite").parquet(f"{land}/in")
-        dim = spark.createDataFrame(
-            [("view", 1), ("click", 5), ("purchase", 20)],
-            "event_type string, weight int",
-        )
-        out = stream_static_enrich(spark, f"{land}/in", ev.schema, dim)
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory").queryName("enrich_stream").start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = spark.sql(
-            "select event_id, weight from enrich_stream"
-        ).toPandas()
-        want = (
-            ev.join(dim, "event_type").select("event_id", "weight")
-        ).toPandas()
-        assert sorted(map(tuple, got.values.tolist())) == \
-            sorted(map(tuple, want.values.tolist()))
-        assert len(got) > 0
-    finally:
-        shutil.rmtree(land, ignore_errors=True)
-
-
-def test_stream_stream_match_equals_batch_join(spark):
-    """The watermarked stream-stream inner join must produce exactly
-    the batch interval-join pairs: every click x same-user purchase
-    within the horizon, each pair once."""
-    from pyspark.sql import functions as F
-
-    from dd_ops_ocr_spark.streaming.jobs import stream_stream_match
-
-    land = tempfile.mkdtemp(prefix="stream_ssj_")
-    try:
-        ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        ev.coalesce(2).write.mode("overwrite").parquet(f"{land}/in")
-        out = stream_stream_match(spark, f"{land}/in", ev.schema)
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory").queryName("ssj_stream").start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = {
-            (r.click_id, r.buy_id)
-            for r in spark.sql(
-                "select click_id, buy_id from ssj_stream").collect()
-        }
-        c = ev.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("u"),
-            F.col("ts").cast("timestamp").alias("cts"),
-        )
-        b = ev.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("buy_id"),
-            F.col("user_id").alias("bu"),
-            F.col("ts").cast("timestamp").alias("bts"),
-        )
-        want = {
-            (r.click_id, r.buy_id)
-            for r in c.join(
-                b,
-                (F.col("u") == F.col("bu"))
-                & (F.col("bts") > F.col("cts"))
-                & (F.col("bts") <= F.col("cts") + F.expr("INTERVAL 1 hour")),
-            ).collect()
-        }
-        assert got == want and len(got) > 0
-    finally:
-        shutil.rmtree(land, ignore_errors=True)
-
-
-def test_stream_dedup_within_watermark(spark):
-    """The built-in bounded-state dedup twin
-    (dropDuplicatesWithinWatermark): in-horizon re-deliveries are
-    dropped by dedup state; after the watermark passes an event's
-    time, a re-delivery (same event ts — that's what a re-delivery is)
-    is rejected by the watermark filter itself, so the no-duplicate
-    guarantee holds on both sides of state expiry while state stays
-    bounded by the horizon."""
-    import datetime
-    import glob
-    import os
-    import shutil as sh
-    import time as _time
-
-    from dd_ops_ocr_spark.streaming.jobs import stream_dedup_within_watermark
-
-    land = tempfile.mkdtemp(prefix="stream_ddw_land_")
-    ckpt = tempfile.mkdtemp(prefix="stream_ddw_ckpt_")
-    schema = "doc_id string, n_total int, offset int, text string, ts timestamp"
-    base = datetime.datetime(2026, 1, 1, 12, 0, 0)
-
-    def write_file(name, rows, mtime):
-        df = spark.createDataFrame(rows, schema).coalesce(1)
-        tmp = f"{land}/_tmp_{name}"
-        df.write.mode("overwrite").parquet(tmp)
-        part = glob.glob(f"{tmp}/part-*.parquet")[0]
-        dst = f"{land}/{name}.parquet"
-        sh.copy(part, dst)
-        sh.rmtree(tmp)
-        os.utime(dst, (mtime, mtime))
-
-    def ts(sec):
-        return base + datetime.timedelta(seconds=sec)
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    q = None
-    try:
-        t0 = _time.time() - 100
-        write_file("f1", [("doc_a", 3, 0, "a0", ts(0)),
-                          ("doc_a", 3, 1, "a1", ts(1))], t0)
-        # in-horizon re-delivery of (a,0) + fresh rows; ts(100) pushes
-        # the watermark far past ts(0) for the next batch
-        write_file("f2", [("doc_a", 3, 0, "a0", ts(0)),
-                          ("doc_a", 3, 2, "a2", ts(2)),
-                          ("doc_b", 1, 0, "b0", ts(100))], t0 + 10)
-        # post-expiry re-delivery: watermark (~90s) is far past ts(0),
-        # so this is rejected as late even though dedup state for the
-        # key may already be expired
-        write_file("f3", [("doc_a", 3, 0, "a0", ts(0))], t0 + 20)
-
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        q = (
-            stream_dedup_within_watermark(spark, land)
-            .writeStream.format("memory").queryName("ddw")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(240)
-        got = spark.sql("select doc_id, offset from ddw").toPandas()
-        pairs = sorted(map(tuple, got.values.tolist()))
-        assert pairs == [("doc_a", 0), ("doc_a", 1), ("doc_a", 2),
-                         ("doc_b", 0)], pairs
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        if q is not None:
-            try:
-                q.stop()
-            except Exception:
-                pass
-        for d in (land, ckpt):
-            sh.rmtree(d, ignore_errors=True)
-
-
-def test_stream_assemble_transform_with_state(spark):
-    """The transformWithStateInPandas assembler must reproduce the
-    applyInPandasWithState event-time assembler's behavior on the same
-    scenario: multi-batch assembly, in-horizon re-delivery deduped by
-    the MapState insert-if-absent, late post-emission re-delivery
-    dropped by the tombstone — exactly one complete row per doc.
-
-    Environment seam: the transformWithState state-server protocol
-    speaks protobuf between the JVM and the Python worker; this
-    container has no protobuf wheel, so the END-TO-END run can only
-    execute where protobuf exists. The processor LOGIC is fully
-    covered by the stub-state tests below either way."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState JVM<->Python state protocol needs "
-               "protobuf (absent in this sandbox)",
-    )
-    import datetime
-    import glob
-    import os
-    import shutil as sh
-    import time as _time
-
-    from dd_ops_ocr_spark.streaming.jobs import stream_assemble_docs_tws
-
-    land = tempfile.mkdtemp(prefix="stream_tws_land_")
-    ckpt = tempfile.mkdtemp(prefix="stream_tws_ckpt_")
-    schema = "doc_id string, n_total int, offset int, text string, ts timestamp"
-    base = datetime.datetime(2026, 1, 1, 12, 0, 0)
-
-    def write_file(name, rows, mtime):
-        df = spark.createDataFrame(rows, schema).coalesce(1)
-        tmp = f"{land}/_tmp_{name}"
-        df.write.mode("overwrite").parquet(tmp)
-        part = glob.glob(f"{tmp}/part-*.parquet")[0]
-        dst = f"{land}/{name}.parquet"
-        sh.copy(part, dst)
-        sh.rmtree(tmp)
-        os.utime(dst, (mtime, mtime))
-
-    def ts(sec):
-        return base + datetime.timedelta(seconds=sec)
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    q = None
-    try:
-        t0 = _time.time() - 100
-        write_file("f1", [("doc_a", 3, 0, "a0", ts(0)),
-                          ("doc_a", 3, 20, "a2", ts(1))], t0)
-        # in-horizon re-delivery of offset 20 + the missing span
-        write_file("f2", [("doc_a", 3, 20, "a2", ts(1)),
-                          ("doc_a", 3, 10, "a1", ts(30))], t0 + 10)
-        # late duplicate AFTER emission + a watermark-advancing row
-        write_file("f3", [("doc_a", 3, 0, "a0", ts(2)),
-                          ("doc_w", 9, 0, "w0", ts(120))], t0 + 20)
-
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        q = (
-            stream_assemble_docs_tws(spark, land)
-            .writeStream.format("memory").queryName("asm_tws")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(240)
-        got = spark.sql(
-            "select * from asm_tws where doc_id = 'doc_a'"
-        ).toPandas()
-        assert len(got) == 1, got
-        row = got.iloc[0]
-        assert bool(row["complete"]) and int(row["n_spans"]) == 3
-        assert row["text"] == "a0\n\na1\n\na2"
-    finally:
-        if old_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old_provider)
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        if q is not None:
-            try:
-                q.stop()
-            except Exception:
-                pass
-        for d in (land, ckpt):
-            sh.rmtree(d, ignore_errors=True)
-
-
-class _StubValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def clear(self):
-        self._v = None
-
-
-class _StubMapState:
-    def __init__(self):
-        self._m = {}
-
-    def containsKey(self, k):
-        return k in self._m
-
-    def updateValue(self, k, v):
-        self._m[k] = v
-
-    def iterator(self):
-        return iter(self._m.items())
-
-    def keys(self):
-        return iter(self._m.keys())
-
-    def clear(self):
-        self._m = {}
-
-
-class _StubHandle:
-    def __init__(self):
-        self._timers = []
-        self.states = {}
-
-    def getMapState(self, name, *_a, **_k):
-        return self.states.setdefault(name, _StubMapState())
-
-    def getValueState(self, name, *_a, **_k):
-        return self.states.setdefault(name, _StubValueState())
-
-    def listTimers(self):
-        return list(self._timers)
-
-    def deleteTimer(self, t):
-        self._timers.remove(t)
-
-    def registerTimer(self, t):
-        self._timers.append(t)
-
-
-class _StubTimerValues:
-    def __init__(self, wm_ms):
-        self._wm = wm_ms
-
-    def getCurrentWatermarkInMs(self):
-        return self._wm
-
-    def getCurrentProcessingTimeInMs(self):
-        return 0
-
-
-def _tws_rows(rows):
-    import pandas as pd
-
-    return iter([pd.DataFrame(
-        rows, columns=["offset", "text", "n_total", "ts"]
-    )])
-
-
-def test_tws_processor_assembles_dedupes_and_tombstones():
-    """Stub-state coverage of the transformWithState assembler logic
-    (the end-to-end test above needs protobuf): insert-if-absent dedup,
-    ordered emission at n_total, timer lifecycle, tombstone."""
-    import pandas as pd
-
-    from dd_ops_ocr_spark.streaming import jobs as sjobs
-
-    p = sjobs._make_assemble_processor()
-    h = _StubHandle()
-    p.init(h)
-    t1 = pd.Timestamp("2026-01-01T12:00:00")
-
-    # batch 1: two of three spans -> no output, eviction timer armed
-    out = list(p.handleInputRows(("doc_a",), _tws_rows(
-        [(0, "a0", 3, t1), (20, "a2", 3, t1)]), _StubTimerValues(0)))
-    assert out == [] or all(len(df) == 0 for df in out)
-    assert len(h._timers) == 1
-    # watermark uninitialized: the timer anchors to the event ts
-    assert h._timers[0] == int(t1.value // 10**6) + sjobs.ASSEMBLE_TWS_GAP_MS
-
-    # batch 2: re-delivery of 20 (stale text must NOT overwrite) + the
-    # missing span -> exactly one complete row, ordered, timer gone
-    out = list(p.handleInputRows(("doc_a",), _tws_rows(
-        [(20, "a2-dup", 3, t1), (10, "a1", 3, t1)]),
-        _StubTimerValues(10_000)))
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert bool(row["complete"]) and int(row["n_spans"]) == 3
-    assert row["text"] == "a0\n\na1\n\na2"
-    assert h._timers == []
-
-    # batch 3: late re-delivery after emission -> tombstone drops it
-    out = list(p.handleInputRows(("doc_a",), _tws_rows(
-        [(0, "a0", 3, t1)]), _StubTimerValues(20_000)))
-    assert out == []
-    # expired timer on a tombstoned doc emits nothing
-    assert list(p.handleExpiredTimer(("doc_a",), _StubTimerValues(0),
-                                     None)) == []
-
-
-def test_tws_processor_evicts_incomplete_on_timer():
-    import pandas as pd
-
-    from dd_ops_ocr_spark.streaming import jobs as sjobs
-
-    p = sjobs._make_assemble_processor()
-    h = _StubHandle()
-    p.init(h)
-    t1 = pd.Timestamp("2026-01-01T12:00:00")
-    list(p.handleInputRows(("doc_b",), _tws_rows(
-        [(5, "b1", 4, t1), (1, "b0", 4, t1)]), _StubTimerValues(0)))
-    out = list(p.handleExpiredTimer(("doc_b",), _StubTimerValues(99_999),
-                                    None))
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert not bool(row["complete"]) and int(row["n_spans"]) == 2
-    assert row["text"] == "b0\n\nb1"
-    # evicted doc is tombstoned: a straggler arriving later is dropped
-    out = list(p.handleInputRows(("doc_b",), _tws_rows(
-        [(9, "b2", 4, t1)]), _StubTimerValues(99_999)))
-    assert out == []
 
 
 def test_stream_upsert_sink_merges_and_replays_idempotently(spark):

@@ -1,6 +1,6 @@
 """Real-pixel preprocessing (operators/vision.py) against constructed
-images with KNOWN structure — binarization finds the ink, deskew
-recovers a planted shear, regions find the planted bands."""
+images with KNOWN structure — binarization finds the ink, regions find
+the planted bands."""
 
 from __future__ import annotations
 
@@ -9,12 +9,9 @@ import numpy as np
 from dd_ops_ocr_spark.operators.vision import (
     DEBUG_COLOR,
     binarize_adaptive_px,
-    deskew_estimate_px,
     draw_debug_px,
     media_binarize,
     media_debug_draw,
-    media_deskew,
-    media_regions,
     media_upscale,
     regions_px,
     upscale_2x_px,
@@ -50,22 +47,6 @@ def test_regions_find_planted_bands():
     assert (b["y0"], b["y1"]) == (30, 36)
     assert a["x0"] == 8 and a["x1"] == 59
     assert b["x0"] == 20 and b["x1"] == 89
-
-
-def test_deskew_recovers_planted_shear():
-    """Plant text lines sheared at a known slope; the estimator must
-    recover (the negative of) that angle within the sweep's step."""
-    for true_deg in (-3.0, 0.0, 2.0):
-        img = _page(h=80, w=120)
-        slope = np.tan(np.radians(true_deg))
-        xs = np.arange(120)
-        for base in (20, 40, 60):
-            ys = (base + xs * slope).astype(int)
-            ok = (ys >= 0) & (ys < 79)
-            img[ys[ok], xs[ok]] = 20
-            img[ys[ok] + 1, xs[ok]] = 20
-        est = deskew_estimate_px(img)
-        assert abs(est - true_deg) <= 0.75, (true_deg, est)
 
 
 def test_upscale_2x_exact_bilinear():
@@ -156,8 +137,7 @@ def test_upscale_and_debug_draw_over_spark(spark):
 
 def test_vision_operators_over_spark(spark):
     """The mapInPandas plumbing end-to-end over real synthetic payloads:
-    binarize keeps geometry and emits valid BMPs, deskew emits one angle
-    per ref inside the sweep range, regions nest inside the image."""
+    binarize keeps geometry and emits valid BMPs."""
     from tests.conftest import SF_SMOKE
     from dd_ops_ocr_spark.operators.multimodal import (
         _media_with_payload,
@@ -172,13 +152,3 @@ def test_vision_operators_over_spark(spark):
     for _, r in bz.head(5).iterrows():
         assert synth_geometry(r["media_ref"]) == (r["width"], r["height"])
         assert 0 <= r["ink_px"] <= r["width"] * r["height"]
-
-    dk = media_deskew(some).toPandas()
-    assert len(dk) == 40
-    assert (dk["angle_deg"].abs() <= 5.0).all()
-
-    rg = media_regions(some).toPandas()
-    assert len(rg) > 0
-    g = rg.merge(bz[["media_ref", "width", "height"]], on="media_ref")
-    assert (g["y1"] >= g["y0"]).all() and (g["x1"] >= g["x0"]).all()
-    assert (g["y1"] < g["height"]).all() and (g["x1"] < g["width"]).all()
